@@ -5,23 +5,45 @@ stages — and proof that zkey BETWEEN predicates reach the Parquet scan
 from __future__ import annotations
 
 import io
+import json
+import os
+import shutil
+import uuid
 from contextlib import redirect_stdout
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from zcurve_spark.functions.columns import interval_filter
-from zcurve_spark.plans.decompose import decompose_box
+from zcurve_spark.functions.udfs import hilbert2_udf, hilbert3_udf
+from zcurve_spark.plans.decompose import decompose_box, hilbert3_covers, hilbert_covers
 from zcurve_spark.sources.manifest import (
+    MANIFEST_NAME,
     StageRunner,
     load_manifest,
     prune_files,
     read_pruned,
     write_sorted,
 )
-from zcurve_spark.sources.points import BITS, points_from_lineitem
+from zcurve_spark.sources.points import BITS, DOMAIN, points_from_lineitem
 
 SF_DIR = "/root/testdata/sf0.001"
+MAXC = (1 << BITS) - 1  # largest coordinate the keys encode
+COVERS = {
+    "z": lambda a, b: decompose_box(a, b, bits=BITS, budget=128),
+    "hilbert": lambda a, b: hilbert_covers(a, b, order=BITS, budget=128),
+    "hilbert3": lambda a, b: hilbert3_covers(a, b, order=BITS, budget=128),
+}
+# Boxes in the last 8192^d keys of each curve: beyond the data's [0, 10^6)
+# coordinates, so every file is pruned.  Z ends at the all-max corner,
+# both Hilbert curves at (max, 0[, 0]).
+PRUNE_ALL = {
+    "z": ((MAXC - 8191, MAXC - 8191), (MAXC, MAXC)),
+    "hilbert": ((MAXC - 8191, 0), (MAXC, 8191)),
+    "hilbert3": ((MAXC - 8191, 0, 0), (MAXC, 8191, 8191)),
+}
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +52,58 @@ def sorted_path(spark, tmp_path_factory):
     pts = points_from_lineitem(spark, SF_DIR)
     write_sorted(pts, path, zkey_col="zkey", n_partitions=8, lineage={"stage": "t"})
     return path
+
+
+@pytest.fixture(scope="module")
+def curve_stores(spark, sorted_path, tmp_path_factory):
+    """{curve: (store path, key column, coordinate columns)} over the same
+    points: the zkey store plus hkey- and hkey3-sorted stores."""
+    root = tmp_path_factory.mktemp("curve_stores")
+    pts = points_from_lineitem(spark, SF_DIR)
+    h2, h3 = str(root / "points_hsorted"), str(root / "points_h3sorted")
+    write_sorted(
+        pts.withColumn("hkey", hilbert2_udf(BITS)(F.col("x"), F.col("y"))),
+        h2, zkey_col="hkey", n_partitions=8, lineage={"stage": "h"},
+    )
+    write_sorted(
+        pts.withColumn("hkey3", hilbert3_udf(BITS)(F.col("x"), F.col("y"), F.col("z"))),
+        h3, zkey_col="hkey3", n_partitions=8, lineage={"stage": "h3"},
+    )
+    return {
+        "z": (sorted_path, "zkey", ("x", "y")),
+        "hilbert": (h2, "hkey", ("x", "y")),
+        "hilbert3": (h3, "hkey3", ("x", "y", "z")),
+    }
+
+
+def _lookup_boxes(ndims: int, point) -> list[tuple[tuple, tuple]]:
+    """20 seeded random boxes, then a box touching both domain edges, the
+    single-point box at `point` and an inverted (empty) box."""
+    rng = np.random.default_rng(1017 + ndims)
+    boxes = []
+    for _ in range(20):
+        side = rng.integers(0, 300_000, ndims)
+        lo = rng.integers(0, DOMAIN - side)
+        boxes.append((tuple(int(v) for v in lo), tuple(int(v) for v in lo + side)))
+    point = tuple(int(v) for v in point)
+    return boxes + [
+        ((0, 800_000, 0)[:ndims], (150_000, MAXC, MAXC)[:ndims]),
+        (point, point),
+        ((500_000,) * ndims, (400_000,) + (600_000,) * (ndims - 1)),
+    ]
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_manifest_stats(spark, sorted_path):
@@ -89,18 +163,91 @@ def test_stage_runner_resume(spark, tmp_path):
     assert calls["n"] == 2
 
 
-def test_bbox_lookup_pruned_equals_fullscan(spark, sorted_path):
-    """The flagship claim: the pruned-storage query path returns exactly
-    the full-scan result (VERDICT r1 #1)."""
+def test_bbox_lookup_pruned_equals_fullscan(spark, sorted_path, curve_stores):
+    """The flagship claim: on every curve the pruned-storage query path
+    returns exactly the full-scan result (as a multiset), pid-sorted."""
     from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
 
+    full = spark.read.parquet(sorted_path)
+    first = full.first()
+    refs = {}
+    for curve, (path, key, cols) in curve_stores.items():
+        assert prune_files(load_manifest(path), COVERS[curve](*PRUNE_ALL[curve])) == []
+        for mins, maxs in _lookup_boxes(len(cols), [first[c] for c in cols]) + [PRUNE_ALL[curve]]:
+            if (mins, maxs) not in refs:
+                ref = bbox_lookup(
+                    full, mins, maxs, zkey_col="zkey3" if len(cols) == 3 else "zkey",
+                    coord_cols=cols, bits=BITS,
+                )
+                refs[mins, maxs] = sorted(map(tuple, ref.collect()))
+            got = bbox_lookup_pruned(
+                spark, path, mins, maxs, zkey_col=key, coord_cols=cols, bits=BITS, curve=curve
+            ).collect()
+            assert sorted(map(tuple, got)) == refs[mins, maxs], (curve, mins, maxs)
+            assert [r.pid for r in got] == sorted(r.pid for r in got), (curve, mins, maxs)
+    point_boxes = [b for b in refs if b[0] == b[1]]
+    assert point_boxes and all(refs[b] for b in point_boxes)
+    assert sum(map(len, refs.values())) > 0
+
+
+def test_bbox_lookup_pruned_runs_one_job(spark, sorted_path):
+    """Building the lookup runs no Spark job (no schema inference, no
+    sampling); answering it runs exactly one, whether the box reads one
+    file or two."""
+    from zcurve_spark.operators.bbox import bbox_lookup_pruned
+
+    m = load_manifest(sorted_path)
+    for box, files in [
+        (((100_000, 100_000), (110_000, 110_000)), 1),
+        (((100_000, 100_000), (220_000, 330_000)), 2),
+    ]:
+        assert len(prune_files(m, COVERS["z"](*box))) == files
+        df, plan_jobs = _jobs_run(spark, lambda: bbox_lookup_pruned(spark, sorted_path, *box, bits=BITS))
+        assert plan_jobs == 0
+        rows, exec_jobs = _jobs_run(spark, df.collect)
+        assert exec_jobs == 1, (box, len(rows))
+
+
+def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
+    """write_sorted records the schema; read_pruned opens pruned files
+    (and builds the empty result) with it and runs no job doing so.  A
+    manifest without a schema still reads the same rows, by inference."""
+    m = load_manifest(sorted_path)
+    written = StructType.fromJson(json.loads(m["schema"]))
+    assert written == points_from_lineitem(spark, SF_DIR).schema
+    ivs = COVERS["z"]((100_000, 100_000), (220_000, 330_000))
+    fields = [(f.name, f.dataType) for f in written]
+    df, jobs = _jobs_run(spark, lambda: read_pruned(spark, sorted_path, ivs))
+    assert jobs == 0
+    assert [(f.name, f.dataType) for f in df.schema] == fields
+    empty, jobs = _jobs_run(spark, lambda: read_pruned(spark, sorted_path, []))
+    assert jobs == 0
+    assert [(f.name, f.dataType) for f in empty.schema] == fields
+    assert empty.collect() == []
+
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(sorted_path, legacy)
+    del m["schema"]
+    with open(os.path.join(legacy, MANIFEST_NAME), "w") as fh:
+        json.dump(m, fh)
+    got = read_pruned(spark, legacy, ivs)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
+    assert read_pruned(spark, legacy, []).columns == df.columns
+
+
+def test_bbox_lookup_pruned_quotes_identifiers(spark, sorted_path, tmp_path):
+    """The lookup predicate is one SQL string: a key column whose name
+    needs quoting must still resolve."""
+    from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
+
+    path = str(tmp_path / "quoted")
+    pts = points_from_lineitem(spark, SF_DIR).withColumnRenamed("zkey", "z key")
+    write_sorted(pts, path, zkey_col="z key", n_partitions=4)
     box = ((100_000, 100_000), (220_000, 330_000))
-    full = bbox_lookup(
-        spark.read.parquet(sorted_path), box[0], box[1], bits=BITS
-    ).collect()
-    pruned = bbox_lookup_pruned(spark, sorted_path, box[0], box[1], bits=BITS).collect()
-    assert sorted(map(tuple, pruned)) == sorted(map(tuple, full))
-    assert len(full) > 0
+    got = bbox_lookup_pruned(spark, path, *box, zkey_col="z key", bits=BITS).collect()
+    want = bbox_lookup(spark.read.parquet(sorted_path), *box, bits=BITS).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert len(want) > 0
 
 
 def test_knn_store_path_matches_inmemory(spark, sorted_path):
@@ -117,19 +264,12 @@ def test_knn_store_path_matches_inmemory(spark, sorted_path):
     assert len(a) == sum(q["k"] for q in qs)
 
 
-def test_hilbert_store_pruned_lookup(spark, tmp_path_factory):
+def test_hilbert_store_pruned_lookup(spark, curve_stores):
     """Curve-agnostic storage: an hkey-sorted layout + hilbert_covers
     intervals returns the same box rows as the coordinate predicate."""
-    from pyspark.sql import functions as F
-
-    from zcurve_spark.functions.udfs import hilbert2_udf
     from zcurve_spark.operators.bbox import bbox_lookup_pruned
 
-    path = str(tmp_path_factory.mktemp("hstore") / "points_hsorted")
-    pts = points_from_lineitem(spark, SF_DIR).withColumn(
-        "hkey", hilbert2_udf(BITS)(F.col("x"), F.col("y"))
-    )
-    write_sorted(pts, path, zkey_col="hkey", n_partitions=8, lineage={"stage": "h"})
+    path = curve_stores["hilbert"][0]
     box = ((200_000, 300_000), (420_000, 500_000))
     got = bbox_lookup_pruned(
         spark, path, box[0], box[1], zkey_col="hkey", bits=BITS, curve="hilbert"
@@ -143,27 +283,18 @@ def test_hilbert_store_pruned_lookup(spark, tmp_path_factory):
     assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
     assert len(exp) > 0
     # and the manifest actually prunes files for a small box
-    from zcurve_spark.plans.decompose import hilbert_covers
-
     ivs = hilbert_covers((200_000, 300_000), (230_000, 330_000), order=BITS, budget=64)
     m = load_manifest(path)
     assert 0 < len(prune_files(m, ivs)) < len(m["files"])
 
 
-def test_hilbert3_store_pruned_lookup(spark, tmp_path_factory):
+def test_hilbert3_store_pruned_lookup(spark, curve_stores):
     """The last cell of the curve x storage matrix (r3 VERDICT missing
     #3): an hkey3-sorted layout + octree-cover intervals returns the
     same 3D box rows as the coordinate predicate, with files pruned."""
-    from pyspark.sql import functions as F
-
-    from zcurve_spark.functions.udfs import hilbert3_udf
     from zcurve_spark.operators.bbox import bbox_lookup_pruned
 
-    path = str(tmp_path_factory.mktemp("h3store") / "points_h3sorted")
-    pts = points_from_lineitem(spark, SF_DIR).withColumn(
-        "hkey3", hilbert3_udf(BITS)(F.col("x"), F.col("y"), F.col("z"))
-    )
-    write_sorted(pts, path, zkey_col="hkey3", n_partitions=8, lineage={"stage": "h3"})
+    path = curve_stores["hilbert3"][0]
     box = ((200_000, 300_000, 0), (420_000, 500_000, 600_000))
     got = bbox_lookup_pruned(
         spark,
@@ -188,8 +319,6 @@ def test_hilbert3_store_pruned_lookup(spark, tmp_path_factory):
     assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
     assert len(exp) > 0
     # octree covers must actually prune files on a small box
-    from zcurve_spark.plans.decompose import hilbert3_covers
-
     ivs = hilbert3_covers(
         (200_000, 300_000, 100_000), (230_000, 330_000, 200_000), order=BITS, budget=64
     )

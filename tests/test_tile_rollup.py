@@ -160,6 +160,19 @@ class TestTileCountsIncremental:
         assert _rows(got) == _rows(tile_counts(_pts(spark, 0, 1500), 6, bits=BITS))
         assert self._state(sd)["level"] == 6
 
+    def test_level_change_with_new_snapshot_removes_old_state_dir(self, spark, tmp_path):
+        # a level/bits rebuild must still drop the replaced state's data
+        # dir, or it is orphaned once the snapshot advances
+        st = SnapshotStore(spark, str(tmp_path / "tbl"))
+        sd = str(tmp_path / "state")
+        st.commit(_pts(spark, 0, 1000), created_unix=10, n_partitions=2)
+        tile_counts_incremental(spark, st, sd, level=4, bits=BITS)
+        st.commit(_pts(spark, 1000, 2000), created_unix=20, n_partitions=2)
+        got = tile_counts_incremental(spark, st, sd, level=6, bits=BITS)
+        assert _rows(got) == _rows(tile_counts(_pts(spark, 0, 2000), 6, bits=BITS))
+        assert not os.path.exists(os.path.join(sd, "counts-s1"))
+        assert os.path.exists(os.path.join(sd, "counts-s2"))
+
     def test_bits_change_rebuilds_state(self, spark, tmp_path):
         # ADVICE r5: bits changes the tile ids just like level; a state
         # cached under other bits must be rebuilt, not trusted

@@ -8,23 +8,20 @@ Re-expression of ``zcurve_2d_lookup`` / ``zcurve_3d_lookup``
     encode box corners                driver-side decompose_box()
     lazy LITMAX/BIGMIN splitting      budgeted decomposition (numpy-free,
       driven by B-tree pages            pure ints; laziness = budget)
-    B-tree descent + page walk        OR-of-BETWEEN on zkey -> Parquet
-                                        row-group / file min-max pruning
-    per-key `between` refinement      per-dim Column predicate (codegen)
-    TID mergesort (list_sort.c)       orderBy(row_id) only where parity
+    B-tree descent + page walk        manifest file pruning, then a few
+                                        zkey BETWEENs pushed to Parquet
+                                        row-group min-max pruning
+    per-key `between` refinement      per-dim box predicate (codegen)
+    TID mergesort (list_sort.c)       sort by row id only where parity
                                         demands it (lookup vs *_tidonly)
 
 Box semantics are **closed on both ends** (bitkey.c:52-55; the
 reference's own oracle `x >= X and x <= X+1000`, gentest.awk:6).
 
-Two candidate-pruning strategies, picked by interval count:
-
-* ``predicate`` — OR-chain of BETWEENs on the zkey column.  Pushes into
-  the Parquet scan (PushedFilters), prunes row groups on a zkey-sorted
-  layout.  Best for one box / few intervals.
-* ``join`` — broadcast the interval relation and range-join.  Best for
-  box *batches* (the gentest.awk workload: 10^5 boxes at once) where an
-  OR-chain would explode; one scan serves all boxes, AQE handles skew.
+Single boxes (``bbox_lookup*``) filter one scan with one predicate.  Box
+*batches* (the gentest.awk workload: 10^5 boxes at once) join the points
+against an interval relation instead (``bbox_join*``): one scan serves
+all boxes, where one predicate per box would not scale.
 """
 
 from __future__ import annotations
@@ -32,16 +29,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.columns import interval_filter
-from ..plans.decompose import Interval, coalesce_intervals, decompose_box
+from ..plans.decompose import coalesce_intervals, decompose_box, hilbert3_covers, hilbert_covers
 
 
 def box_refine_predicate(cols: list[str], mins, maxs) -> Column:
-    """Exact per-dimension closed-box predicate (bitkey.c:35-59 semantics)."""
-    pred = F.lit(True)
-    for c, lo, hi in zip(cols, mins, maxs):
-        pred = pred & F.col(c).between(int(lo), int(hi))
-    return pred
+    """Exact per-dimension closed-box predicate (bitkey.c:35-59 semantics),
+    built as one SQL expression."""
+    return F.expr(
+        " AND ".join(
+            f"{_quoted(c)} BETWEEN {int(lo)} AND {int(hi)}" for c, lo, hi in zip(cols, mins, maxs)
+        )
+        or "true"
+    )
+
+
+def _quoted(name: str) -> str:
+    """`name` as a back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def interval_buckets(intervals, max_buckets: int = 1024) -> tuple[list[int], int]:
@@ -75,7 +79,6 @@ def bbox_lookup(
     id_col: str = "pid",
     bits: int = 30,
     budget: int = 128,
-    max_predicates: int = 24,
     sort_by_id: bool = True,
 ) -> DataFrame:
     """Rows of `points` inside the closed box [mins, maxs].
@@ -91,7 +94,7 @@ def bbox_lookup(
     to the interpreter).  One shift + InSet keeps the whole filter in
     codegen; exactness comes from the per-dim refinement regardless of
     bucket granularity.  (The stored-layout path, bbox_lookup_pruned,
-    keeps OR-of-BETWEEN: there zkey is a plain column — no duplication —
+    uses BETWEENs instead: there zkey is a plain column — no duplication —
     and the BETWEENs push down to parquet row groups.)
     """
     intervals = decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
@@ -128,8 +131,6 @@ def bbox_lookup_hilbert(
     as bbox_lookup; only the curve (and therefore the pruned key ranges)
     differs.  With 3 coord_cols the octree cover (hilbert3_covers) is
     used over a hilbert3-keyed layout."""
-    from ..plans.decompose import hilbert3_covers, hilbert_covers
-
     if len(coord_cols) == 3:
         intervals = hilbert3_covers(tuple(mins), tuple(maxs), order=order, budget=budget)
     else:
@@ -155,20 +156,21 @@ def bbox_lookup_pruned(
     id_col: str = "pid",
     bits: int = 30,
     budget: int = 128,
-    max_predicates: int = 24,
     sort_by_id: bool = True,
     curve: str = "z",
 ) -> DataFrame:
-    """:func:`bbox_lookup` over the materialized key-sorted store: the
-    manifest prunes FILES before the scan even starts (the B-tree descent,
-    sp_tree.c:266-354), then a handful of coalesced BETWEENs prune row
-    groups inside the surviving files (pushed to parquet — the in-page
-    binsearch, sp_tree.c:164-237), and the fine-grained bucket-IN runs in
-    codegen.  Only a FEW BETWEENs are pushed: Catalyst's optimizer cost
-    grows steeply with OR-chain length (~1s at 16 terms, measured), which
-    at 8 lookups/batch was slower than the scan it saved.  Result set is
-    identical to the full-scan path — the bbox_rows_pruned oracle entry
-    asserts exactly that.
+    """:func:`bbox_lookup` over the materialized key-sorted store, planned
+    without a Spark job and answered by one.  The manifest prunes FILES
+    (the B-tree descent, sp_tree.c:266-354) and supplies their schema, so
+    no inference job runs.  One predicate, built as one SQL string (a
+    Column built literal by literal costs one Py4J call each), filters
+    the scan: <= 6 coalesced key BETWEENs, pushed to parquet row-group
+    pruning (the in-page binsearch, sp_tree.c:164-237; Catalyst's cost
+    grows steeply with OR-chain length), AND the exact per-dim box
+    refinement.  The id sort coalesces to one partition, so it runs no
+    sampling or exchange job; a lookup box reads one or two files, so
+    the scan loses little parallelism.  Result set is identical to the
+    full-scan path (the bbox_rows_pruned oracle entry asserts that).
 
     ``curve`` selects the interval decomposition: "z" (LITMAX/BIGMIN)
     for a zkey-sorted layout, "hilbert" (quadrant cover) for an
@@ -177,27 +179,19 @@ def bbox_lookup_pruned(
     from ..sources.manifest import read_pruned
 
     if curve == "hilbert":
-        from ..plans.decompose import hilbert_covers
-
         intervals = hilbert_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
     elif curve == "hilbert3":
-        from ..plans.decompose import hilbert3_covers
-
         intervals = hilbert3_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
     else:
         intervals = decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
-    pts = read_pruned(spark, store_path, intervals)
-    if not intervals:
-        return pts.select(id_col, *coord_cols).limit(0)
-    pushed = coalesce_intervals(intervals, max_intervals=min(max_predicates, 6))
-    buckets, shift = interval_buckets(intervals)
-    k = F.col(zkey_col)
-    cand = pts.filter(interval_filter(zkey_col, pushed)).filter(
-        F.shiftrightunsigned(k, shift).isin(buckets)
+    k = _quoted(zkey_col)
+    keys = " OR ".join(
+        f"{k} BETWEEN {iv.lo} AND {iv.hi}"
+        for iv in coalesce_intervals(intervals, max_intervals=6)
     )
-    hits = cand.filter(box_refine_predicate(list(coord_cols), mins, maxs))
-    out = hits.select(id_col, *coord_cols)
-    return out.orderBy(id_col) if sort_by_id else out
+    pred = F.expr(keys or "false") & box_refine_predicate(list(coord_cols), mins, maxs)
+    out = read_pruned(spark, store_path, intervals).filter(pred).select(id_col, *coord_cols)
+    return out.coalesce(1).sortWithinPartitions(id_col) if sort_by_id else out
 
 
 def intervals_df(spark, boxes, bits: int = 30, budget: int = 64) -> DataFrame:

@@ -220,9 +220,11 @@ def tile_counts_incremental(
     sid = cur["snapshot_id"]
     state_json = os.path.join(state_dir, "state.json")
     st = None
+    prev_data = None  # data dir of the state this refresh replaces
     if os.path.exists(state_json):
         with open(state_json) as fh:
             st = json.load(fh)
+        prev_data = st["data"]
         if st.get("level") != level or st.get("bits") != bits:
             # state for a different tiling (ADVICE r5: bits is written
             # into state.json and changes the tile ids just like level
@@ -255,10 +257,10 @@ def tile_counts_incremental(
         state_json,
         {"snapshot_id": sid, "level": level, "bits": bits, "data": data_rel},
     )
-    if st is not None and st["data"] != data_rel:
+    if prev_data is not None and prev_data != data_rel:
         import shutil
 
-        shutil.rmtree(os.path.join(state_dir, st["data"]), ignore_errors=True)
+        shutil.rmtree(os.path.join(state_dir, prev_data), ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 

@@ -29,6 +29,7 @@ from typing import Callable
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_zcurve_manifest.json"
 
@@ -141,6 +142,9 @@ def write_sorted(
         # (r2 VERDICT #10); at cluster scale a catalog carries it
         "target_parallelism": n_partitions,
         "total_rows": sum(f["rows"] for f in files),
+        # readers open pruned files with this schema instead of running
+        # Spark's schema-inference job on every read
+        "schema": df.schema.json(),
         "files": files,
         "lineage": lineage or {},
         "metrics": {
@@ -250,22 +254,34 @@ def read_pruned_df(spark: SparkSession, path: str, ivs_df: DataFrame) -> DataFra
         .distinct()
         .collect()
     ]
-    if not names:
-        return spark.read.parquet(path).limit(0)
-    return spark.read.parquet(*[os.path.join(path, n) for n in sorted(names)])
+    return _open_files(spark, path, manifest, sorted(names))
 
 
 def read_pruned(spark: SparkSession, path: str, intervals) -> DataFrame:
     """Read only the files that can contain keys in `intervals`; callers
     still apply the interval/refinement predicates (row-group pruning +
-    exact filter) below this."""
+    exact filter) below this.  Files open with the manifest's schema, so
+    building the DataFrame runs no Spark job; a manifest written without
+    a ``schema`` (or no manifest at all) falls back to schema inference,
+    which runs one."""
     manifest = load_manifest(path)
     if manifest is None:
         return spark.read.parquet(path)
-    names = prune_files(manifest, intervals)
+    return _open_files(spark, path, manifest, prune_files(manifest, intervals))
+
+
+def _open_files(spark: SparkSession, path: str, manifest: dict, names: list[str]) -> DataFrame:
+    """The store files `names` as one DataFrame, read with the manifest's
+    schema when it has one; no names -> an empty DataFrame of that schema."""
+    reader = spark.read
+    if "schema" in manifest:
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        if not names:
+            return spark.createDataFrame([], schema)
+        reader = reader.schema(schema)
     if not names:
-        return spark.read.parquet(path).limit(0)
-    return spark.read.parquet(*[os.path.join(path, n) for n in names])
+        return reader.parquet(path).limit(0)
+    return reader.parquet(*[os.path.join(path, n) for n in names])
 
 
 class StageRunner:
