@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -19,3 +21,24 @@ def spark():
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)
+
+
+def jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def brute_knn(pdf, q):
+    """Top-k of query `q` over the pandas points `pdf` as (pid, x, y, d2)
+    tuples, ranked by d2 with the engine's (pid, x, y) tie-break."""
+    d2 = (pdf.x - q["qx"]) ** 2 + (pdf.y - q["qy"]) ** 2
+    t = pdf.assign(d2=d2).sort_values(["d2", "pid", "x", "y"]).head(q["k"])
+    return list(map(tuple, t[["pid", "x", "y", "d2"]].values.tolist()))

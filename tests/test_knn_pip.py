@@ -4,10 +4,12 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from zcurve_spark.operators.knn import knn
 from zcurve_spark.operators.pip import _pip_kernel, convex_polygon, pip_join
 from zcurve_spark.sources.points import BITS, DOMAIN, points_from_lineitem
+from tests.conftest import brute_knn, jobs_run
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,12 +26,6 @@ def pdf(pts):
     return pts.toPandas()
 
 
-def _brute_knn(pdf, q):
-    d2 = (pdf.x - q["qx"]) ** 2 + (pdf.y - q["qy"]) ** 2
-    t = pdf.assign(d2=d2).sort_values(["d2", "pid", "x", "y"]).head(q["k"])
-    return list(map(tuple, t[["pid", "x", "y", "d2"]].values.tolist()))
-
-
 class TestKnn:
     def test_corner_and_center_queries(self, pts, pdf):
         qs = [
@@ -40,12 +36,51 @@ class TestKnn:
         got = knn(pts, qs, bits=BITS, domain=DOMAIN).toPandas()
         for q in qs:
             g = got[got.qid == q["qid"]].sort_values("rank")
-            assert list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist())) == _brute_knn(pdf, q)
+            assert list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q)
 
     def test_k_larger_than_initial_radius_finds_all(self, pts, pdf):
         q = {"qid": 0, "qx": 500_000, "qy": 500_000, "k": 50}
         got = knn(pts, [q], bits=BITS, domain=DOMAIN).toPandas().sort_values("rank")
-        assert list(map(tuple, got[["pid", "x", "y", "d2"]].values.tolist())) == _brute_knn(pdf, q)
+        assert list(map(tuple, got[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q)
+
+    def test_overlapping_boxes_rank_shared_points_for_both(self, pts, pdf):
+        """One round's predicate ORs the queries' boxes; a row inside two
+        boxes must be tagged, and ranked, for both queries."""
+        qs = [
+            {"qid": 10, "qx": 400_000, "qy": 600_000, "k": 9},
+            {"qid": 11, "qx": 420_000, "qy": 610_000, "k": 9},
+        ]
+        got = knn(pts, qs, bits=BITS, domain=DOMAIN).toPandas()
+        ranked = {}
+        for q in qs:
+            g = got[got.qid == q["qid"]].sort_values("rank")
+            assert g["rank"].tolist() == list(range(1, q["k"] + 1))
+            ranked[q["qid"]] = list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist()))
+            assert ranked[q["qid"]] == brute_knn(pdf, q), q
+        shared = {t[:3] for t in ranked[10]} & {t[:3] for t in ranked[11]}
+        assert shared
+
+    def test_k_beyond_first_round_returns_every_point(self, pts, pdf):
+        """k above the row count: the rounds grow to the full domain, whose
+        round returns every point ranked."""
+        few = pts.filter(F.col("pid") % 300 == 0)
+        sub = pdf[pdf.pid % 300 == 0]
+        q = {"qid": 5, "qx": 123_456, "qy": 654_321, "k": len(sub) + 5}
+        got, jobs = jobs_run(pts.sparkSession, lambda: knn(few, [q], bits=BITS, domain=DOMAIN))
+        assert jobs >= 2  # more than one round
+        got = got.toPandas().sort_values("rank")
+        assert got["rank"].tolist() == list(range(1, len(sub) + 1))
+        assert list(map(tuple, got[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(sub, q)
+
+    def test_no_queries_returns_empty_result(self, pts):
+        got = knn(pts, [], bits=BITS, domain=DOMAIN)
+        assert got.collect() == []
+        assert got.schema == knn(pts, [{"qid": 0, "qx": 0, "qy": 0, "k": 1}]).schema
+
+    def test_k_below_one_raises(self, pts):
+        qs = [{"qid": 1, "qx": 0, "qy": 0, "k": 2}, {"qid": 7, "qx": 5, "qy": 5, "k": 0}]
+        with pytest.raises(ValueError, match=r"k=0 for qid 7"):
+            knn(pts, qs, bits=BITS, domain=DOMAIN)
 
 
 class TestPipKernel:
@@ -94,7 +129,7 @@ class TestKnnBatch:
             g = got[got.qid == q["qid"]].sort_values("rank")
             assert (
                 list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist()))
-                == _brute_knn(pdf, q)
+                == brute_knn(pdf, q)
             ), q
 
     def test_reliable_checkpoint_variant(self, spark, pts, pdf, tmp_path):
@@ -124,7 +159,7 @@ class TestKnnBatch:
             g = got[got.qid == q["qid"]].sort_values("rank")
             assert (
                 list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist()))
-                == _brute_knn(pdf, q)
+                == brute_knn(pdf, q)
             ), q
 
     def test_empty_query_batch(self, spark, pts):
@@ -136,6 +171,17 @@ class TestKnnBatch:
         got = knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN)
         assert got.count() == 0
         assert got.columns == ["qid", "rank", "pid", "x", "y", "d2"]
+
+    def test_k_below_one_raises(self, spark, pts):
+        """k < 1 fails up front, naming the query, instead of running every
+        round and reporting it uncovered."""
+        from zcurve_spark.operators.knn import knn_batch
+
+        qdf = spark.createDataFrame(
+            [(1, 0, 0, 3), (4, 10, 10, 0), (2, 5, 5, 1)], "qid long, qx long, qy long, k int"
+        )
+        with pytest.raises(ValueError, match=r"k=0 for qid 4"):
+            knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN)
 
     def test_large_batch_shuffle_join_path(self, spark, pts, pdf):
         """broadcast_threshold=0 forces the shuffle-hash-join shape used
@@ -157,7 +203,7 @@ class TestKnnBatch:
             g = got[got.qid == q["qid"]].sort_values("rank")
             assert (
                 list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist()))
-                == _brute_knn(pdf, q)
+                == brute_knn(pdf, q)
             ), q
 
 

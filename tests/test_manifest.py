@@ -8,7 +8,6 @@ import io
 import json
 import os
 import shutil
-import uuid
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -28,6 +27,7 @@ from zcurve_spark.sources.manifest import (
     write_sorted,
 )
 from zcurve_spark.sources.points import BITS, DOMAIN, points_from_lineitem
+from tests.conftest import brute_knn, jobs_run
 
 SF_DIR = "/root/testdata/sf0.001"
 MAXC = (1 << BITS) - 1  # largest coordinate the keys encode
@@ -91,19 +91,6 @@ def _lookup_boxes(ndims: int, point) -> list[tuple[tuple, tuple]]:
         (point, point),
         ((500_000,) * ndims, (400_000,) + (600_000,) * (ndims - 1)),
     ]
-
-
-def _jobs_run(spark, fn):
-    """(fn(), number of Spark jobs it ran), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_manifest_stats(spark, sorted_path):
@@ -202,9 +189,9 @@ def test_bbox_lookup_pruned_runs_one_job(spark, sorted_path):
         (((100_000, 100_000), (220_000, 330_000)), 2),
     ]:
         assert len(prune_files(m, COVERS["z"](*box))) == files
-        df, plan_jobs = _jobs_run(spark, lambda: bbox_lookup_pruned(spark, sorted_path, *box, bits=BITS))
+        df, plan_jobs = jobs_run(spark, lambda: bbox_lookup_pruned(spark, sorted_path, *box, bits=BITS))
         assert plan_jobs == 0
-        rows, exec_jobs = _jobs_run(spark, df.collect)
+        rows, exec_jobs = jobs_run(spark, df.collect)
         assert exec_jobs == 1, (box, len(rows))
 
 
@@ -217,10 +204,10 @@ def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
     assert written == points_from_lineitem(spark, SF_DIR).schema
     ivs = COVERS["z"]((100_000, 100_000), (220_000, 330_000))
     fields = [(f.name, f.dataType) for f in written]
-    df, jobs = _jobs_run(spark, lambda: read_pruned(spark, sorted_path, ivs))
+    df, jobs = jobs_run(spark, lambda: read_pruned(spark, sorted_path, ivs))
     assert jobs == 0
     assert [(f.name, f.dataType) for f in df.schema] == fields
-    empty, jobs = _jobs_run(spark, lambda: read_pruned(spark, sorted_path, []))
+    empty, jobs = jobs_run(spark, lambda: read_pruned(spark, sorted_path, []))
     assert jobs == 0
     assert [(f.name, f.dataType) for f in empty.schema] == fields
     assert empty.collect() == []
@@ -235,19 +222,40 @@ def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
     assert read_pruned(spark, legacy, []).columns == df.columns
 
 
-def test_bbox_lookup_pruned_quotes_identifiers(spark, sorted_path, tmp_path):
+@pytest.fixture(scope="module")
+def quoted_store(spark, tmp_path_factory):
+    """A zkey store whose key column, `z key`, needs quoting in SQL."""
+    path = str(tmp_path_factory.mktemp("quoted") / "points_sorted")
+    pts = points_from_lineitem(spark, SF_DIR).withColumnRenamed("zkey", "z key")
+    write_sorted(pts, path, zkey_col="z key", n_partitions=4)
+    return path
+
+
+def test_bbox_lookup_pruned_quotes_identifiers(spark, sorted_path, quoted_store):
     """The lookup predicate is one SQL string: a key column whose name
     needs quoting must still resolve."""
     from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
 
-    path = str(tmp_path / "quoted")
-    pts = points_from_lineitem(spark, SF_DIR).withColumnRenamed("zkey", "z key")
-    write_sorted(pts, path, zkey_col="z key", n_partitions=4)
     box = ((100_000, 100_000), (220_000, 330_000))
-    got = bbox_lookup_pruned(spark, path, *box, zkey_col="z key", bits=BITS).collect()
+    got = bbox_lookup_pruned(spark, quoted_store, *box, zkey_col="z key", bits=BITS).collect()
     want = bbox_lookup(spark.read.parquet(sorted_path), *box, bits=BITS).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(want) > 0
+
+
+def test_knn_quotes_identifiers(spark, quoted_store):
+    """knn's round predicate is one SQL string too: the `z key` store
+    answers exactly."""
+    from zcurve_spark.operators.knn import knn
+
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    qs = [{"qid": 3, "qx": 250_000, "qy": 750_000, "k": 5}, {"qid": 4, "qx": 900_000, "qy": 10, "k": 3}]
+    got = knn(
+        None, qs, bits=BITS, domain=DOMAIN, zkey_col="z key", store_path=quoted_store, spark=spark
+    ).toPandas()
+    for q in qs:
+        g = got[got.qid == q["qid"]].sort_values("rank")
+        assert list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q), q
 
 
 def test_knn_store_path_matches_inmemory(spark, sorted_path):
@@ -262,6 +270,23 @@ def test_knn_store_path_matches_inmemory(spark, sorted_path):
     b = knn(None, qs, bits=BITS, domain=DOMAIN, store_path=sorted_path, spark=spark).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) == sum(q["k"] for q in qs)
+
+
+def test_knn_round_is_one_job(spark, sorted_path):
+    """A one-round store-backed knn runs one Spark job from call to
+    return, and collecting its result runs none."""
+    from zcurve_spark.operators.knn import knn
+
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    q = {"qid": 0, "qx": 480_000, "qy": 520_000, "k": 4}
+    df, jobs = jobs_run(
+        spark, lambda: knn(None, [q], bits=BITS, domain=DOMAIN, store_path=sorted_path, spark=spark)
+    )
+    assert jobs == 1
+    rows, jobs = jobs_run(spark, df.collect)
+    assert jobs == 0
+    rows.sort(key=lambda r: r["rank"])
+    assert [(r["pid"], r["x"], r["y"], r["d2"]) for r in rows] == brute_knn(pdf, q)
 
 
 def test_hilbert_store_pruned_lookup(spark, curve_stores):

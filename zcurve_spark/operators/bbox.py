@@ -32,15 +32,33 @@ from pyspark.sql import functions as F
 from ..plans.decompose import coalesce_intervals, decompose_box, hilbert3_covers, hilbert_covers
 
 
-def box_refine_predicate(cols: list[str], mins, maxs) -> Column:
-    """Exact per-dimension closed-box predicate (bitkey.c:35-59 semantics),
-    built as one SQL expression."""
-    return F.expr(
+def box_sql(cols, mins, maxs) -> str:
+    """Exact per-dimension closed-box test (bitkey.c:35-59 semantics) as
+    one SQL string."""
+    return (
         " AND ".join(
             f"{_quoted(c)} BETWEEN {int(lo)} AND {int(hi)}" for c, lo, hi in zip(cols, mins, maxs)
         )
         or "true"
     )
+
+
+def box_refine_predicate(cols: list[str], mins, maxs) -> Column:
+    """:func:`box_sql` as a Column."""
+    return F.expr(box_sql(cols, mins, maxs))
+
+
+def box_scan_sql(key_col: str, intervals, cols, mins, maxs) -> str:
+    """The store-scan predicate for one box as one SQL string: <= 6
+    coalesced key BETWEENs (pushed to parquet row-group pruning) AND the
+    exact box test.  A Column built literal by literal would cost one
+    Py4J call per literal."""
+    k = _quoted(key_col)
+    keys = " OR ".join(
+        f"{k} BETWEEN {iv.lo} AND {iv.hi}"
+        for iv in coalesce_intervals(intervals, max_intervals=6)
+    )
+    return f"({keys or 'false'}) AND ({box_sql(cols, mins, maxs)})"
 
 
 def _quoted(name: str) -> str:
@@ -162,15 +180,15 @@ def bbox_lookup_pruned(
     """:func:`bbox_lookup` over the materialized key-sorted store, planned
     without a Spark job and answered by one.  The manifest prunes FILES
     (the B-tree descent, sp_tree.c:266-354) and supplies their schema, so
-    no inference job runs.  One predicate, built as one SQL string (a
-    Column built literal by literal costs one Py4J call each), filters
-    the scan: <= 6 coalesced key BETWEENs, pushed to parquet row-group
-    pruning (the in-page binsearch, sp_tree.c:164-237; Catalyst's cost
-    grows steeply with OR-chain length), AND the exact per-dim box
-    refinement.  The id sort coalesces to one partition, so it runs no
-    sampling or exchange job; a lookup box reads one or two files, so
-    the scan loses little parallelism.  Result set is identical to the
-    full-scan path (the bbox_rows_pruned oracle entry asserts that).
+    no inference job runs.  One SQL predicate (:func:`box_scan_sql`)
+    filters the scan: <= 6 coalesced key BETWEENs, pushed to parquet
+    row-group pruning (the in-page binsearch, sp_tree.c:164-237;
+    Catalyst's cost grows steeply with OR-chain length), AND the exact
+    per-dim box refinement.  The id sort coalesces to one partition, so
+    it runs no sampling or exchange job; a lookup box reads one or two
+    files, so the scan loses little parallelism.  Result set is identical
+    to the full-scan path (the bbox_rows_pruned oracle entry asserts
+    that).
 
     ``curve`` selects the interval decomposition: "z" (LITMAX/BIGMIN)
     for a zkey-sorted layout, "hilbert" (quadrant cover) for an
@@ -184,12 +202,7 @@ def bbox_lookup_pruned(
         intervals = hilbert3_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
     else:
         intervals = decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
-    k = _quoted(zkey_col)
-    keys = " OR ".join(
-        f"{k} BETWEEN {iv.lo} AND {iv.hi}"
-        for iv in coalesce_intervals(intervals, max_intervals=6)
-    )
-    pred = F.expr(keys or "false") & box_refine_predicate(list(coord_cols), mins, maxs)
+    pred = F.expr(box_scan_sql(zkey_col, intervals, coord_cols, mins, maxs))
     out = read_pruned(spark, store_path, intervals).filter(pred).select(id_col, *coord_cols)
     return out.coalesce(1).sortWithinPartitions(id_col) if sort_by_id else out
 

@@ -2,11 +2,11 @@
 
 SURVEY.md §2.7: probe growing boxes around each query point; a box of
 half-side r decomposes into curve intervals exactly like a range query
-(sp_query.c semantics), so each round is one distributed
-interval-join + window-top-k.  Termination proof: a square of half-side
-r bounds Chebyshev distance by r, hence any point *outside* the box has
-Euclidean distance > r; once a query has >= k candidates with k-th
-Euclidean distance <= r, no outside point can displace them.
+(sp_query.c semantics), so a round is a box lookup with a top-k on top.
+Termination proof: a square of half-side r bounds Chebyshev distance by
+r, hence any point *outside* the box has Euclidean distance > r; once a
+query has >= k candidates with k-th Euclidean distance <= r, no outside
+point can displace them.
 
 Scale design (round-2 rework per VERDICT #4):
 
@@ -17,14 +17,15 @@ Scale design (round-2 rework per VERDICT #4):
 * When a materialized zkey-sorted store is given, each round reads only
   the manifest-pruned files overlapping the round's boxes (the B-tree
   descent) instead of re-scanning the whole table.
-* Per-round results are k rows per query — tiny by contract — so they
-  are collected and re-assembled once at the end instead of caching a
-  DataFrame per round (round 1 leaked one cached plan per round).
+* Per-round results are k rows per query, so they are collected and
+  re-assembled once at the end (a cached DataFrame per round leaked).
 
 Two shapes (round-3 rework per VERDICT r2 "What's missing" #2):
 
 * :func:`knn` — queries as a Python list; right for interactive
-  handfuls of queries (the reference's SRF-per-call usage).
+  handfuls of queries (the reference's SRF-per-call usage).  A round is
+  ONE job: one SQL predicate over one scan, a row per (row, query whose
+  box holds it), a window top-k on one partition (no exchange).
 * :func:`knn_batch` — queries as a DATAFRAME; every round is
   distributed (mapInPandas decomposition, manifest-relation file
   pruning, bucketed equi-join, aggregate coverage test) and the driver
@@ -37,14 +38,17 @@ import math
 import os
 import sys
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.decompose import decompose_box
-from ..sources.points import boxes_df
-from .bbox import bbox_join_bucketed, bucketed_intervals_df
+from .bbox import box_scan_sql, box_sql
 
 DOMAIN = 1_000_000
+XY = ("x", "y")
+KNN_COLS = ["qid", "rank", "pid", "x", "y", "d2"]
+KNN_SCHEMA = "qid long, rank int, pid long, x long, y long, d2 long"
 
 
 def _round_boxes(pending: list[dict], r: int, domain: int) -> list[dict]:
@@ -72,8 +76,8 @@ def knn(
 ) -> DataFrame:
     """Top-k nearest points per query.
 
-    `queries`: dicts with qid, qx, qy, k.  Returns (qid, rank, pid, x, y,
-    d2) with rank 1..k ordered by squared Euclidean distance, pid
+    `queries`: dicts with qid, qx, qy, k >= 1.  Returns (qid, rank, pid,
+    x, y, d2) with rank 1..k ordered by squared Euclidean distance, pid
     tie-break.  Pass ``store_path`` (a :func:`points_store` layout) to
     read manifest-pruned candidate files per round instead of scanning
     `points`; `points` may then be None.
@@ -89,76 +93,72 @@ def knn(
             n_points_hint = store_total_rows(store_path)
     else:
         spark = points.sparkSession
+    for q in queries:
+        if q["k"] < 1:
+            raise ValueError(f"knn: k must be >= 1, got k={q['k']} for qid {q['qid']}")
     if n_points_hint is None:
         # No count() fallback (full scan before any work — VERDICT #4).
         # Underestimating the density only costs extra (cheap) early
         # rounds; start from a mid-density guess and let expansion work.
         n_points_hint = 1_000_000
-    kmax = max(q["k"] for q in queries)
+    kmax = max((q["k"] for q in queries), default=1)
     # density heuristic: expected half-side enclosing ~16k points — at
     # that size round 1 almost always terminates, and the candidate set
     # stays tiny relative to a full scan
     r = max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
+    # pid is not unique in the synthetic tables -> extend the tiebreak
+    # to full coords so ranking is a total order (oracle-comparable)
+    w = Window.partitionBy("qid").orderBy("d2", "pid", "x", "y")
 
     pending = list(queries)
     rows_out: list[tuple] = []
     while pending:
         boxes = _round_boxes(pending, r, domain)
-        bdf = boxes_df(spark, boxes)
-        # bucketed equi-join, NOT a range join: points x intervals as a
-        # BroadcastNestedLoopJoin is O(points * intervals) — measured 3x
-        # the whole kNN runtime at 16 queries x budget 32
-        bivs, shift = bucketed_intervals_df(spark, boxes, bits=bits, budget=budget)
         if store_path is not None:
-            all_ivs = []
-            for b in boxes:
-                all_ivs.extend(
-                    decompose_box(tuple(b["mins"]), tuple(b["maxs"]), bits=bits, budget=budget)
-                )
-            src = read_pruned(spark, store_path, all_ivs)
+            ivs = [decompose_box(b["mins"], b["maxs"], bits=bits, budget=budget) for b in boxes]
+            src = read_pruned(spark, store_path, [iv for qivs in ivs for iv in qivs])
+            preds = [box_scan_sql(zkey_col, v, XY, b["mins"], b["maxs"]) for b, v in zip(boxes, ivs)]
         else:
-            src = points
-        qmeta = spark.createDataFrame(
-            [(q["qid"], q["qx"], q["qy"], q["k"]) for q in pending],
-            "qid long, qx long, qy long, k int",
-        )
-        cand = bbox_join_bucketed(src, bdf, bivs, shift, zkey_col=zkey_col).join(
-            F.broadcast(qmeta), "qid"
+            # a computed key's ranges push nowhere, and Catalyst would inline
+            # its expression into every BETWEEN (> 64 KB of code at 3 queries)
+            src, preds = points, [box_sql(XY, b["mins"], b["maxs"]) for b in boxes]
+        scan = " OR ".join(f"({p})" for p in preds)
+        # one output row per (row, query whose box holds it)
+        tags = ", ".join(
+            f"named_struct('qid', {int(q['qid'])}L, 'qx', {int(q['qx'])}L, "
+            f"'qy', {int(q['qy'])}L, 'k', {int(q['k'])}, "
+            f"'hit', {box_sql(XY, b['mins'], b['maxs'])})"
+            for q, b in zip(pending, boxes)
         )
         d2 = (F.col("x") - F.col("qx")) ** 2 + (F.col("y") - F.col("qy")) ** 2
-        # pid is not unique in the synthetic tables -> extend the tiebreak
-        # to full coords so ranking is a total order (oracle-comparable)
-        w = Window.partitionBy("qid").orderBy(
-            F.col("d2").asc(), F.col("pid").asc(), F.col("x").asc(), F.col("y").asc()
-        )
+        # one partition satisfies the window's distribution: no exchange,
+        # so the round is one job, and only k rows per query are collected
         topk_rows = (
-            cand.withColumn("d2", d2.cast("long"))
+            src.filter(F.expr(scan))
+            .selectExpr("pid", "x", "y", f"inline(filter(array({tags}), t -> t.hit))")
+            .withColumn("d2", d2.cast("long"))
+            .coalesce(1)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "rank", "pid", "x", "y", "d2", "k")
-            .collect()  # k rows per query — bounded by the query batch
+            .select(*KNN_COLS)
+            .collect()
         )
         by_qid: dict[int, list] = {}
         for row in topk_rows:
-            by_qid.setdefault(row["qid"], []).append(row)
+            by_qid.setdefault(row["qid"], []).append(tuple(row))
         full_domain = r >= domain
         still = []
         for q in pending:
             rows = by_qid.get(q["qid"], [])
-            covered = (
-                len(rows) >= q["k"] and max(x["d2"] for x in rows) <= r * r
-            ) or full_domain
-            if covered:
-                rows_out.extend(
-                    (x["qid"], x["rank"], x["pid"], x["x"], x["y"], x["d2"]) for x in rows
-                )
+            if full_domain or (len(rows) >= q["k"] and max(d2 for *_, d2 in rows) <= r * r):
+                rows_out.extend(rows)
             else:
                 still.append(q)
         pending = still
         r *= 4
-    return spark.createDataFrame(
-        rows_out, "qid long, rank int, pid long, x long, y long, d2 long"
-    )
+    # a pandas frame goes through Arrow into a local relation: collecting
+    # it runs no job (a list of tuples would become an RDD of pickled rows)
+    return spark.createDataFrame(pd.DataFrame(rows_out, columns=KNN_COLS), KNN_SCHEMA)
 
 
 def knn_batch(
@@ -211,14 +211,14 @@ def knn_batch(
         n_points_hint = store_total_rows(store_path)
     if n_points_hint is None:
         n_points_hint = 1_000_000
-    kmax_row = queries.agg(F.max("k")).first()[0]
+    kmax_row, kmin, kmin_qid = queries.agg(F.max("k"), F.min("k"), F.min_by("qid", "k")).first()
     if kmax_row is None:  # empty query batch: return an empty result, same schema
         # ADVICE r4: x/y must be LONG to match the non-empty path (the
         # store carries long coords) and sibling knn() — a mismatched
         # empty schema breaks downstream unions/writes.
-        return spark.createDataFrame(
-            [], "qid long, rank int, pid long, x long, y long, d2 long"
-        )
+        return spark.createDataFrame([], KNN_SCHEMA)
+    if kmin < 1:
+        raise ValueError(f"knn_batch: k must be >= 1, got k={kmin} for qid {kmin_qid}")
     kmax = int(kmax_row)
     r = max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
     ckpt = checkpointer or (lambda df: df.localCheckpoint())
