@@ -13,10 +13,13 @@ from zcurve_spark.operators.bbox import (
     bbox_join_bucketed,
     bbox_lookup,
     bucketed_intervals_df,
+    bucketed_intervals_dist,
     count_boxes,
     count_hits,
     intervals_df,
 )
+from zcurve_spark.plans.decompose import BUCKET_ROWS_PER_INTERVAL
+from zcurve_spark.sources.manifest import write_sorted
 from zcurve_spark.sources.points import (
     BITS,
     boxes_df,
@@ -24,6 +27,8 @@ from zcurve_spark.sources.points import (
     points_from_lineitem,
     unaligned_boxes,
 )
+from zcurve_spark.sources.store import read_store
+from tests.conftest import jobs_run
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -163,6 +168,44 @@ class TestDistributedDecomposition:
             for b in boxes:
                 assert got[b["qid"]] == len(_brute(pdf, b)), (bc, b)
 
+    def test_local_batch_decomposes_on_driver(self, spark, monkeypatch):
+        """A box relation built from pandas (a local relation) is decomposed
+        on the driver: no Spark job while planning, and the driver form's
+        rows and shift.  Above the size limit it goes through mapInPandas
+        and gives the same rows."""
+        from zcurve_spark.operators import bbox
+
+        boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(20) + unaligned_boxes(4))]
+        ref, shift_ref = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
+        local = spark.createDataFrame(boxes_df(spark, boxes).toPandas())
+        (got, shift), jobs = jobs_run(spark, lambda: bucketed_intervals_dist(local, bits=BITS, budget=16))
+        assert (jobs, shift) == (0, shift_ref)
+        assert "MapInPandas" not in got._jdf.queryExecution().analyzed().toString()
+        assert _rowset(got.toPandas()) == _rowset(ref.toPandas())
+        monkeypatch.setattr(bbox, "_DRIVER_BOXES", len(boxes) - 1)
+        got, shift = bucketed_intervals_dist(local, bits=BITS, budget=16)
+        assert "MapInPandas" in got._jdf.queryExecution().analyzed().toString()
+        assert shift == shift_ref
+        assert _rowset(got.toPandas()) == _rowset(ref.toPandas())
+
+    def test_local_batch_join_jobs(self, spark, pts, pdf):
+        """A local batch's bucketed join with count_hits: no job while
+        planning; at collect, the two broadcasts, one shuffle map stage
+        and the result stage.  Empty boxes count 0."""
+        boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(10) + unaligned_boxes(2))]
+        boxes.append({"qid": 99, "mins": (0, 0), "maxs": (0, 0)})
+        local = spark.createDataFrame(boxes_df(spark, boxes).toPandas())
+
+        def plan():
+            bivs, shift = bucketed_intervals_dist(local, bits=BITS, budget=16)
+            return count_hits(local, bbox_join_bucketed(pts, local, bivs, shift))
+
+        counts, jobs = jobs_run(spark, plan)
+        assert jobs == 0
+        rows, jobs = jobs_run(spark, counts.collect)
+        assert jobs == 4
+        assert {r["qid"]: r["n_hits"] for r in rows} == {b["qid"]: len(_brute(pdf, b)) for b in boxes}
+
     def test_sampled_shift_is_deterministic(self, spark):
         from zcurve_spark.operators.bbox import bucketed_intervals_dist
 
@@ -171,3 +214,38 @@ class TestDistributedDecomposition:
         _, s1 = bucketed_intervals_dist(bdf, bits=BITS, budget=16)
         _, s2 = bucketed_intervals_dist(bdf.repartition(13), bits=BITS, budget=16)
         assert s1 == s2
+
+    def test_bucket_width_bounds_replication(self, spark):
+        """On a batch of mostly small boxes with some large ones the chosen
+        width keeps the exploded relation within BUCKET_ROWS_PER_INTERVAL
+        rows per interval (the median interval span would give ~800), and
+        both forms choose the same width."""
+        boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(8) + unaligned_boxes(24))]
+        n_ivs = intervals_df(spark, boxes, bits=BITS, budget=16).count()
+        bivs, shift = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
+        assert n_ivs < bivs.count() <= BUCKET_ROWS_PER_INTERVAL * n_ivs
+        _, dist_shift = bucketed_intervals_dist(boxes_df(spark, boxes), bits=BITS, budget=16)
+        assert dist_shift == shift
+
+    def test_bad_bucket_shift_and_box_raise(self, spark):
+        boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(3))]
+        for bad in (0, 2 * BITS + 1):
+            with pytest.raises(ValueError, match=f"bucket_shift={bad}"):
+                bucketed_intervals_df(spark, boxes, bits=BITS, bucket_shift=bad)
+            with pytest.raises(ValueError, match=f"bucket_shift={bad}"):
+                bucketed_intervals_dist(boxes_df(spark, boxes), bits=BITS, bucket_shift=bad)
+        outside = boxes + [{"qid": 41, "mins": (0, 0), "maxs": (1 << BITS, 5)}]
+        with pytest.raises(ValueError, match=r"qid 41 \(\(0, 0\), \(1048576, 5\)\)"):
+            intervals_df(spark, outside, bits=BITS)
+
+
+def test_read_store_runs_no_job(spark, pts, tmp_path):
+    """read_store opens the store with the manifest's schema: building the
+    DataFrame runs no Spark job, and it reads every row."""
+    path = str(tmp_path / "store")
+    write_sorted(pts, path, n_partitions=4)
+    df, jobs = jobs_run(spark, lambda: read_store(spark, path))
+    assert jobs == 0
+    want = spark.read.parquet(path)
+    assert df.schema == want.schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect()))

@@ -1,6 +1,7 @@
 """Decomposition tests: disjointness, exact cover at every budget, solid
 purity (with the alignment fix), the reference-bug regression case
-(SURVEY.md §5.2 item 2)."""
+(SURVEY.md §5.2 item 2), and the batch kernel bit for bit against
+decompose_box."""
 
 from __future__ import annotations
 
@@ -9,11 +10,15 @@ import pytest
 
 from zcurve_spark.functions.curvekey import zkey2, zkey3
 from zcurve_spark.plans.decompose import (
+    BUCKET_ROWS_PER_INTERVAL,
     Interval,
+    bucket_shift_for,
     coalesce_intervals,
     covering_tiles,
     decompose_box,
+    decompose_boxes,
     decode_point,
+    explode_buckets,
     encode_point,
     pick_cover_level,
 )
@@ -109,6 +114,102 @@ class TestDecompose3D:
                 cand, solid = _membership(ivs, K)
                 assert (cand & inbox == inbox).all()
                 assert (solid & ~inbox).sum() == 0
+
+
+def _random_boxes(rng, n, ndims, bits):
+    """`n` boxes: half with random corners, half with sides below
+    2^(bits/2) (clipped to the domain)."""
+    a = rng.integers(0, 1 << bits, (n, ndims))
+    b = rng.integers(0, 1 << bits, (n, ndims))
+    b[: n // 2] = np.minimum(a[: n // 2] + rng.integers(0, 1 << bits // 2, (n // 2, ndims)), (1 << bits) - 1)
+    return np.minimum(a, b), np.maximum(a, b)
+
+
+def _assert_like_decompose_box(mins, maxs, bits, budget):
+    """decompose_boxes gives, box by box, decompose_box's (lo, hi, solid)
+    in its order, grouped by ascending box index."""
+    box, lo, hi, solid = decompose_boxes(mins, maxs, bits, budget)
+    assert (np.diff(box) >= 0).all()
+    for i in range(len(mins)):
+        want = decompose_box(tuple(mins[i].tolist()), tuple(maxs[i].tolist()), bits=bits, budget=budget)
+        sel = box == i
+        got = list(zip(lo[sel].tolist(), hi[sel].tolist(), solid[sel].tolist()))
+        assert got == [(iv.lo, iv.hi, iv.solid) for iv in want], (i, budget)
+
+
+class TestDecomposeBoxes:
+    """The batch kernel against its scalar oracle, decompose_box."""
+
+    @pytest.mark.parametrize("budget", [1, 2, 16, 32, 128])
+    @pytest.mark.parametrize("ndims,bits", [(2, 20), (2, 30), (3, 5), (3, 21)])
+    def test_bit_identical_to_decompose_box(self, ndims, bits, budget):
+        rng = np.random.default_rng([ndims, bits, budget])
+        _assert_like_decompose_box(*_random_boxes(rng, 60, ndims, bits), bits, budget)
+
+    @pytest.mark.parametrize("ndims,bits", [(2, 20), (2, 31), (3, 21)])
+    def test_domain_edges_points_and_lines(self, ndims, bits):
+        top = (1 << bits) - 1
+        corners = [
+            ((0,) * ndims, (top,) * ndims),  # the whole domain
+            ((top,) * ndims, (top,) * ndims),  # point at the top corner
+            ((0,) * ndims, (0,) * ndims),  # point at the origin
+            ((5,) * ndims, (5,) * ndims),
+            ((0,) + (7,) * (ndims - 1), (top,) + (7,) * (ndims - 1)),  # line, edge to edge
+            ((3,) * ndims, (top,) * ndims),
+            ((0,) * ndims, (top - 1,) * ndims),
+        ]
+        mins = np.array([c[0] for c in corners])
+        maxs = np.array([c[1] for c in corners])
+        for budget in (1, 2, 16, 128):
+            _assert_like_decompose_box(mins, maxs, bits, budget)
+
+    def test_inverted_boxes_give_no_intervals(self):
+        mins = np.array([[5, 5], [0, 0], [9, 1]])
+        maxs = np.array([[4, 9], [30, 3], [9, 0]])
+        box, lo, _, _ = decompose_boxes(mins, maxs, BITS, 16)
+        assert set(box.tolist()) == {1}
+        _assert_like_decompose_box(mins, maxs, BITS, 16)
+
+    def test_empty_batch(self):
+        out = decompose_boxes(np.zeros((0, 3), np.int64), np.zeros((0, 3), np.int64), 20, 16)
+        assert [a.size for a in out] == [0, 0, 0, 0]
+        assert [a.dtype for a in out] == [np.int64, np.int64, np.int64, bool]
+
+    def test_box_outside_domain_names_qid_and_corners(self):
+        mins = np.array([[1, 1], [0, 0], [-1, 4]])
+        maxs = np.array([[2, 2], [256, 3], [4, 4]])
+        with pytest.raises(ValueError, match=r"qid 77 \(\(0, 0\), \(256, 3\)\) lies outside \[0, 2\^8\)"):
+            decompose_boxes(mins, maxs, BITS, 16, qids=np.array([76, 77, 78]))
+        with pytest.raises(ValueError, match=r"box 0 \(\(-1, 4\), \(4, 4\)\)"):
+            decompose_boxes(mins[2:], maxs[2:], BITS, 16)
+
+    def test_keys_wider_than_63_bits_raise_naming_bits(self):
+        for ndims, bits in ((2, 32), (3, 22)):
+            with pytest.raises(ValueError, match=f"bits={bits}"):
+                decompose_boxes(np.zeros((1, ndims)), np.ones((1, ndims)), bits, 16)
+
+
+class TestBuckets:
+    def test_explode_matches_range_expansion(self):
+        _, lo, hi, _ = decompose_boxes(*_random_boxes(np.random.default_rng(5), 20, 2, BITS), BITS, 16)
+        for shift in (4, 7, 12, 16):
+            row, bucket = explode_buckets(lo, hi, shift)
+            want = [
+                (i, b)
+                for i, (a, z) in enumerate(zip(lo.tolist(), hi.tolist()))
+                for b in range(a >> shift, (z >> shift) + 1)
+            ]
+            assert list(zip(row.tolist(), bucket.tolist())) == want
+
+    def test_bucket_shift_is_the_finest_within_the_replication_bound(self):
+        _, lo, hi, _ = decompose_boxes(*_random_boxes(np.random.default_rng(6), 40, 2, 20), 20, 16)
+
+        def rows(s):
+            return sum((z >> s) - (a >> s) + 1 for a, z in zip(lo.tolist(), hi.tolist()))
+
+        s = bucket_shift_for(lo, hi, 40)
+        assert rows(s) <= BUCKET_ROWS_PER_INTERVAL * len(lo) < rows(s - 1)
+        assert bucket_shift_for([], [], 40) == 1
 
 
 class TestCoalesce:

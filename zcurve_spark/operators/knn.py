@@ -241,8 +241,7 @@ def knn_batch(
         )
         # Round 1 derives bucket_shift from the deterministic 64-box
         # sample; later rounds reuse it shifted by 2 per 4x radius
-        # growth (interval spans scale with the box, so the median
-        # span's bit_length grows by exactly 2) — bucket_shift affects
+        # growth (interval spans scale with the box) — bucket_shift affects
         # only bucketing granularity, never results, and skipping the
         # re-sample saves one orderBy+collect job per round (r6).
         if rounds == 1:

@@ -21,15 +21,21 @@ Differences from the reference, both deliberate:
   (sp_query.c:106-156; counterexample box (69,151)-(76,172) flagging a
   false-solid subquery containing (67,156)).
 
-Pure Python ints: handles 2D 62-bit and 3D 96-bit keys uniformly; cost is
-microseconds for typical budgets (<= a few thousand intervals), after
-which Spark/Catalyst takes over.
+:func:`decompose_box` (pure Python ints) handles one box, 2D 62-bit and
+3D 96-bit keys alike.  :func:`decompose_boxes` runs the same heap over a
+whole batch of boxes in numpy (keys up to 63 bits); box joins use it.
+:func:`bucket_shift_for` and :func:`explode_buckets` turn its intervals
+into the prefix-bucket rows of the bucketed join.
 """
 
 from __future__ import annotations
 
 import heapq
 from dataclasses import dataclass
+
+import numpy as np
+
+from ..functions.curvekey import unzkey2, unzkey3, zkey2, zkey3
 
 # Bit offsets of each dimension within an interleaved bit-group, matching
 # the reference layouts: 2D key bit 2i = x_i, 2i+1 = y_i (bitkey.c:76-97);
@@ -98,7 +104,9 @@ def decompose_box(
     Returns intervals sorted ascending by lo.  Union of intervals is a
     superset of the box's keys; `solid` intervals contain *only* box keys.
     Non-solid intervals must be refined with the per-dim box predicate.
-    Any budget >= 1 yields exact results under refinement.
+    Any budget >= 1 yields exact results under refinement.  Batches of
+    boxes go through :func:`decompose_boxes`, which this function is the
+    test oracle for.
     """
     ndims = len(mins)
     if ndims not in _DIM_OFFSETS:
@@ -144,6 +152,139 @@ def decompose_box(
     for a, b in zip(out, out[1:]):
         assert a.hi < b.lo, "decomposition produced overlapping intervals"
     return out
+
+
+_U = np.uint64
+_NO_KEY = np.iinfo(np.uint64).max  # above every key of <= 63 bits
+_ENCODE = {2: zkey2, 3: zkey3}
+_DECODE = {2: unzkey2, 3: unzkey3}
+
+
+def _highest_bit(x: np.ndarray) -> np.ndarray:
+    """Index of the highest set bit of each nonzero uint64."""
+    out = np.zeros(x.shape, np.int64)
+    for s in (32, 16, 8, 4, 2, 1):
+        hit = x >= (_U(1) << _U(s))
+        x = np.where(hit, x >> _U(s), x)
+        out += np.where(hit, s, 0)
+    return out
+
+
+def _waste(lo: np.ndarray, hi: np.ndarray, ndims: int) -> np.ndarray:
+    """Key span minus box volume of each interval (0 = solid); the
+    vector form of decompose_box's ``waste``."""
+    vol = np.ones(lo.shape, _U)
+    for a, b in zip(_DECODE[ndims](lo), _DECODE[ndims](hi)):
+        vol *= b - a + _U(1)
+    return hi - lo + _U(1) - vol
+
+
+def decompose_boxes(mins, maxs, bits: int, budget: int = 256, qids=None):
+    """Decompose a batch of closed boxes at once.
+
+    `mins`, `maxs`: (n, ndims) integer arrays, ndims 2 or 3.  Returns
+    numpy arrays ``(box_index, lo, hi, solid)`` sorted by (box_index, lo);
+    for each box they are exactly :func:`decompose_box`'s intervals, in
+    its order.  The kernel runs decompose_box's max-heap in lock-step over
+    all boxes: on each pass every box still under budget pops the
+    interval with the largest waste (ties to the smaller lo, as heapq
+    does) and splits it at LITMAX/BIGMIN.  Keys must fit 63 bits
+    (``ndims * bits <= 63``) so spans and volumes fit uint64; wider keys
+    take decompose_box.  Inverted boxes yield no intervals; a box outside
+    ``[0, 2^bits)`` raises a ValueError naming it by `qids` (default: its
+    row index) and its corners.
+    """
+    mins = np.asarray(mins, dtype=np.int64)
+    maxs = np.asarray(maxs, dtype=np.int64)
+    if mins.ndim != 2 or mins.shape != maxs.shape or mins.shape[1] not in _DIM_OFFSETS:
+        raise ValueError(
+            f"mins/maxs must both be (n, 2) or (n, 3) arrays, got {mins.shape} and {maxs.shape}"
+        )
+    ndims = mins.shape[1]
+    if ndims * bits > 63:
+        raise ValueError(
+            f"decompose_boxes covers keys of <= 63 bits; bits={bits} gives "
+            f"{ndims * bits}-bit {ndims}D keys (use decompose_box)"
+        )
+    keep = np.flatnonzero((mins <= maxs).all(axis=1))
+    bad = ((mins[keep] < 0) | (maxs[keep] >= 1 << bits)).any(axis=1)
+    if bad.any():
+        i = int(keep[np.argmax(bad)])
+        name = f"qid {qids[i]}" if qids is not None else f"box {i}"
+        raise ValueError(
+            f"{name} ({tuple(mins[i].tolist())}, {tuple(maxs[i].tolist())}) "
+            f"lies outside [0, 2^{bits})"
+        )
+
+    m = keep.size
+    cap = max(1, min(budget, 16))  # interval slots per box; grows on demand
+    LO = np.zeros((m, cap), _U)
+    HI = np.zeros((m, cap), _U)
+    W = np.zeros((m, cap), _U)  # waste; 0 = solid or unused slot
+    LO[:, 0] = _ENCODE[ndims](*mins[keep].T.astype(_U))
+    HI[:, 0] = _ENCODE[ndims](*maxs[keep].T.astype(_U))
+    W[:, 0] = _waste(LO[:, 0], HI[:, 0], ndims)
+    count = np.ones(m, np.int64)
+    masks = np.array([_same_dim_lower_mask(b, ndims) for b in range(ndims * bits)], _U)
+    rows = np.arange(m)
+    while True:
+        rows = rows[(count[rows] < budget) & (W[rows].max(axis=1) > 0)]
+        if not rows.size:
+            break
+        if count[rows].max() == cap:
+            grow = min(2 * cap, budget) - cap
+            LO, HI, W = (np.pad(a, ((0, 0), (0, grow))) for a in (LO, HI, W))
+            cap += grow
+        w = W[rows]
+        j = np.where(w == w.max(axis=1, keepdims=True), LO[rows], _NO_KEY).argmin(axis=1)
+        lo, hi = LO[rows, j], HI[rows, j]
+        bit = _highest_bit(lo ^ hi)
+        mask, top = masks[bit], _U(1) << bit.astype(_U)
+        litmax = (hi | mask) & ~top  # setLowBits: bitkey.c:126-134
+        bigmin = (lo & ~mask) | top  # clearLowBits: bitkey.c:136-144
+        c = count[rows]
+        HI[rows, j], W[rows, j] = litmax, _waste(lo, litmax, ndims)
+        LO[rows, c], HI[rows, c], W[rows, c] = bigmin, hi, _waste(bigmin, hi, ndims)
+        count[rows] += 1
+
+    used = np.arange(cap) < count[:, None]
+    order = np.argsort(np.where(used, LO, _NO_KEY), axis=1)
+    LO, HI, W = (np.take_along_axis(a, order, axis=1)[used] for a in (LO, HI, W))
+    return np.repeat(keep, count), LO.astype(np.int64), HI.astype(np.int64), W == 0
+
+
+# Most bucket rows per interval the bucketed box join accepts (Band Joins
+# for Interval Data, EDBT 2020: bounded replication keeps the exploded
+# build side linear in the interval count).
+BUCKET_ROWS_PER_INTERVAL = 2
+
+
+def bucket_shift_for(lo, hi, max_shift: int) -> int:
+    """The finest bucket width for intervals [lo, hi]: the smallest shift
+    in [1, max_shift] at which they explode into at most
+    ``BUCKET_ROWS_PER_INTERVAL`` x their count prefix-bucket rows (1 when
+    there are none).  Finer buckets mean fewer candidate intervals per
+    point; the bound keeps the exploded relation small.  `max_shift` is the
+    key width, where every interval is one bucket."""
+    lo = np.asarray(lo, dtype=np.int64)
+    hi = np.asarray(hi, dtype=np.int64)
+    if not lo.size:
+        return 1
+    limit = BUCKET_ROWS_PER_INTERVAL * lo.size
+    shifts = np.arange(1, max_shift + 1)
+    rows = (hi[:, None] >> shifts) - (lo[:, None] >> shifts) + 1
+    total = np.minimum(rows, limit + 1).sum(axis=0)  # clipped: no overflow
+    return int(shifts[np.argmax(total <= limit)])
+
+
+def explode_buckets(lo, hi, shift: int) -> tuple[np.ndarray, np.ndarray]:
+    """``(row, bucket)``: interval ``row`` once for each prefix bucket
+    ``range(lo >> shift, (hi >> shift) + 1)`` it overlaps."""
+    first = np.asarray(lo, dtype=np.int64) >> shift
+    n = (np.asarray(hi, dtype=np.int64) >> shift) - first + 1
+    row = np.repeat(np.arange(first.size), n)
+    start = np.cumsum(n) - n
+    return row, first[row] + np.arange(row.size) - start[row]
 
 
 def coalesce_intervals(ivs: list[Interval], max_intervals: int = 32) -> list[Interval]:

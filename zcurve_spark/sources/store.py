@@ -20,7 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import StageRunner, load_manifest, prune_files, read_pruned
+from .manifest import StageRunner, _open_files, load_manifest, prune_files, read_pruned
 from .points import BITS, points_from_lineitem
 
 STORE_VERSION = 1  # bump to invalidate layouts after encoding changes
@@ -125,16 +125,19 @@ def hilbert3_points_store(
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Read a materialized store at the parallelism ITS MANIFEST declares
-    (r2 VERDICT #10: one source of truth).  If the layout has at least
+    (r2 VERDICT #10: one source of truth).  The manifest's files open
+    with the schema it records, so building the DataFrame runs no Spark
+    job (a manifest without a schema, or no manifest, falls back to
+    schema inference, which runs one).  If the layout has at least
     `target_parallelism` files (the normal case — write_sorted creates
     one file per range partition), this is a plain scan; a coarser
     layout (e.g. compacted externally) is repartitioned up to the
     recorded target, so downstream operators never inherit accidental
     single-file serialization and never need ad-hoc fan_out calls."""
-    df = spark.read.parquet(path)
     m = load_manifest(path)
     if m is None:
-        return df
+        return spark.read.parquet(path)
+    df = _open_files(spark, path, m, [f["file"] for f in m["files"]])
     target = int(m.get("target_parallelism") or m.get("n_partitions") or 0)
     if target and len(m["files"]) < target:
         return df.repartition(target)
