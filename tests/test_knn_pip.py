@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,7 +75,7 @@ class TestKnn:
 
     def test_no_queries_returns_empty_result(self, pts):
         got = knn(pts, [], bits=BITS, domain=DOMAIN)
-        assert got.collect() == []
+        assert jobs_run(pts.sparkSession, got.collect) == ([], 0)
         assert got.schema == knn(pts, [{"qid": 0, "qx": 0, "qy": 0, "k": 1}]).schema
 
     def test_k_below_one_raises(self, pts):
@@ -111,6 +112,16 @@ class TestPipKernel:
 
 
 class TestKnnBatch:
+    """knn_batch's distributed form, over list-built batches."""
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, monkeypatch):
+        """These batches are small enough for the driver form: a limit of 0
+        keeps every non-empty one on the distributed rounds."""
+        from zcurve_spark.operators import bbox
+
+        monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
+
     def test_matches_per_query_brute_force(self, spark, pts, pdf):
         from zcurve_spark.operators.knn import knn_batch
 
@@ -205,6 +216,167 @@ class TestKnnBatch:
                 list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist()))
                 == brute_knn(pdf, q)
             ), q
+
+
+def _local_batch(spark, qs):
+    """The queries `qs` as a pandas-built (local-relation) batch."""
+    return spark.createDataFrame(pd.DataFrame(qs, columns=["qid", "qx", "qy", "k"]))
+
+
+def _by_qid(rows, qs):
+    """{qid: [(pid, x, y, d2) in rank order]} of a kNN result."""
+    got = pd.DataFrame(rows, columns=["qid", "rank", "pid", "x", "y", "d2"]).sort_values(["qid", "rank"])
+    cols = ["pid", "x", "y", "d2"]
+    return {q["qid"]: list(map(tuple, got[got.qid == q["qid"]][cols].values.tolist())) for q in qs}
+
+
+@pytest.fixture
+def joins(monkeypatch):
+    """The optimized plans of the candidate joins knn_batch builds, one
+    per round."""
+    from zcurve_spark.operators import bbox
+
+    plans, join = [], bbox.bbox_join_bucketed
+
+    def spy(*a, **kw):
+        out = join(*a, **kw)
+        plans.append(out._jdf.queryExecution().optimizedPlan().toString())
+        return out
+
+    monkeypatch.setattr(bbox, "bbox_join_bucketed", spy)
+    return plans
+
+
+class TestKnnBatchLocal:
+    """knn_batch over a batch the driver holds (the driver form)."""
+
+    QS = [
+        {"qid": 0, "qx": 0, "qy": 0, "k": 3},                          # domain corner
+        {"qid": 1, "qx": DOMAIN - 1, "qy": DOMAIN - 1, "k": 7},        # far corner
+        {"qid": 2, "qx": 0, "qy": DOMAIN // 2, "k": 1},                # left edge
+        {"qid": 3, "qx": DOMAIN // 3, "qy": DOMAIN - 1, "k": 12},      # top edge
+        {"qid": 9, "qx": 500_000, "qy": 500_000, "k": 50},
+    ]
+
+    def test_matches_brute_force(self, spark, pts, pdf, joins):
+        from zcurve_spark.operators.knn import knn_batch
+
+        got = knn_batch(_local_batch(spark, self.QS), points=pts, bits=BITS, domain=DOMAIN)
+        assert len(joins) >= 2  # the first radius holds too few points: more rounds
+        assert _by_qid(got.collect(), self.QS) == {q["qid"]: brute_knn(pdf, q) for q in self.QS}
+
+    def test_k_above_row_count_returns_every_point(self, spark, pts, pdf):
+        """The rounds grow to the full domain, whose round returns every
+        point ranked."""
+        from zcurve_spark.operators.knn import knn_batch
+
+        few = pts.filter(F.col("pid") % 300 == 0)
+        sub = pdf[pdf.pid % 300 == 0]
+        qs = [
+            {"qid": 5, "qx": 123_456, "qy": 654_321, "k": len(sub) + 5},
+            {"qid": 6, "qx": 7, "qy": 9, "k": 2},
+        ]
+        got = _by_qid(knn_batch(_local_batch(spark, qs), points=few, bits=BITS, domain=DOMAIN).collect(), qs)
+        assert len(got[5]) == len(sub)
+        assert got == {q["qid"]: brute_knn(sub, q) for q in qs}
+
+    def test_jobs_per_round(self, spark, pts, pdf, joins):
+        """Each round is the broadcasts of the interval and box relations
+        plus the join (no Python-worker job, no MapInPandas); the result is
+        a local relation, so collecting it runs no job."""
+        from zcurve_spark.operators.knn import knn_batch
+
+        qdf = _local_batch(spark, self.QS)
+        got, jobs = jobs_run(spark, lambda: knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN))
+        assert 0 < jobs <= 3 * len(joins)
+        assert not any("MapInPandas" in p for p in joins)
+        rows, jobs = jobs_run(spark, got.collect)
+        assert jobs == 0
+        assert _by_qid(rows, self.QS) == {q["qid"]: brute_knn(pdf, q) for q in self.QS}
+
+    def test_above_the_limit_runs_distributed(self, spark, pts, monkeypatch, joins):
+        from zcurve_spark.operators import bbox
+        from zcurve_spark.operators.knn import knn_batch
+
+        want = sorted(knn_batch(_local_batch(spark, self.QS), points=pts, bits=BITS, domain=DOMAIN).collect())
+        assert not any("MapInPandas" in p for p in joins)
+        monkeypatch.setattr(bbox, "_DRIVER_BOXES", len(self.QS) - 1)
+        n = len(joins)
+        got = sorted(knn_batch(_local_batch(spark, self.QS), points=pts, bits=BITS, domain=DOMAIN).collect())
+        assert joins[n:] and all("MapInPandas" in p for p in joins[n:])
+        assert got == want
+
+    def test_list_built_batch_runs_on_driver(self, spark, pts, pdf, joins):
+        """A small batch that is not a local relation costs one bounded
+        collect, then takes the driver form."""
+        from zcurve_spark.operators.knn import knn_batch
+
+        rows = [(q["qid"], q["qx"], q["qy"], q["k"]) for q in self.QS]
+        qdf = spark.createDataFrame(rows, "qid long, qx long, qy long, k int")
+        got, jobs = jobs_run(spark, lambda: knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN))
+        assert joins and not any("MapInPandas" in p for p in joins)
+        assert 0 < jobs <= 1 + 3 * len(joins)
+        rows, jobs = jobs_run(spark, got.collect)
+        assert jobs == 0
+        assert _by_qid(rows, self.QS) == {q["qid"]: brute_knn(pdf, q) for q in self.QS}
+
+    def test_queries_off_the_domain(self, spark, pts, pdf, monkeypatch):
+        """A query whose first boxes clip to nothing (it lies off the domain)
+        next to one that settles in round 1: both forms keep going and match
+        brute force."""
+        from zcurve_spark.operators import bbox
+        from zcurve_spark.operators.knn import knn_batch
+
+        qs = [
+            {"qid": 0, "qx": 400_000, "qy": 300_000, "k": 4},
+            {"qid": 1, "qx": -300_000, "qy": 500_000, "k": 3},
+            {"qid": 2, "qx": DOMAIN + 200_000, "qy": 10, "k": 2},
+        ]
+        want = {q["qid"]: brute_knn(pdf, q) for q in qs}
+        local = knn_batch(_local_batch(spark, qs), points=pts, bits=BITS, domain=DOMAIN)
+        assert _by_qid(local.collect(), qs) == want
+        monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
+        dist = knn_batch(_local_batch(spark, qs), points=pts, bits=BITS, domain=DOMAIN)
+        assert _by_qid(dist.collect(), qs) == want
+
+    def test_empty_batch(self, spark, pts):
+        from zcurve_spark.operators.knn import knn_batch
+
+        empty = pd.DataFrame(columns=["qid", "qx", "qy", "k"])
+        qdf = spark.createDataFrame(empty, "qid long, qx long, qy long, k long")
+        got = knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN)
+        rows, jobs = jobs_run(spark, got.collect)
+        assert (rows, jobs) == ([], 0)
+        full = knn_batch(_local_batch(spark, self.QS[:1]), points=pts, bits=BITS, domain=DOMAIN)
+        assert got.schema == full.schema
+
+    def test_k_below_one_raises_before_any_job(self, spark, pts):
+        from zcurve_spark.operators.knn import knn_batch
+
+        qs = [{"qid": 1, "qx": 0, "qy": 0, "k": 3}, {"qid": 4, "qx": 10, "qy": 10, "k": 0}]
+        qdf = _local_batch(spark, qs)
+        err, jobs = jobs_run(spark, lambda: pytest.raises(ValueError, knn_batch, qdf, points=pts, bits=BITS))
+        err.match(r"knn_batch: k must be >= 1, got k=0 for qid 4")
+        assert jobs == 0
+
+    def test_exhausted_rounds_raise(self, spark, pts, joins):
+        from zcurve_spark.operators.knn import knn_batch
+
+        with pytest.raises(RuntimeError, match=r"knn_batch: \d+ queries uncovered after 1 rounds"):
+            knn_batch(_local_batch(spark, self.QS), points=pts, bits=BITS, domain=DOMAIN, max_rounds=1)
+        assert len(joins) == 1
+
+    @pytest.mark.parametrize("local", [True, False])
+    def test_missing_inputs_raise_before_any_job(self, spark, local):
+        from zcurve_spark.operators.knn import knn_batch
+
+        if local:
+            qdf = _local_batch(spark, self.QS[:1])
+        else:
+            qdf = spark.createDataFrame([(0, 0, 0, 3)], "qid long, qx long, qy long, k int")
+        err, jobs = jobs_run(spark, lambda: pytest.raises(ValueError, knn_batch, qdf, bits=BITS))
+        err.match(r"`points` or `store_path`")
+        assert jobs == 0
 
 
 class TestDistanceJoin:

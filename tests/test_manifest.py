@@ -289,6 +289,52 @@ def test_knn_round_is_one_job(spark, sorted_path):
     assert [(r["pid"], r["x"], r["y"], r["d2"]) for r in rows] == brute_knn(pdf, q)
 
 
+@pytest.mark.parametrize("quoted", [False, True])
+def test_knn_batch_local_store_matches_brute_force(spark, sorted_path, quoted_store, quoted):
+    """knn_batch's driver form over a store (files pruned on the driver,
+    the key column quoted) gives knn's answer; collecting it runs no job."""
+    import pandas as pd
+
+    from zcurve_spark.operators.knn import knn_batch
+
+    path, key = (quoted_store, "z key") if quoted else (sorted_path, "zkey")
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    qs = [{"qid": i, "qx": 100_000 + i * 311_111, "qy": 50_000 + i * 271_111, "k": 2 + i} for i in range(3)]
+    qs.append({"qid": 7, "qx": 0, "qy": DOMAIN - 1, "k": 9})
+    qdf = spark.createDataFrame(pd.DataFrame(qs))
+    got = knn_batch(qdf, store_path=path, zkey_col=key, bits=BITS, domain=DOMAIN)
+    rows, jobs = jobs_run(spark, got.collect)
+    assert jobs == 0
+    for q in qs:
+        mine = sorted((r["rank"], r["pid"], r["x"], r["y"], r["d2"]) for r in rows if r["qid"] == q["qid"])
+        assert [t[1:] for t in mine] == brute_knn(pdf, q), q
+
+
+def test_prune_files_matches_overlap_test(sorted_path):
+    """Interval objects, (lo, hi) pairs and a frame of intervals all prune
+    to the files whose [zkey_min, zkey_max] overlaps some interval."""
+    import pandas as pd
+
+    m = load_manifest(sorted_path)
+    rng = np.random.default_rng(5)
+    batches = [[], COVERS["z"](*PRUNE_ALL["z"]), COVERS["z"]((0, 0), (MAXC, MAXC))]
+    for _ in range(20):
+        lo = rng.integers(0, 1_000_000, 2)
+        hi = np.minimum(lo + rng.integers(0, 200_000, 2), MAXC)
+        batches.append(COVERS["z"](tuple(lo.tolist()), tuple(hi.tolist())))
+    batches.append([iv for b in batches[3:8] for iv in b])
+    for ivs in batches:
+        want = [
+            f["file"]
+            for f in m["files"]
+            if f["zkey_min"] is not None
+            and any(f["zkey_min"] <= iv.hi and f["zkey_max"] >= iv.lo for iv in ivs)
+        ]
+        pairs = [(iv.lo, iv.hi) for iv in ivs]
+        frame = pd.DataFrame(pairs, columns=["lo", "hi"], dtype=np.int64)
+        assert prune_files(m, ivs) == prune_files(m, pairs) == prune_files(m, frame) == want
+
+
 def test_hilbert_store_pruned_lookup(spark, curve_stores):
     """Curve-agnostic storage: an hkey-sorted layout + hilbert_covers
     intervals returns the same box rows as the coordinate predicate."""

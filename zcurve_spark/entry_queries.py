@@ -547,11 +547,12 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-oriented kNN (r3): queries arrive as a DATAFRAME, rounds run
-    as distributed joins with mapInPandas decomposition and
-    manifest-relation file pruning — nothing proportional to the batch
-    is collected.  Shares knn's oracle: batch == per-query is exactly
-    the claim."""
+    """Set-oriented kNN (r3): queries arrive as a DATAFRAME.  This batch
+    is list-built (an RDD, not a local relation) and small, so knn_batch
+    collects it with one bounded job and runs its driver form: each
+    round one bucketed join over the manifest-pruned files, ranked on
+    the driver.  Shares knn's oracle: batch == per-query is exactly the
+    claim."""
     from .operators.knn import knn_batch
     from .sources.store import points_store
 

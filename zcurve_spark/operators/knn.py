@@ -17,19 +17,29 @@ Scale design (round-2 rework per VERDICT #4):
 * When a materialized zkey-sorted store is given, each round reads only
   the manifest-pruned files overlapping the round's boxes (the B-tree
   descent) instead of re-scanning the whole table.
-* Per-round results are k rows per query, so they are collected and
-  re-assembled once at the end (a cached DataFrame per round leaked).
 
-Two shapes (round-3 rework per VERDICT r2 "What's missing" #2):
+Two shapes:
 
 * :func:`knn` — queries as a Python list; right for interactive
   handfuls of queries (the reference's SRF-per-call usage).  A round is
   ONE job: one SQL predicate over one scan, a row per (row, query whose
   box holds it), a window top-k on one partition (no exchange).
-* :func:`knn_batch` — queries as a DATAFRAME; every round is
-  distributed (mapInPandas decomposition, manifest-relation file
-  pruning, bucketed equi-join, aggregate coverage test) and the driver
-  does one count() per round — the 10^4-10^6-query shape.
+* :func:`knn_batch` — queries as a DATAFRAME, in one of two forms.  A
+  batch of at most 4,000 queries is collected (no job when it is a
+  local relation, e.g. built from a pandas frame) and each round runs
+  on the driver: numpy boxes, the batch decomposition kernel,
+  vectorised manifest file pruning, then ONE bucketed join whose
+  candidates come back through Arrow and are ranked in numpy — three
+  jobs per round (the broadcasts of the interval and box relations,
+  and the join).  A larger batch runs distributed rounds (mapInPandas
+  decomposition, manifest-relation pruning, a window top-k and a
+  per-qid coverage aggregate, with a checkpoint and a count() per
+  round): several jobs per round, but nothing proportional to the
+  batch is collected — the 10^4-10^6-query shape.
+
+``knn`` and the driver form of ``knn_batch`` share the round loop
+(:func:`_rounds`): the coverage rule above, and the result returned
+through pandas/Arrow as a local relation, so collecting it runs no job.
 """
 
 from __future__ import annotations
@@ -38,6 +48,7 @@ import math
 import os
 import sys
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,19 +58,71 @@ from .bbox import box_scan_sql, box_sql
 
 DOMAIN = 1_000_000
 XY = ("x", "y")
+QUERY_COLS = ["qid", "qx", "qy", "k"]
 KNN_COLS = ["qid", "rank", "pid", "x", "y", "d2"]
 KNN_SCHEMA = "qid long, rank int, pid long, x long, y long, d2 long"
 
 
-def _round_boxes(pending: list[dict], r: int, domain: int) -> list[dict]:
-    return [
+def _first_radius(domain: int, kmax: int, n_points_hint: int) -> int:
+    """Half-side of the first round's boxes: the expected half-side
+    enclosing ~16k points — at that size round 1 almost always
+    terminates, and the candidate set stays tiny relative to a full
+    scan."""
+    return max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
+
+
+def _round_boxes(pending: pd.DataFrame, r: int, domain: int) -> pd.DataFrame:
+    """`pending` (qid, qx, qy, k) with each query's box of half-side r,
+    clipped to the domain, as (x0, y0, x1, y1)."""
+    q = {c: pending[c].to_numpy(np.int64) for c in QUERY_COLS}
+    return pd.DataFrame(
         {
-            "qid": q["qid"],
-            "mins": (max(q["qx"] - r, 0), max(q["qy"] - r, 0)),
-            "maxs": (min(q["qx"] + r, domain - 1), min(q["qy"] + r, domain - 1)),
+            **q,
+            "x0": np.maximum(q["qx"] - r, 0),
+            "y0": np.maximum(q["qy"] - r, 0),
+            "x1": np.minimum(q["qx"] + r, domain - 1),
+            "y1": np.minimum(q["qy"] + r, domain - 1),
         }
-        for q in pending
-    ]
+    )
+
+
+def _local_result(spark, rows: pd.DataFrame) -> DataFrame:
+    """`rows` (KNN_COLS) as a local relation: collecting it runs no job.
+    createDataFrame sends only a non-empty frame through Arrow (an empty
+    one becomes an RDD, whose collect is a job), so an empty result is a
+    placeholder row limited to none."""
+    if rows.empty:
+        rows = pd.DataFrame([[0] * len(KNN_COLS)], columns=KNN_COLS)
+        return spark.createDataFrame(rows, KNN_SCHEMA).limit(0)
+    return spark.createDataFrame(rows[KNN_COLS], KNN_SCHEMA)
+
+
+def _rounds(spark, pending: pd.DataFrame, r: int, domain: int, answer, max_rounds=None) -> DataFrame:
+    """Answer the queries `pending` (qid, qx, qy, k) in expanding rounds.
+
+    ``answer(boxes)`` gets the pending queries with their boxes of
+    half-side r (:func:`_round_boxes`) and returns the round's top-k
+    rows (KNN_COLS, ranks 1..k per qid).  A query is settled when it has
+    k rows with the k-th within r (the termination proof above) or its
+    box is the whole domain; the rest retry at 4r.  Queries still
+    pending after ``max_rounds`` rounds raise RuntimeError."""
+    done = []
+    rounds = 0
+    while len(pending):
+        if rounds == max_rounds:
+            raise RuntimeError(f"knn_batch: {len(pending)} queries uncovered after {max_rounds} rounds")
+        rounds += 1
+        top = answer(_round_boxes(pending, r, domain))
+        row_query = pd.Index(pending["qid"]).get_indexer(top["qid"])
+        n = np.bincount(row_query, minlength=len(pending))
+        dmax = np.zeros(len(pending), np.int64)
+        np.maximum.at(dmax, row_query, top["d2"].to_numpy(np.int64))
+        settled = ((n >= pending["k"].to_numpy()) & (dmax <= r * r)) | (r >= domain)
+        if settled.any():
+            done.append(top[settled[row_query]])
+        pending = pending[~settled]
+        r *= 4
+    return _local_result(spark, pd.concat(done) if done else pd.DataFrame(columns=KNN_COLS))
 
 
 def knn(
@@ -102,38 +165,31 @@ def knn(
         # rounds; start from a mid-density guess and let expansion work.
         n_points_hint = 1_000_000
     kmax = max((q["k"] for q in queries), default=1)
-    # density heuristic: expected half-side enclosing ~16k points — at
-    # that size round 1 almost always terminates, and the candidate set
-    # stays tiny relative to a full scan
-    r = max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
     # pid is not unique in the synthetic tables -> extend the tiebreak
     # to full coords so ranking is a total order (oracle-comparable)
     w = Window.partitionBy("qid").orderBy("d2", "pid", "x", "y")
 
-    pending = list(queries)
-    rows_out: list[tuple] = []
-    while pending:
-        boxes = _round_boxes(pending, r, domain)
+    def answer(boxes: pd.DataFrame) -> pd.DataFrame:
+        qs = boxes.to_numpy().tolist()  # (qid, qx, qy, k, x0, y0, x1, y1) as Python ints
         if store_path is not None:
-            ivs = [decompose_box(b["mins"], b["maxs"], bits=bits, budget=budget) for b in boxes]
+            ivs = [decompose_box((x0, y0), (x1, y1), bits=bits, budget=budget) for *_, x0, y0, x1, y1 in qs]
             src = read_pruned(spark, store_path, [iv for qivs in ivs for iv in qivs])
-            preds = [box_scan_sql(zkey_col, v, XY, b["mins"], b["maxs"]) for b, v in zip(boxes, ivs)]
+            preds = [box_scan_sql(zkey_col, v, XY, q[4:6], q[6:8]) for q, v in zip(qs, ivs)]
         else:
             # a computed key's ranges push nowhere, and Catalyst would inline
             # its expression into every BETWEEN (> 64 KB of code at 3 queries)
-            src, preds = points, [box_sql(XY, b["mins"], b["maxs"]) for b in boxes]
+            src, preds = points, [box_sql(XY, q[4:6], q[6:8]) for q in qs]
         scan = " OR ".join(f"({p})" for p in preds)
         # one output row per (row, query whose box holds it)
         tags = ", ".join(
-            f"named_struct('qid', {int(q['qid'])}L, 'qx', {int(q['qx'])}L, "
-            f"'qy', {int(q['qy'])}L, 'k', {int(q['k'])}, "
-            f"'hit', {box_sql(XY, b['mins'], b['maxs'])})"
-            for q, b in zip(pending, boxes)
+            f"named_struct('qid', {qid}L, 'qx', {qx}L, 'qy', {qy}L, 'k', {k}, "
+            f"'hit', {box_sql(XY, (x0, y0), (x1, y1))})"
+            for qid, qx, qy, k, x0, y0, x1, y1 in qs
         )
         d2 = (F.col("x") - F.col("qx")) ** 2 + (F.col("y") - F.col("qy")) ** 2
         # one partition satisfies the window's distribution: no exchange,
         # so the round is one job, and only k rows per query are collected
-        topk_rows = (
+        rows = (
             src.filter(F.expr(scan))
             .selectExpr("pid", "x", "y", f"inline(filter(array({tags}), t -> t.hit))")
             .withColumn("d2", d2.cast("long"))
@@ -143,22 +199,28 @@ def knn(
             .select(*KNN_COLS)
             .collect()
         )
-        by_qid: dict[int, list] = {}
-        for row in topk_rows:
-            by_qid.setdefault(row["qid"], []).append(tuple(row))
-        full_domain = r >= domain
-        still = []
-        for q in pending:
-            rows = by_qid.get(q["qid"], [])
-            if full_domain or (len(rows) >= q["k"] and max(d2 for *_, d2 in rows) <= r * r):
-                rows_out.extend(rows)
-            else:
-                still.append(q)
-        pending = still
-        r *= 4
-    # a pandas frame goes through Arrow into a local relation: collecting
-    # it runs no job (a list of tuples would become an RDD of pickled rows)
-    return spark.createDataFrame(pd.DataFrame(rows_out, columns=KNN_COLS), KNN_SCHEMA)
+        return pd.DataFrame(rows, columns=KNN_COLS)
+
+    pending = pd.DataFrame([[q[c] for c in QUERY_COLS] for q in queries], columns=QUERY_COLS)
+    return _rounds(spark, pending, _first_radius(domain, kmax, n_points_hint), domain, answer)
+
+
+def _top_k(cand: pd.DataFrame, pending: pd.DataFrame) -> pd.DataFrame:
+    """The candidates (qid, pid, x, y, d2) ranked per qid by (d2, pid, x,
+    y) and cut at each query's k, as KNN_COLS; `pending` (qid, k) is
+    sorted by qid."""
+    c = {n: cand[n].to_numpy(np.int64) for n in ("qid", "pid", "x", "y", "d2")}
+    c["k"] = pending["k"].to_numpy(np.int64)[np.searchsorted(pending["qid"].to_numpy(), c["qid"])]
+    # a row beyond its query's k-th distance cannot rank <= k: cut those
+    # after a (qid, d2) sort, so the full sort sees ~k rows per query
+    o = np.lexsort((c["d2"], c["qid"]))
+    qid, d2 = c["qid"][o], c["d2"][o]
+    kth = np.minimum(np.searchsorted(qid, qid) + c["k"][o], np.searchsorted(qid, qid, "right")) - 1
+    o = o[d2 <= d2[kth]]
+    o = o[np.lexsort([c[n][o] for n in ("y", "x", "pid", "d2", "qid")])]
+    c = {n: v[o] for n, v in c.items()}
+    c["rank"] = np.arange(o.size) - np.searchsorted(c["qid"], c["qid"]) + 1
+    return pd.DataFrame(c)[c["rank"] <= c["k"]][KNN_COLS]
 
 
 def knn_batch(
@@ -176,34 +238,58 @@ def knn_batch(
     checkpointer=None,
 ) -> DataFrame:
     """SET-ORIENTED kNN: `queries` is a DATAFRAME (qid, qx, qy, k) — the
-    large-batch path (r2 VERDICT "What's missing" #2: the list-based
-    :func:`knn` collects per round, fine for 16 queries, wrong for 10^6).
+    batch shape (r2 VERDICT "What's missing" #2: the list-based
+    :func:`knn` builds one predicate term per query, fine for 16
+    queries, wrong for 10^6).  Same result contract as :func:`knn`:
+    (qid, rank, pid, x, y, d2), rank by squared Euclidean distance with
+    (pid, x, y) tiebreak.  Reads the store at ``store_path`` (pruned by
+    its manifest) or else ``points``; one of them is required.
 
-    Every round is fully distributed: boxes are Column expressions over
-    the pending relation, decomposition runs as mapInPandas
-    (bucketed_intervals_dist), store file pruning joins the manifest
-    relation against the interval relation (read_pruned_df — driver cost
-    O(files), not O(queries)), candidates come from one bucketed
-    equi-join, and coverage is decided by a per-qid aggregate.  Per
-    round the driver executes ONE count() on the pending relation —
-    nothing proportional to the query batch is ever collected.
+    **Driver form** (at most 4,000 queries).  The batch is collected:
+    with no job when its plan is a local relation (built from a pandas
+    frame), else with one bounded collect (``limit(4001)``, one job).
+    Each round runs on the driver, in :func:`knn`'s round loop: numpy
+    boxes, one batch decomposition (`decompose_boxes`) with the
+    replication-bounded bucket width, the manifest's file ranges tested
+    against every interval in one vectorised pass, then one bucketed
+    join (:func:`bbox_join_bucketed`) whose candidates (qid, pid, x, y,
+    d2) come back through Arrow and are ranked in numpy.  A round runs
+    three Spark jobs (the two broadcasts and the join) and the result
+    returns as a local relation, so collecting it runs none.  On a 4-vCPU
+    host a Python-worker job costs ~300 ms of fixed latency, while the
+    driver's decomposition and ranking of a 500-query round take tens of
+    ms; the two forms break even near 4,000 queries (k=10, 500k points).
+    ``checkpointer`` and ``broadcast_threshold`` do not apply to this
+    form.
 
-    Same result contract as :func:`knn`: (qid, rank, pid, x, y, d2),
-    rank by squared Euclidean distance with (pid, x, y) tiebreak.
+    **Distributed form** (above 4,000 queries).  Boxes are Column
+    expressions over the pending relation, decomposition runs as
+    mapInPandas (bucketed_intervals_dist), store file pruning joins the
+    manifest relation against the interval relation (read_pruned_df —
+    driver cost O(files), not O(queries)), candidates come from one
+    bucketed equi-join, and coverage is decided by a per-qid aggregate.
+    Nothing proportional to the batch is collected, but each round runs
+    several jobs (a 500-query call ~23): a checkpoint and a count() of
+    the pending relation, the decomposition sample, the file pruning and
+    the top-k.
 
-    ``checkpointer`` cuts lineage between rounds so round N's plan does
-    not replay rounds 1..N-1.  Default is ``DataFrame.localCheckpoint``
-    — right for local mode, but its blocks live on executors, so on a
-    real cluster an executor loss invalidates them mid-job; pass
-    ``lambda df: df.checkpoint()`` (reliable, after
-    ``sc.setCheckpointDir`` on shared storage) or a StageRunner-backed
-    materializer for fault-tolerant 1000-executor runs.
+    ``checkpointer`` cuts lineage between distributed rounds so round
+    N's plan does not replay rounds 1..N-1.  Default is
+    ``DataFrame.localCheckpoint`` — right for local mode, but its blocks
+    live on executors, so on a real cluster an executor loss
+    invalidates them mid-job; pass ``lambda df: df.checkpoint()``
+    (reliable, after ``sc.setCheckpointDir`` on shared storage) or a
+    StageRunner-backed materializer for fault-tolerant 1000-executor
+    runs.  Queries still uncovered after ``max_rounds`` rounds raise
+    RuntimeError in both forms.
     """
     from functools import reduce
 
     from ..sources.manifest import read_pruned_df
-    from .bbox import bbox_join_bucketed, bucketed_intervals_dist
+    from .bbox import _DRIVER_BOXES, _local_rows, bbox_join_bucketed, bucketed_intervals_dist
 
+    if points is None and store_path is None:
+        raise ValueError("knn_batch needs `points` or `store_path`; both are None")
     spark = queries.sparkSession
     if store_path is not None and n_points_hint is None:
         from ..sources.store import store_total_rows
@@ -211,19 +297,22 @@ def knn_batch(
         n_points_hint = store_total_rows(store_path)
     if n_points_hint is None:
         n_points_hint = 1_000_000
+    sel = queries.select(*QUERY_COLS)
+    # a local relation's rows cost no job; any other batch one bounded
+    # collect (through Arrow: one job, where collect() takes two)
+    rows = _local_rows(sel, _DRIVER_BOXES)
+    batch = sel.limit(_DRIVER_BOXES + 1).toPandas() if rows is None else pd.DataFrame(rows, columns=QUERY_COLS)
+    if len(batch) <= _DRIVER_BOXES:
+        return _knn_batch_local(
+            spark, batch, points, store_path, bits, domain, n_points_hint, zkey_col, budget, max_rounds
+        )
     kmax_row, kmin, kmin_qid = queries.agg(F.max("k"), F.min("k"), F.min_by("qid", "k")).first()
-    if kmax_row is None:  # empty query batch: return an empty result, same schema
-        # ADVICE r4: x/y must be LONG to match the non-empty path (the
-        # store carries long coords) and sibling knn() — a mismatched
-        # empty schema breaks downstream unions/writes.
-        return spark.createDataFrame([], KNN_SCHEMA)
     if kmin < 1:
         raise ValueError(f"knn_batch: k must be >= 1, got k={kmin} for qid {kmin_qid}")
-    kmax = int(kmax_row)
-    r = max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
+    r = _first_radius(domain, int(kmax_row), n_points_hint)
     ckpt = checkpointer or (lambda df: df.localCheckpoint())
 
-    pending = ckpt(queries.select("qid", "qx", "qy", "k"))
+    pending = ckpt(queries.select(*QUERY_COLS))
     n_pending = pending.count()
     done_parts: list[DataFrame] = []
     rounds = 0
@@ -256,12 +345,7 @@ def knn_batch(
         if not small:
             # the interval relation feeds two consumers (prune + join)
             bivs = ckpt(bivs)
-        if store_path is not None:
-            src = read_pruned_df(spark, store_path, bivs)
-        elif points is not None:
-            src = points
-        else:
-            raise ValueError("knn_batch needs `points` or `store_path`")
+        src = read_pruned_df(spark, store_path, bivs) if store_path is not None else points
         cand = bbox_join_bucketed(
             src,
             boxes,
@@ -313,6 +397,34 @@ def knn_batch(
         )
     out = reduce(DataFrame.unionByName, done_parts)
     return out
+
+
+def _knn_batch_local(
+    spark, queries: pd.DataFrame, points, store_path, bits, domain, n_points_hint, zkey_col, budget,
+    max_rounds,
+) -> DataFrame:
+    """:func:`knn_batch`'s driver form over the batch `queries`."""
+    from ..sources.manifest import read_pruned
+    from .bbox import _BUCKETED_SCHEMA, _bucket_shift, _decompose_frame, _with_buckets, bbox_join_bucketed
+
+    if len(queries) and queries["k"].min() < 1:
+        bad = queries.loc[queries["k"].idxmin()]
+        raise ValueError(f"knn_batch: k must be >= 1, got k={bad['k']} for qid {bad['qid']}")
+
+    def answer(boxes: pd.DataFrame) -> pd.DataFrame:
+        ivs = _decompose_frame(boxes, 2, bits, budget)
+        if ivs.empty:  # every box clipped away: its query lies off the domain
+            return pd.DataFrame({c: np.empty(0, np.int64) for c in KNN_COLS})
+        shift = _bucket_shift(None, ivs, 2, bits)
+        src = read_pruned(spark, store_path, ivs) if store_path is not None else points
+        bivs = spark.createDataFrame(_with_buckets(ivs, shift), _BUCKETED_SCHEMA)
+        cand = bbox_join_bucketed(src, spark.createDataFrame(boxes), bivs, shift, zkey_col=zkey_col)
+        d2 = "(x - qx) * (x - qx) + (y - qy) * (y - qy) AS d2"
+        return _top_k(cand.selectExpr("qid", "pid", "x", "y", d2).toPandas(), boxes)
+
+    pending = queries.sort_values("qid", kind="stable")
+    r = _first_radius(domain, int(queries["k"].max()) if len(queries) else 1, n_points_hint)
+    return _rounds(spark, pending, r, domain, answer, max_rounds)
 
 
 def knn_geo_batch(

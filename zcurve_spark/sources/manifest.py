@@ -26,6 +26,8 @@ import os
 import time
 from typing import Callable
 
+import numpy as np
+import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -217,17 +219,27 @@ def prune_files_coords(manifest: dict, boxes, cols=("x", "y")) -> list[str]:
 
 def prune_files(manifest: dict, intervals) -> list[str]:
     """File names whose [zkey_min, zkey_max] overlaps any interval —
-    the manifest-level analog of the B-tree root->leaf descent."""
-    out = []
-    for f in manifest["files"]:
-        if f["zkey_min"] is None:
-            continue
-        for iv in intervals:
-            lo, hi = (iv.lo, iv.hi) if hasattr(iv, "lo") else (iv[0], iv[1])
-            if f["zkey_min"] <= hi and f["zkey_max"] >= lo:
-                out.append(f["file"])
-                break
-    return out
+    the manifest-level analog of the B-tree root->leaf descent.
+
+    `intervals`: Interval objects, (lo, hi) pairs, or a frame with lo and
+    hi columns (a decomposed batch); keys are int64, as the store's key
+    column is.  One vectorised pass: a file overlaps some interval iff
+    the largest hi among the intervals starting at or below its zkey_max
+    reaches its zkey_min."""
+    if isinstance(intervals, pd.DataFrame):
+        lo, hi = intervals["lo"].to_numpy(np.int64), intervals["hi"].to_numpy(np.int64)
+    else:
+        pairs = [(iv.lo, iv.hi) if hasattr(iv, "lo") else (iv[0], iv[1]) for iv in intervals]
+        lo, hi = np.array(pairs, np.int64).reshape(-1, 2).T
+    files = [f for f in manifest["files"] if f["zkey_min"] is not None]
+    if not lo.size or not files:
+        return []
+    order = np.argsort(lo, kind="stable")
+    reach = np.maximum.accumulate(hi[order])
+    kmin = np.array([f["zkey_min"] for f in files], np.int64)
+    last = np.searchsorted(lo[order], np.array([f["zkey_max"] for f in files], np.int64), "right") - 1
+    hit = (last >= 0) & (reach[np.maximum(last, 0)] >= kmin)
+    return [f["file"] for f, h in zip(files, hit) if h]
 
 
 def read_pruned_df(spark: SparkSession, path: str, ivs_df: DataFrame) -> DataFrame:
@@ -245,7 +257,10 @@ def read_pruned_df(spark: SparkSession, path: str, ivs_df: DataFrame) -> DataFra
         for f in manifest["files"]
         if f["zkey_min"] is not None
     ]
-    fdf = spark.createDataFrame(frows, "file string, kmin long, kmax long")
+    # through pandas/Arrow: a local relation, not an RDD of pickled rows
+    fdf = spark.createDataFrame(
+        pd.DataFrame(frows, columns=["file", "kmin", "kmax"]), "file string, kmin long, kmax long"
+    )
     names = [
         r["file"]
         for r in ivs_df.select("lo", "hi")
@@ -263,7 +278,7 @@ def read_pruned(spark: SparkSession, path: str, intervals) -> DataFrame:
     exact filter) below this.  Files open with the manifest's schema, so
     building the DataFrame runs no Spark job; a manifest written without
     a ``schema`` (or no manifest at all) falls back to schema inference,
-    which runs one."""
+    which runs one.  `intervals` as for :func:`prune_files`."""
     manifest = load_manifest(path)
     if manifest is None:
         return spark.read.parquet(path)
