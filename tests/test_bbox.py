@@ -9,20 +9,18 @@ import pandas as pd
 import pytest
 
 from zcurve_spark.operators.bbox import (
-    bbox_join,
     bbox_join_bucketed,
     bbox_lookup,
-    bucketed_intervals_df,
+    bucketed_intervals,
     bucketed_intervals_dist,
-    count_boxes,
     count_hits,
-    intervals_df,
 )
 from zcurve_spark.plans.decompose import BUCKET_ROWS_PER_INTERVAL
 from zcurve_spark.sources.manifest import write_sorted
 from zcurve_spark.sources.points import (
     BITS,
     boxes_df,
+    boxes_local_df,
     deterministic_boxes,
     points_from_lineitem,
     unaligned_boxes,
@@ -47,6 +45,11 @@ def pdf(pts):
 
 def _rowset(df):
     return sorted(map(tuple, df.values.tolist()))
+
+
+def _frame(spark, boxes):
+    """The box batch as the pandas frame bucketed_intervals takes."""
+    return boxes_local_df(spark, boxes).toPandas()
 
 
 def _brute(pdf, b):
@@ -111,24 +114,21 @@ class TestBboxLookup:
 class TestBboxBatchJoin:
     def test_counts_match_brute_force(self, spark, pts, pdf):
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(12) + deterministic_boxes(4))]
-        bdf = boxes_df(spark, boxes)
-        ivs = intervals_df(spark, boxes, bits=BITS, budget=16)
-        got = count_boxes(pts, bdf, ivs).toPandas().set_index("qid").n_hits
+        bdf = boxes_local_df(spark, boxes)
+        bivs, shift = bucketed_intervals_dist(bdf, bits=BITS, budget=16)
+        got = count_hits(bdf, bbox_join_bucketed(pts, bdf, bivs, shift)).toPandas().set_index("qid").n_hits
         for b in boxes:
             assert got[b["qid"]] == len(_brute(pdf, b)), b
 
-    def test_bucketed_join_matches_nested_loop(self, spark, pts, pdf):
+    def test_bucketed_join_matches_brute_force(self, spark, pts, pdf):
+        """Every (box, point) pair the join returns, with multiplicity, is
+        the brute-force closed-box test's."""
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(8) + unaligned_boxes(4))]
-        bdf = boxes_df(spark, boxes)
-        ivs = intervals_df(spark, boxes, bits=BITS, budget=16)
-        nl = bbox_join(pts, bdf, ivs).select("qid", "pid").toPandas()
-        bivs, shift = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
-        bk = bbox_join_bucketed(pts, bdf, bivs, shift).select("qid", "pid").toPandas()
-        key = lambda d: sorted(map(tuple, d.values.tolist()))
-        assert key(nl) == key(bk)
-        for b in boxes:
-            exp = set(_brute(pdf, b).pid)
-            assert set(bk[bk.qid == b["qid"]].pid) == exp
+        bdf = boxes_local_df(spark, boxes)
+        bivs, shift = bucketed_intervals_dist(bdf, bits=BITS, budget=16)
+        got = bbox_join_bucketed(pts, bdf, bivs, shift).select("qid", "pid", "x", "y").toPandas()
+        want = [(b["qid"], *r) for b in boxes for r in _brute(pdf, b)[["pid", "x", "y"]].values.tolist()]
+        assert _rowset(got) == sorted(want)
 
     def test_partitioning_invariance(self, spark, pts, pdf):
         """Results identical under repartition(1|8|32) — SURVEY.md §5.2
@@ -145,20 +145,16 @@ class TestDistributedDecomposition:
         """bucketed_intervals_dist (mapInPandas, r3) must emit EXACTLY
         the rows the driver-side loop emits, at the same bucket shift."""
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(20) + unaligned_boxes(4))]
-        ref, shift_ref = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
-        from zcurve_spark.operators.bbox import bucketed_intervals_dist
-
+        ref, shift_ref = bucketed_intervals(_frame(spark, boxes), bits=BITS, budget=16)
         got, shift = bucketed_intervals_dist(
             boxes_df(spark, boxes), bits=BITS, budget=16, bucket_shift=shift_ref
         )
-        key = lambda d: sorted(map(tuple, d.values.tolist()))
-        assert key(got.toPandas()) == key(ref.toPandas())
+        assert "MapInPandas" in got._jdf.queryExecution().analyzed().toString()
+        assert _rowset(got.toPandas()) == _rowset(ref)
 
     def test_dist_join_counts_match_brute_force(self, spark, pts, pdf):
         """End-to-end through the distributed decomposition, with the
         non-broadcast (shuffle hash) join path as well."""
-        from zcurve_spark.operators.bbox import bucketed_intervals_dist
-
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(10))]
         bdf = boxes_df(spark, boxes)
         for bc in (True, False):
@@ -176,17 +172,17 @@ class TestDistributedDecomposition:
         from zcurve_spark.operators import bbox
 
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(20) + unaligned_boxes(4))]
-        ref, shift_ref = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
-        local = spark.createDataFrame(boxes_df(spark, boxes).toPandas())
+        ref, shift_ref = bucketed_intervals(_frame(spark, boxes), bits=BITS, budget=16)
+        local = boxes_local_df(spark, boxes)
         (got, shift), jobs = jobs_run(spark, lambda: bucketed_intervals_dist(local, bits=BITS, budget=16))
         assert (jobs, shift) == (0, shift_ref)
         assert "MapInPandas" not in got._jdf.queryExecution().analyzed().toString()
-        assert _rowset(got.toPandas()) == _rowset(ref.toPandas())
+        assert _rowset(got.toPandas()) == _rowset(ref)
         monkeypatch.setattr(bbox, "_DRIVER_BOXES", len(boxes) - 1)
         got, shift = bucketed_intervals_dist(local, bits=BITS, budget=16)
         assert "MapInPandas" in got._jdf.queryExecution().analyzed().toString()
         assert shift == shift_ref
-        assert _rowset(got.toPandas()) == _rowset(ref.toPandas())
+        assert _rowset(got.toPandas()) == _rowset(ref)
 
     def test_local_batch_join_jobs(self, spark, pts, pdf):
         """A local batch's bucketed join with count_hits: no job while
@@ -194,7 +190,7 @@ class TestDistributedDecomposition:
         and the result stage.  Empty boxes count 0."""
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(10) + unaligned_boxes(2))]
         boxes.append({"qid": 99, "mins": (0, 0), "maxs": (0, 0)})
-        local = spark.createDataFrame(boxes_df(spark, boxes).toPandas())
+        local = boxes_local_df(spark, boxes)
 
         def plan():
             bivs, shift = bucketed_intervals_dist(local, bits=BITS, budget=16)
@@ -206,9 +202,19 @@ class TestDistributedDecomposition:
         assert jobs == 4
         assert {r["qid"]: r["n_hits"] for r in rows} == {b["qid"]: len(_brute(pdf, b)) for b in boxes}
 
-    def test_sampled_shift_is_deterministic(self, spark):
-        from zcurve_spark.operators.bbox import bucketed_intervals_dist
+    def test_all_boxes_clipped_away(self, spark, pts):
+        """A batch whose boxes are all inverted (what clipping a box that
+        lies off the domain leaves) has no intervals: an empty bucketed
+        frame, an empty relation, and a join that counts 0 per box."""
+        boxes = [{"qid": i, "mins": (500 + i, 0), "maxs": (400, 10)} for i in range(3)]
+        bivs, _ = bucketed_intervals(_frame(spark, boxes), bits=BITS, budget=16)
+        assert bivs.empty and list(bivs.columns) == ["qid", "lo", "hi", "solid", "bucket"]
+        local = boxes_local_df(spark, boxes)
+        rel, shift = bucketed_intervals_dist(local, bits=BITS, budget=16)
+        rows = count_hits(local, bbox_join_bucketed(pts, local, rel, shift)).collect()
+        assert {r["qid"]: r["n_hits"] for r in rows} == {0: 0, 1: 0, 2: 0}
 
+    def test_sampled_shift_is_deterministic(self, spark):
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(50))]
         bdf = boxes_df(spark, boxes)
         _, s1 = bucketed_intervals_dist(bdf, bits=BITS, budget=16)
@@ -221,9 +227,9 @@ class TestDistributedDecomposition:
         rows per interval (the median interval span would give ~800), and
         both forms choose the same width."""
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(8) + unaligned_boxes(24))]
-        n_ivs = intervals_df(spark, boxes, bits=BITS, budget=16).count()
-        bivs, shift = bucketed_intervals_df(spark, boxes, bits=BITS, budget=16)
-        assert n_ivs < bivs.count() <= BUCKET_ROWS_PER_INTERVAL * n_ivs
+        bivs, shift = bucketed_intervals(_frame(spark, boxes), bits=BITS, budget=16)
+        n_ivs = len(bivs.drop_duplicates(["qid", "lo"]))
+        assert n_ivs < len(bivs) <= BUCKET_ROWS_PER_INTERVAL * n_ivs
         _, dist_shift = bucketed_intervals_dist(boxes_df(spark, boxes), bits=BITS, budget=16)
         assert dist_shift == shift
 
@@ -231,12 +237,12 @@ class TestDistributedDecomposition:
         boxes = [dict(b, qid=i) for i, b in enumerate(_big_boxes(3))]
         for bad in (0, 2 * BITS + 1):
             with pytest.raises(ValueError, match=f"bucket_shift={bad}"):
-                bucketed_intervals_df(spark, boxes, bits=BITS, bucket_shift=bad)
+                bucketed_intervals_dist(boxes_local_df(spark, boxes), bits=BITS, bucket_shift=bad)
             with pytest.raises(ValueError, match=f"bucket_shift={bad}"):
                 bucketed_intervals_dist(boxes_df(spark, boxes), bits=BITS, bucket_shift=bad)
         outside = boxes + [{"qid": 41, "mins": (0, 0), "maxs": (1 << BITS, 5)}]
         with pytest.raises(ValueError, match=r"qid 41 \(\(0, 0\), \(1048576, 5\)\)"):
-            intervals_df(spark, outside, bits=BITS)
+            bucketed_intervals_dist(boxes_local_df(spark, outside), bits=BITS)
 
 
 def test_read_store_runs_no_job(spark, pts, tmp_path):

@@ -177,6 +177,27 @@ def test_bbox_lookup_pruned_equals_fullscan(spark, sorted_path, curve_stores):
     assert sum(map(len, refs.values())) > 0
 
 
+def test_lookups_share_curve_dispatch(spark, curve_stores):
+    """bbox_lookup and bbox_lookup_pruned decompose a box by the same
+    `curve` rule: over each curve's store they return the same rows, and
+    an unknown curve raises in both, naming it."""
+    from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
+
+    for curve, (path, key, cols) in curve_stores.items():
+        mins, maxs = _lookup_boxes(len(cols), (0,) * len(cols))[0]
+        kw = dict(zkey_col=key, coord_cols=cols, bits=BITS, curve=curve)
+        mem = sorted(map(tuple, bbox_lookup(spark.read.parquet(path), mins, maxs, **kw).collect()))
+        assert mem == sorted(map(tuple, bbox_lookup_pruned(spark, path, mins, maxs, **kw).collect())), curve
+        assert mem, curve
+    path, key, _ = curve_stores["hilbert"]
+    pts = spark.read.parquet(path)
+    for bad in ("Hilbert", "z2"):
+        with pytest.raises(ValueError, match=f"curve={bad!r}"):
+            bbox_lookup(pts, (0, 0), (9, 9), zkey_col=key, bits=BITS, curve=bad)
+        with pytest.raises(ValueError, match=f"curve={bad!r}"):
+            bbox_lookup_pruned(spark, path, (0, 0), (9, 9), zkey_col=key, bits=BITS, curve=bad)
+
+
 def test_bbox_lookup_pruned_runs_one_job(spark, sorted_path):
     """Building the lookup runs no Spark job (no schema inference, no
     sampling); answering it runs exactly one, whether the box reads one
@@ -210,7 +231,8 @@ def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
     empty, jobs = jobs_run(spark, lambda: read_pruned(spark, sorted_path, []))
     assert jobs == 0
     assert [(f.name, f.dataType) for f in empty.schema] == fields
-    assert empty.collect() == []
+    rows, jobs = jobs_run(spark, empty.collect)
+    assert (rows, jobs) == ([], 0)
 
     legacy = str(tmp_path / "legacy")
     shutil.copytree(sorted_path, legacy)
@@ -305,6 +327,26 @@ def test_knn_batch_local_store_matches_brute_force(spark, sorted_path, quoted_st
     got = knn_batch(qdf, store_path=path, zkey_col=key, bits=BITS, domain=DOMAIN)
     rows, jobs = jobs_run(spark, got.collect)
     assert jobs == 0
+    for q in qs:
+        mine = sorted((r["rank"], r["pid"], r["x"], r["y"], r["d2"]) for r in rows if r["qid"] == q["qid"])
+        assert [t[1:] for t in mine] == brute_knn(pdf, q), q
+
+
+@pytest.mark.parametrize("quoted", [False, True])
+def test_knn_batch_distributed_store_matches_brute_force(spark, sorted_path, quoted_store, quoted, monkeypatch):
+    """knn_batch's distributed form (the driver-form limit patched to 0)
+    over a store, the key column quoted or not, gives brute force's
+    answer."""
+    from zcurve_spark.operators import bbox
+    from zcurve_spark.operators.knn import knn_batch
+
+    monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
+    path, key = (quoted_store, "z key") if quoted else (sorted_path, "zkey")
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    qs = [{"qid": i, "qx": 100_000 + i * 311_111, "qy": 50_000 + i * 271_111, "k": 2 + i} for i in range(3)]
+    qs.append({"qid": 7, "qx": 0, "qy": DOMAIN - 1, "k": 9})
+    qdf = spark.createDataFrame([tuple(q.values()) for q in qs], "qid long, qx long, qy long, k int")
+    rows = knn_batch(qdf, store_path=path, zkey_col=key, bits=BITS, domain=DOMAIN).collect()
     for q in qs:
         mine = sorted((r["rank"], r["pid"], r["x"], r["y"], r["d2"]) for r in rows if r["qid"] == q["qid"])
         assert [t[1:] for t in mine] == brute_knn(pdf, q), q
@@ -511,41 +553,3 @@ class TestStoreParallelism:
         n_raw = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").count()
         assert read_store(spark, p1).count() == n_raw
         assert load_manifest(p1)["zkey_col"] == "doc_id"
-
-
-class TestDistributedPruning:
-    def test_read_pruned_df_matches_listwise_pruning(self, spark, tmp_path):
-        """read_pruned_df (interval DATAFRAME x manifest relation, r3)
-        must read exactly the files the driver-side prune_files picks."""
-        from pyspark.sql import functions as F
-
-        from zcurve_spark.plans.decompose import Interval
-        from zcurve_spark.sources.manifest import (
-            load_manifest,
-            prune_files,
-            read_pruned,
-            read_pruned_df,
-            write_sorted,
-        )
-
-        p = str(tmp_path / "store")
-        df = spark.range(100_000).selectExpr("id as zkey", "id % 97 as v")
-        write_sorted(df, p, n_partitions=16)
-        ivs = [Interval(1000, 2000, False), Interval(50_000, 50_100, False)]
-        ref = read_pruned(spark, p, ivs)
-        ivs_df = spark.createDataFrame(
-            [(iv.lo, iv.hi) for iv in ivs], "lo long, hi long"
-        )
-        got = read_pruned_df(spark, p, ivs_df)
-        assert sorted(got.inputFiles()) == sorted(ref.inputFiles())
-        assert got.count() == ref.count()
-        m = load_manifest(p)
-        assert len(prune_files(m, ivs)) < len(m["files"])  # pruning happened
-
-    def test_read_pruned_df_empty_intervals(self, spark, tmp_path):
-        from zcurve_spark.sources.manifest import read_pruned_df, write_sorted
-
-        p = str(tmp_path / "store2")
-        write_sorted(spark.range(1000).selectExpr("id as zkey"), p, n_partitions=4)
-        ivs_df = spark.createDataFrame([], "lo long, hi long")
-        assert read_pruned_df(spark, p, ivs_df).count() == 0

@@ -20,11 +20,12 @@ reference's own oracle `x >= X and x <= X+1000`, gentest.awk:6).
 
 Single boxes (``bbox_lookup*``) filter one scan with one predicate.  Box
 *batches* (the gentest.awk workload: 10^5 boxes at once) join the points
-against an interval relation instead (``bbox_join*``): one scan serves
-all boxes, where one predicate per box would not scale.  A batch is
-decomposed by one numpy kernel (``decompose_boxes``), not box by box, and
-its intervals are exploded onto prefix buckets whose width bounds the
-replication (``bucket_shift_for``).
+against an interval relation instead (``bbox_join_bucketed``): one scan
+serves all boxes, where one predicate per box would not scale.  The join
+is an equi-join on range buckets, never a nested-loop range join.  A
+batch is decomposed by one numpy kernel (``decompose_boxes``), not box by
+box, and its intervals are exploded onto prefix buckets whose width
+bounds the replication (``bucket_shift_for``).
 """
 
 from __future__ import annotations
@@ -100,6 +101,19 @@ def interval_buckets(intervals, max_buckets: int = 1024) -> tuple[list[int], int
         shift += 2
 
 
+def _box_cover(curve: str, mins, maxs, bits: int, budget: int):
+    """The key intervals covering the box [mins, maxs] on `curve`: "z"
+    (LITMAX/BIGMIN, any arity), "hilbert" (2D quadrant cover) or
+    "hilbert3" (3D octree cover), at `bits` bits per dimension."""
+    if curve == "z":
+        return decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
+    if curve == "hilbert":
+        return hilbert_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
+    if curve == "hilbert3":
+        return hilbert3_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
+    raise ValueError(f"curve={curve!r} is not one of 'z', 'hilbert', 'hilbert3'")
+
+
 def bbox_lookup(
     points: DataFrame,
     mins,
@@ -111,12 +125,19 @@ def bbox_lookup(
     bits: int = 30,
     budget: int = 128,
     sort_by_id: bool = True,
+    curve: str = "z",
 ) -> DataFrame:
     """Rows of `points` inside the closed box [mins, maxs].
 
     Parity with zcurve_2d/3d_lookup: returns (id, *coords); sorted by id
     when sort_by_id (zcurve.c:331-333's TID sort), else natural order
     (the *_tidonly variants, zcurve.c:186-262).
+
+    ``curve`` names the key in `zkey_col`: "z", "hilbert" (an hkey, the
+    quadrant-recursive cover — the Hilbert analog of the reference's
+    LITMAX/BIGMIN split loop, sp_query.c:324-356) or "hilbert3" (an
+    hkey3, the octree cover); any other value raises ValueError.  Only
+    the pruned key ranges depend on the curve, never the result.
 
     Candidate pruning is ONE `zkey >> shift IN (buckets)` hash-set probe
     over prefix buckets of the decomposed intervals: an OR-of-BETWEEN on
@@ -128,48 +149,11 @@ def bbox_lookup(
     uses BETWEENs instead: there zkey is a plain column — no duplication —
     and the BETWEENs push down to parquet row groups.)
     """
-    intervals = decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
+    intervals = _box_cover(curve, mins, maxs, bits, budget)
     if not intervals:
         return points.select(id_col, *coord_cols).limit(0)
     buckets, shift = interval_buckets(intervals)
-    k = _as_long(points, zkey_col)
-    cand = points.filter(F.shiftrightunsigned(k, shift).isin(buckets))
-    hits = cand.filter(box_refine_predicate(list(coord_cols), mins, maxs))
-    out = hits.select(id_col, *coord_cols)
-    return out.orderBy(id_col) if sort_by_id else out
-
-
-def _as_long(points: DataFrame, zkey_col: str):
-    return F.col(zkey_col).cast("long")
-
-
-def bbox_lookup_hilbert(
-    points: DataFrame,
-    mins,
-    maxs,
-    *,
-    hkey_col: str = "hkey",
-    coord_cols: tuple[str, ...] = ("x", "y"),
-    id_col: str = "pid",
-    order: int = 30,
-    budget: int = 128,
-    sort_by_id: bool = True,
-) -> DataFrame:
-    """Exact box lookup over a HILBERT-keyed layout: quadrant-recursive
-    interval cover (plans.decompose.hilbert_covers — the Hilbert analog
-    of the reference's LITMAX/BIGMIN split loop, sp_query.c:324-356),
-    bucket-IN pruning, exact per-dim refinement.  Same result contract
-    as bbox_lookup; only the curve (and therefore the pruned key ranges)
-    differs.  With 3 coord_cols the octree cover (hilbert3_covers) is
-    used over a hilbert3-keyed layout."""
-    if len(coord_cols) == 3:
-        intervals = hilbert3_covers(tuple(mins), tuple(maxs), order=order, budget=budget)
-    else:
-        intervals = hilbert_covers(tuple(mins), tuple(maxs), order=order, budget=budget)
-    if not intervals:
-        return points.select(id_col, *coord_cols).limit(0)
-    buckets, shift = interval_buckets(intervals)
-    k = _as_long(points, hkey_col)
+    k = F.col(zkey_col).cast("long")
     cand = points.filter(F.shiftrightunsigned(k, shift).isin(buckets))
     hits = cand.filter(box_refine_predicate(list(coord_cols), mins, maxs))
     out = hits.select(id_col, *coord_cols)
@@ -203,25 +187,20 @@ def bbox_lookup_pruned(
     to the full-scan path (the bbox_rows_pruned oracle entry asserts
     that).
 
-    ``curve`` selects the interval decomposition: "z" (LITMAX/BIGMIN)
-    for a zkey-sorted layout, "hilbert" (quadrant cover) for an
-    hkey-sorted layout, "hilbert3" (octree cover, 3 coord_cols) for an
-    hkey3-sorted layout — the lookup machinery is curve-agnostic."""
+    ``curve`` selects the interval decomposition as in
+    :func:`bbox_lookup`: "z" for a zkey-sorted layout, "hilbert" for an
+    hkey-sorted one, "hilbert3" (3 coord_cols) for an hkey3-sorted one;
+    any other value raises ValueError — the lookup machinery is
+    curve-agnostic."""
     from ..sources.manifest import read_pruned
 
-    if curve == "hilbert":
-        intervals = hilbert_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
-    elif curve == "hilbert3":
-        intervals = hilbert3_covers(tuple(mins), tuple(maxs), order=bits, budget=budget)
-    else:
-        intervals = decompose_box(tuple(mins), tuple(maxs), bits=bits, budget=budget)
+    intervals = _box_cover(curve, mins, maxs, bits, budget)
     pred = F.expr(box_scan_sql(zkey_col, intervals, coord_cols, mins, maxs))
     out = read_pruned(spark, store_path, intervals).filter(pred).select(id_col, *coord_cols)
     return out.coalesce(1).sortWithinPartitions(id_col) if sort_by_id else out
 
 
-_IVS_SCHEMA = "qid long, lo long, hi long, solid boolean"
-_BUCKETED_SCHEMA = _IVS_SCHEMA + ", bucket long"
+_BUCKETED_SCHEMA = "qid long, lo long, hi long, solid boolean, bucket long"
 _SAMPLE_BOXES = 64  # boxes (lowest qids) the distributed form sets the bucket width by
 # Local box relations up to this size decompose on the driver.  Measured
 # through a broadcast of the result on a 4-vCPU host: 2k boxes 377 ms on
@@ -232,16 +211,6 @@ _DRIVER_BOXES = 4_000
 def _corner_cols(ndims: int) -> tuple[list[str], list[str]]:
     dims = ("x", "y", "z")[:ndims]
     return [f"{d}0" for d in dims], [f"{d}1" for d in dims]
-
-
-def _box_frame(boxes) -> tuple[pd.DataFrame, int]:
-    """(the dict-form batch as a boxes_df-shaped frame, ndims)."""
-    ndims = len(boxes[0]["mins"]) if boxes else 2
-    lo_cols, hi_cols = _corner_cols(ndims)
-    corners = np.array([(*b["mins"], *b["maxs"]) for b in boxes], np.int64)
-    pdf = pd.DataFrame(corners.reshape(len(boxes), 2 * ndims), columns=lo_cols + hi_cols)
-    pdf.insert(0, "qid", np.array([b["qid"] for b in boxes], np.int64))
-    return pdf, ndims
 
 
 def _decompose_frame(pdf: pd.DataFrame, ndims: int, bits: int, budget: int) -> pd.DataFrame:
@@ -274,56 +243,37 @@ def _bucket_shift(bucket_shift, ivs: pd.DataFrame | None, ndims: int, bits: int)
     return bucket_shift_for(ivs["lo"], ivs["hi"], ndims * bits)
 
 
-def intervals_df(spark, boxes, bits: int = 30, budget: int = 64) -> DataFrame:
-    """Decompose a batch of boxes into one interval relation.
-
-    `boxes` is a list of dicts with keys qid, mins, maxs.  Output schema:
-    (qid, lo, hi, solid) — small (<= budget * n_boxes rows), meant to be
-    broadcast.  One :func:`decompose_boxes` call decomposes the batch.
-    """
-    pdf, ndims = _box_frame(boxes)
-    return spark.createDataFrame(_decompose_frame(pdf, ndims, bits, budget), _IVS_SCHEMA)
-
-
-def bucketed_intervals_df(
-    spark,
-    boxes,
+def bucketed_intervals(
+    boxes: pd.DataFrame,
+    *,
+    ndims: int = 2,
     bits: int = 30,
     budget: int = 16,
     bucket_shift: int | None = None,
-):
-    """Decompose a box batch and explode each interval onto the prefix
-    buckets it overlaps.  Returns (ivs_df, bucket_shift).
+) -> tuple[pd.DataFrame, int]:
+    """A box batch held by the driver, decomposed and exploded onto the
+    prefix buckets each interval overlaps: (the (qid, lo, hi, solid,
+    bucket) frame, bucket_shift).  `boxes` has columns qid, x0, y0[, z0],
+    x1, y1[, z1]; other columns are ignored.
 
-    Purpose: turn the point-x-interval *range* join (which Spark executes
-    as BroadcastNestedLoopJoin — O(points x intervals), hopeless at
-    10^12 x 10^6) into a plain **equi-join on bucket id** (hash join,
-    shuffle-free with a broadcast build side); each point probes exactly
-    one bucket.
+    The buckets turn the point-x-interval *range* join (a nested loop,
+    O(points x intervals)) into an equi-join on bucket id
+    (:func:`bbox_join_bucketed`); each point probes exactly one bucket.
 
     Bucket width: unless `bucket_shift` is given, the smallest shift at
     which the batch's intervals explode into at most 2 bucket rows per
-    interval (:func:`bucket_shift_for`).  The whole batch is measured,
-    so the bound holds exactly and a batch near it cannot flip between
-    widths from one sample to the next (on perfbench's 2k-box batches
-    the 64 lowest-qid boxes chose shift 21, 65k rows, for 15% of
-    batches and 22, 45k rows, for the rest; the whole batch always
-    gives 22).  A width set
-    from the median interval span instead let a batch's large boxes
+    interval (:func:`bucket_shift_for`).  The whole batch is measured, so
+    the bound holds exactly (on perfbench's 2k-box batches the 64
+    lowest-qid boxes chose shift 21, 65k rows, for 15% of batches and 22,
+    45k rows, for the rest; the whole batch always gives 22).  A width
+    set from the median interval span instead let a batch's large boxes
     explode: 41 bucket rows per interval on a 2k-box batch of sides
-    100/1k/10k.  Decomposition is one :func:`decompose_boxes` call and
-    the buckets come from :func:`explode_buckets`; the relation reaches
-    Spark through pandas/Arrow.
-    """
-    pdf, ndims = _box_frame(boxes)
-    return _bucketed_local(spark, pdf, ndims, bits, budget, bucket_shift)
-
-
-def _bucketed_local(spark, pdf: pd.DataFrame, ndims: int, bits: int, budget: int, bucket_shift):
-    """The bucketed relation of the boxes in `pdf`, built on the driver."""
-    ivs = _decompose_frame(pdf, ndims, bits, budget)
+    100/1k/10k.  Decomposition is one :func:`decompose_boxes` call.  A
+    box clipped to nothing (x0 > x1) has no intervals, so a batch of
+    only such boxes gives an empty frame."""
+    ivs = _decompose_frame(boxes, ndims, bits, budget)
     shift = _bucket_shift(bucket_shift, ivs, ndims, bits)
-    return spark.createDataFrame(_with_buckets(ivs, shift), _BUCKETED_SCHEMA), shift
+    return _with_buckets(ivs, shift), shift
 
 
 def _local_rows(df: DataFrame, limit: int) -> list | None:
@@ -344,34 +294,35 @@ def bucketed_intervals_dist(
     bucket_shift: int | None = None,
     coord_cols: tuple[str, ...] = ("x", "y"),
 ) -> tuple[DataFrame, int]:
-    """Distributed box-batch decomposition: the mapInPandas form of
-    :func:`bucketed_intervals_df` for LARGE batches (the reference's
-    gentest.awk workload is 10^5 boxes; here decomposition runs inside
-    executors, one :func:`decompose_boxes` call per Arrow batch, and the
-    driver never materializes a row).
-
-    `boxes` schema: (qid, x0, y0[, z0], x1, y1[, z1]).  Returns
-    (ivs_bucketed, bucket_shift) with the same (qid, lo, hi, solid,
-    bucket) contract as the driver-side form — pytest-checked identical.
-
-    bucket_shift, when not given, follows the driver form's rule on a
-    deterministic sample (the 64 lowest qids, one collect) — an O(1)
-    driver cost independent of batch size.
+    """The bucketed interval relation of the box batch `boxes` (schema
+    qid, x0, y0[, z0], x1, y1[, z1]): (ivs_bucketed, bucket_shift), with
+    the (qid, lo, hi, solid, bucket) rows of :func:`bucketed_intervals`,
+    for :func:`bbox_join_bucketed`.
 
     A small batch the driver already holds (a local relation of at most
     4,000 boxes, e.g. one built from a pandas frame) is decomposed on
-    the driver instead, by the driver form's code: a Python-worker job
-    costs ~300 ms of fixed overhead on a 4-vCPU host, while the kernel
-    takes ~30 ms for 2,000 boxes.  Larger batches go to the executors,
-    where the kernel runs in parallel."""
+    the driver by :func:`bucketed_intervals`, and its relation reaches
+    Spark through pandas/Arrow: a Python-worker job costs ~300 ms of
+    fixed overhead on a 4-vCPU host, while the kernel takes ~30 ms for
+    2,000 boxes.
+
+    Any other batch is decomposed in the executors (mapInPandas, one
+    :func:`decompose_boxes` call per Arrow batch; the reference's
+    gentest.awk workload is 10^5 boxes), and the driver never
+    materializes a row.  bucket_shift, when not given, follows the
+    driver form's rule on a deterministic sample (the 64 lowest qids,
+    one collect) — an O(1) driver cost independent of batch size.  Both
+    forms emit the same rows at the same shift (pytest-checked)."""
     ndims = len(coord_cols)
     lo_cols, hi_cols = _corner_cols(ndims)
     cols = ["qid", *lo_cols, *hi_cols]
     sel = boxes.select(*cols)
     rows = _local_rows(sel, _DRIVER_BOXES)
     if rows is not None:
-        pdf = pd.DataFrame(rows, columns=cols)
-        return _bucketed_local(boxes.sparkSession, pdf, ndims, bits, budget, bucket_shift)
+        bivs, shift = bucketed_intervals(
+            pd.DataFrame(rows, columns=cols), ndims=ndims, bits=bits, budget=budget, bucket_shift=bucket_shift
+        )
+        return boxes.sparkSession.createDataFrame(bivs, _BUCKETED_SCHEMA), shift
     sample = None
     if bucket_shift is None:
         rows = sel.orderBy("qid").limit(_SAMPLE_BOXES).collect()
@@ -430,38 +381,6 @@ def bbox_join_bucketed(
     )
 
 
-def bbox_join(
-    points: DataFrame,
-    boxes_df: DataFrame,
-    ivs: DataFrame,
-    *,
-    zkey_col: str = "zkey",
-    coord_cols: tuple[str, ...] = ("x", "y"),
-) -> DataFrame:
-    """Box-batch spatial join: every point joined to every box containing it.
-
-    `boxes_df` schema: (qid, x0, y0[, z0], x1, y1[, z1]); `ivs` from
-    :func:`intervals_df`.  Plan: broadcast-range-join points x intervals
-    (a point matches at most a handful of intervals since intervals are
-    disjoint per qid), then exact refinement against the box corners.
-    One scan of `points` answers the whole batch — the scalable analog of
-    calling the reference SRF 10^5 times (gentest.awk workload).
-    """
-    k = F.col(zkey_col)
-    cand = points.join(
-        F.broadcast(ivs),
-        (k >= F.col("lo")) & (k <= F.col("hi")),
-        "inner",
-    )
-    cand = cand.join(F.broadcast(boxes_df), "qid", "inner")
-    pred = F.lit(True)
-    dims = ("x", "y", "z")[: len(coord_cols)]
-    for c, d in zip(coord_cols, dims):
-        pred = pred & F.col(c).between(F.col(f"{d}0"), F.col(f"{d}1"))
-    # solid intervals need no refinement (every key in them is in the box)
-    return cand.filter(F.col("solid") | pred)
-
-
 def count_hits(boxes_df: DataFrame, hits: DataFrame) -> DataFrame:
     """Per-box hit counts (0 for empty boxes) from a spatial-join result.
 
@@ -471,10 +390,3 @@ def count_hits(boxes_df: DataFrame, hits: DataFrame) -> DataFrame:
     ones = hits.selectExpr("qid", "1 AS _hit")
     zeros = boxes_df.selectExpr("qid", "0 AS _hit")
     return ones.unionByName(zeros).groupBy("qid").agg(F.expr("sum(_hit) AS n_hits"))
-
-
-def count_boxes(points: DataFrame, boxes_df: DataFrame, ivs: DataFrame, **kw) -> DataFrame:
-    """Per-box hit counts — the reference's benchmark query shape
-    (gentest.awk:6: `select count(1) ... where x >= ... and y <= ...`),
-    executed as ONE distributed join instead of 10^5 serial lookups."""
-    return count_hits(boxes_df, bbox_join(points, boxes_df, ivs, **kw))

@@ -14,9 +14,10 @@ Scale design (round-2 rework per VERDICT #4):
   manifest when available, else from an explicit hint, else a cheap
   constant-density guess.  A full count before any work is the wrong
   plan at 10^12 rows.
-* When a materialized zkey-sorted store is given, each round reads only
-  the manifest-pruned files overlapping the round's boxes (the B-tree
-  descent) instead of re-scanning the whole table.
+* When a materialized zkey-sorted store is given, each round of
+  :func:`knn` and of a driver-held batch reads only the manifest-pruned
+  files overlapping the round's boxes (the B-tree descent) instead of
+  re-scanning the whole table.
 
 Two shapes:
 
@@ -32,8 +33,8 @@ Two shapes:
   candidates come back through Arrow and are ranked in numpy — three
   jobs per round (the broadcasts of the interval and box relations,
   and the join).  A larger batch runs distributed rounds (mapInPandas
-  decomposition, manifest-relation pruning, a window top-k and a
-  per-qid coverage aggregate, with a checkpoint and a count() per
+  decomposition, a bucketed join over the whole store, a window top-k
+  and a per-qid coverage aggregate, with a checkpoint and a count() per
   round): several jobs per round, but nothing proportional to the
   batch is collected — the 10^4-10^6-query shape.
 
@@ -242,8 +243,8 @@ def knn_batch(
     :func:`knn` builds one predicate term per query, fine for 16
     queries, wrong for 10^6).  Same result contract as :func:`knn`:
     (qid, rank, pid, x, y, d2), rank by squared Euclidean distance with
-    (pid, x, y) tiebreak.  Reads the store at ``store_path`` (pruned by
-    its manifest) or else ``points``; one of them is required.
+    (pid, x, y) tiebreak.  Reads the store at ``store_path`` or else
+    ``points``; one of them is required.
 
     **Driver form** (at most 4,000 queries).  The batch is collected:
     with no job when its plan is a local relation (built from a pandas
@@ -264,14 +265,14 @@ def knn_batch(
 
     **Distributed form** (above 4,000 queries).  Boxes are Column
     expressions over the pending relation, decomposition runs as
-    mapInPandas (bucketed_intervals_dist), store file pruning joins the
-    manifest relation against the interval relation (read_pruned_df —
-    driver cost O(files), not O(queries)), candidates come from one
-    bucketed equi-join, and coverage is decided by a per-qid aggregate.
-    Nothing proportional to the batch is collected, but each round runs
-    several jobs (a 500-query call ~23): a checkpoint and a count() of
-    the pending relation, the decomposition sample, the file pruning and
-    the top-k.
+    mapInPandas (bucketed_intervals_dist), candidates come from one
+    bucketed equi-join against the whole store (:func:`read_store`; at
+    the first radius a uniform batch this large touches every file of a
+    16-file store anyway, but later rounds, with few queries pending,
+    scan every file too), and coverage is decided by a per-qid
+    aggregate.  Nothing proportional to the batch is collected, but each
+    round runs several jobs: a checkpoint and a count() of the pending
+    relation, the decomposition sample and the top-k.
 
     ``checkpointer`` cuts lineage between distributed rounds so round
     N's plan does not replay rounds 1..N-1.  Default is
@@ -285,15 +286,13 @@ def knn_batch(
     """
     from functools import reduce
 
-    from ..sources.manifest import read_pruned_df
+    from ..sources.store import read_store, store_total_rows
     from .bbox import _DRIVER_BOXES, _local_rows, bbox_join_bucketed, bucketed_intervals_dist
 
     if points is None and store_path is None:
         raise ValueError("knn_batch needs `points` or `store_path`; both are None")
     spark = queries.sparkSession
     if store_path is not None and n_points_hint is None:
-        from ..sources.store import store_total_rows
-
         n_points_hint = store_total_rows(store_path)
     if n_points_hint is None:
         n_points_hint = 1_000_000
@@ -342,10 +341,7 @@ def knn_batch(
                 boxes, bits=bits, budget=budget, bucket_shift=shift
             )
         small = n_pending <= broadcast_threshold
-        if not small:
-            # the interval relation feeds two consumers (prune + join)
-            bivs = ckpt(bivs)
-        src = read_pruned_df(spark, store_path, bivs) if store_path is not None else points
+        src = read_store(spark, store_path) if store_path is not None else points
         cand = bbox_join_bucketed(
             src,
             boxes,
@@ -405,20 +401,20 @@ def _knn_batch_local(
 ) -> DataFrame:
     """:func:`knn_batch`'s driver form over the batch `queries`."""
     from ..sources.manifest import read_pruned
-    from .bbox import _BUCKETED_SCHEMA, _bucket_shift, _decompose_frame, _with_buckets, bbox_join_bucketed
+    from .bbox import bbox_join_bucketed, bucketed_intervals
 
     if len(queries) and queries["k"].min() < 1:
         bad = queries.loc[queries["k"].idxmin()]
         raise ValueError(f"knn_batch: k must be >= 1, got k={bad['k']} for qid {bad['qid']}")
 
     def answer(boxes: pd.DataFrame) -> pd.DataFrame:
-        ivs = _decompose_frame(boxes, 2, bits, budget)
-        if ivs.empty:  # every box clipped away: its query lies off the domain
+        bivs, shift = bucketed_intervals(boxes, bits=bits, budget=budget)
+        if bivs.empty:  # every box clipped away: its query lies off the domain
             return pd.DataFrame({c: np.empty(0, np.int64) for c in KNN_COLS})
-        shift = _bucket_shift(None, ivs, 2, bits)
-        src = read_pruned(spark, store_path, ivs) if store_path is not None else points
-        bivs = spark.createDataFrame(_with_buckets(ivs, shift), _BUCKETED_SCHEMA)
-        cand = bbox_join_bucketed(src, spark.createDataFrame(boxes), bivs, shift, zkey_col=zkey_col)
+        src = read_pruned(spark, store_path, bivs) if store_path is not None else points
+        cand = bbox_join_bucketed(
+            src, spark.createDataFrame(boxes), spark.createDataFrame(bivs), shift, zkey_col=zkey_col
+        )
         d2 = "(x - qx) * (x - qx) + (y - qy) * (y - qy) AS d2"
         return _top_k(cand.selectExpr("qid", "pid", "x", "y", d2).toPandas(), boxes)
 

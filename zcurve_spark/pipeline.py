@@ -18,11 +18,11 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.bbox import bbox_join_bucketed, bucketed_intervals_df, count_hits
+from .operators.bbox import bbox_join_bucketed, bucketed_intervals_dist, count_hits
 from .operators.tiles import assign_tiles
 from .sources.interleaved import explode_spans, interleaved_docs, with_span_geo
 from .sources.manifest import StageRunner, load_manifest
-from .sources.points import boxes_df
+from .sources.points import boxes_local_df
 
 
 def _fingerprint(sf_dir: str, **params) -> str:
@@ -87,8 +87,8 @@ def run_pipeline(
         ]
         for b in boxes:
             b["maxs"] = (b["mins"][0] + n // 8 - 1, b["mins"][1] + n // 8 - 1)
-    bdf = boxes_df(spark, boxes)
-    bivs, shift = bucketed_intervals_df(spark, boxes, bits=bits, budget=16)
+    bdf = boxes_local_df(spark, boxes)
+    bivs, shift = bucketed_intervals_dist(bdf, bits=bits, budget=16)
     hits = bbox_join_bucketed(spans, bdf, bivs, shift, coord_cols=("qx", "qy"))
     box_counts = {r["qid"]: r["n_hits"] for r in count_hits(bdf, hits).collect()}
 

@@ -242,36 +242,6 @@ def prune_files(manifest: dict, intervals) -> list[str]:
     return [f["file"] for f, h in zip(files, hit) if h]
 
 
-def read_pruned_df(spark: SparkSession, path: str, ivs_df: DataFrame) -> DataFrame:
-    """Distributed manifest pruning: the file min/max relation (tiny —
-    one row per file) is broadcast against an INTERVAL DATAFRAME and the
-    surviving file names collected — driver cost O(matched files),
-    independent of how many queries/intervals produced `ivs_df` (the
-    set-oriented analog of :func:`read_pruned` for 10^4+-query batches).
-    `ivs_df` needs (lo, hi) columns; duplicates are harmless."""
-    manifest = load_manifest(path)
-    if manifest is None:
-        return spark.read.parquet(path)
-    frows = [
-        (f["file"], int(f["zkey_min"]), int(f["zkey_max"]))
-        for f in manifest["files"]
-        if f["zkey_min"] is not None
-    ]
-    # through pandas/Arrow: a local relation, not an RDD of pickled rows
-    fdf = spark.createDataFrame(
-        pd.DataFrame(frows, columns=["file", "kmin", "kmax"]), "file string, kmin long, kmax long"
-    )
-    names = [
-        r["file"]
-        for r in ivs_df.select("lo", "hi")
-        .join(F.broadcast(fdf), (F.col("kmin") <= F.col("hi")) & (F.col("kmax") >= F.col("lo")))
-        .select("file")
-        .distinct()
-        .collect()
-    ]
-    return _open_files(spark, path, manifest, sorted(names))
-
-
 def read_pruned(spark: SparkSession, path: str, intervals) -> DataFrame:
     """Read only the files that can contain keys in `intervals`; callers
     still apply the interval/refinement predicates (row-group pruning +
@@ -290,11 +260,9 @@ def _open_files(spark: SparkSession, path: str, manifest: dict, names: list[str]
     schema when it has one; no names -> an empty DataFrame of that schema."""
     reader = spark.read
     if "schema" in manifest:
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
-        if not names:
-            return spark.createDataFrame([], schema)
-        reader = reader.schema(schema)
+        reader = reader.schema(StructType.fromJson(json.loads(manifest["schema"])))
     if not names:
+        # an empty local relation: collecting it runs no job
         return reader.parquet(path).limit(0)
     return reader.parquet(*[os.path.join(path, n) for n in names])
 

@@ -14,6 +14,7 @@ would overflow — at the sandbox SFs max l_orderkey ~ 6*10^6, products
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,27 +91,33 @@ def unaligned_boxes(n: int, ndims: int = 2) -> list[dict]:
     return boxes
 
 
+def _box_cols(boxes: list[dict]) -> list[str]:
+    dims = ("x", "y", "z")[: len(boxes[0]["mins"])]
+    return ["qid", *(f"{d}0" for d in dims), *(f"{d}1" for d in dims)]
+
+
 def boxes_df(spark: SparkSession, boxes: list[dict]) -> DataFrame:
-    ndims = len(boxes[0]["mins"])
-    dims = ("x", "y", "z")[:ndims]
+    """The box batch as (qid, x0, y0[, z0], x1, y1[, z1]) rows built from
+    a list: an RDD, which ``bucketed_intervals_dist`` decomposes in the
+    executors."""
     rows = [
         tuple([b["qid"]] + [int(v) for v in b["mins"]] + [int(v) for v in b["maxs"]])
         for b in boxes
     ]
-    schema = (
-        "qid long, "
-        + ", ".join(f"{d}0 long" for d in dims)
-        + ", "
-        + ", ".join(f"{d}1 long" for d in dims)
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, ", ".join(f"{c} long" for c in _box_cols(boxes)))
+
+
+def boxes_local_df(spark: SparkSession, boxes: list[dict]) -> DataFrame:
+    """:func:`boxes_df` built through pandas/Arrow: a local relation the
+    driver holds, which ``bucketed_intervals_dist`` decomposes on the
+    driver."""
+    rows = [[b["qid"], *b["mins"], *b["maxs"]] for b in boxes]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=_box_cols(boxes), dtype="int64"))
 
 
 def boxes_values_sql(boxes: list[dict]) -> str:
     """The same boxes as an inline SQL VALUES relation (for oracles)."""
-    ndims = len(boxes[0]["mins"])
-    dims = ("x", "y", "z")[:ndims]
-    cols = ["qid"] + [f"{d}0" for d in dims] + [f"{d}1" for d in dims]
+    cols = _box_cols(boxes)
     vals = ", ".join(
         "(" + ", ".join(str(v) for v in [b["qid"], *b["mins"], *b["maxs"]]) + ")"
         for b in boxes
