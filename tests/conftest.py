@@ -36,6 +36,32 @@ def jobs_run(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def py4j_calls(fn):
+    """(fn(), number of Py4J round trips it made), counted by wrapping
+    py4j's ClientServerConnection.send_command for the call.  Garbage
+    made earlier is collected first: py4j frees a JVM object with one
+    more round trip whenever Python collects its proxy."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counted(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    ClientServerConnection.send_command = counted
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return out, calls
+
+
 def brute_knn(pdf, q):
     """Top-k of query `q` over the pandas points `pdf` as (pid, x, y, d2)
     tuples, ranked by d2 with the engine's (pid, x, y) tie-break."""

@@ -127,14 +127,32 @@ class TestColumnKernelsMatchNumpy:
         df = spark.createDataFrame(
             pd.DataFrame({"x": x.astype(np.int64), "y": y.astype(np.int64)})
         )
-        out = df.select(
-            C.zkey2_col("x", "y").alias("k"),
-            C.unzkey2_x_col(C.zkey2_col("x", "y")).alias("xd"),
-            C.unzkey2_y_col(C.zkey2_col("x", "y")).alias("yd"),
-        ).toPandas()
+        out = (
+            df.select(C.zkey2_col("x", "y").alias("k"))
+            .select("k", C.unzkey2_x_col("k").alias("xd"), C.unzkey2_y_col("k").alias("yd"))
+            .toPandas()
+        )
         assert (out.k.to_numpy(np.uint64) == ck.zkey2(x, y)).all()
         assert (out.xd.to_numpy(np.uint64) == x).all()
         assert (out.yd.to_numpy(np.uint64) == y).all()
+
+    def test_zkey2_col_is_one_sql_string(self, spark):
+        """The key is parsed from one SQL string: a handful of Py4J round
+        trips, where a Column built node by node (and `F.lit` of the byte
+        tables, one trip per element) made ~2,700."""
+        from tests.conftest import py4j_calls
+        from zcurve_spark.functions import columns as C
+
+        _, calls = py4j_calls(lambda: C.zkey2_col("x", "y"))
+        assert calls <= 20
+
+    def test_key_builders_take_column_names(self, spark):
+        from pyspark.sql import functions as F
+
+        from zcurve_spark.functions import columns as C
+
+        with pytest.raises(TypeError, match="column name"):
+            C.zkey2_col(F.col("x"), "y")
 
     def test_zkey3(self, spark, rng):
         import pandas as pd

@@ -105,6 +105,16 @@ class TestTilePyramid:
         assert plan.count("Exchange hashpartitioning") == 2, plan
         assert "Union" not in plan, plan
 
+    def test_plan_is_built_in_few_py4j_calls(self, spark):
+        """The plan is one SQL statement over the input: a handful of Py4J
+        round trips (at most 100 here), where the same plan built Column
+        by Column made ~500."""
+        from tests.conftest import py4j_calls
+
+        pts = _pts(spark, 0, 100)
+        _, calls = py4j_calls(lambda: tile_pyramid(pts, levels=(4, 8, 12), bits=20, value_col="v"))
+        assert calls <= 100
+
     def test_empty_levels_raises(self, spark):
         with pytest.raises(ValueError):
             tile_pyramid(_pts(spark, 0, 10), levels=())

@@ -1,16 +1,22 @@
 """Pure-Column (JVM-side) curve-key expressions — the hot path.
 
-The 2D Morton interleave is expressible entirely with built-in bitwise
-Column functions, so encoding a zkey for 10^12 rows never leaves
-whole-stage codegen: no Python, no Arrow transfer, vectorized Parquet in,
-codegen'd expressions through.  These mirror the numpy kernels in
-``curvekey.py`` bit-for-bit (property-tested against each other), which
-in turn mirror the reference layout (bitkey.c:76-97: x on even bits, y on
-odd bits; bitkey.c:386-417 for the 3D triples).
+The 2D Morton interleave is expressible entirely with built-in SQL
+functions, so encoding a zkey for 10^12 rows never leaves whole-stage
+codegen: no Python, no Arrow transfer, vectorized Parquet in, codegen'd
+expressions through.  These mirror the numpy kernels in ``curvekey.py``
+bit-for-bit (property-tested against each other), which in turn mirror
+the reference layout (bitkey.c:76-97: x on even bits, y on odd bits;
+bitkey.c:386-417 for the 3D triples).
+
+Each key is written as ONE SQL string and parsed by one ``F.expr``: a
+Column built node by node costs one Py4J round trip per node, and
+``F.lit(list)`` one per element (``zkey2_col`` built that way made
+~2,700 round trips, 0.4–1.0 s of driver time per call).  The key builders
+therefore take column NAMES.
 
 Use these in every DataFrame plan; the pandas UDFs in ``udfs.py`` exist
 only for ops a Column expression can't reach (Hilbert rotation state
-machine, polygon refinement).
+machine).
 """
 
 from __future__ import annotations
@@ -18,76 +24,31 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_SPREAD2_STEPS = (
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-)
-
-_SPREAD3_STEPS = (
-    (32, 0x1F00000000FFFF),
-    (16, 0x1F0000FF0000FF),
-    (8, 0x100F00F00F00F00F),
-    (4, 0x10C30C30C30C30C3),
-    (2, 0x1249249249249249),
-)
-
 
 def _as_col(c) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def _quoted(name: str) -> str:
+    """A column name as a back-quoted SQL identifier (a Column has no SQL
+    text to splice, so the string builders refuse one)."""
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column name, got {type(name).__name__}")
+    return "`" + name.replace("`", "``") + "`"
+
+
 # Byte lookup tables (the reference's nibble-LUT idea, bitkey.c:23-25,
 # widened to bytes): spread of each byte value precomputed as a literal
-# array.  Column expressions stay FLAT — a shift-or chain duplicates its
-# input subtree at every step, and when Catalyst inlines such a column
-# into a join key / isnotnull filter the copied tree grows 2^steps and
-# falls out of efficient codegen (measured: 20s vs 4s on a 32M-row
-# broadcast join probe).
-def _spread2_byte(b: int) -> int:
+# array.  Expressions stay FLAT — a shift-or chain duplicates its input
+# subtree at every step, and when Catalyst inlines such a column into a
+# join key / isnotnull filter the copied tree grows 2^steps and falls out
+# of efficient codegen (measured: 20s vs 4s on a 32M-row broadcast join
+# probe).
+def _spread_byte(b: int, stride: int) -> int:
     v = 0
     for i in range(8):
-        v |= ((b >> i) & 1) << (2 * i)
+        v |= ((b >> i) & 1) << (stride * i)
     return v
-
-
-def _spread3_byte(b: int) -> int:
-    v = 0
-    for i in range(8):
-        v |= ((b >> i) & 1) << (3 * i)
-    return v
-
-
-_LUT2 = [_spread2_byte(b) for b in range(256)]
-_LUT3 = [_spread3_byte(b) for b in range(256)]
-
-
-def spread2_col(v) -> Column:
-    """Bit-spread a <2^32 integer column: bit i -> bit 2i (JVM-side).
-
-    Four byte-LUT lookups on a literal array — each input reference is a
-    leaf, so the expression tree is linear however Catalyst inlines it.
-    """
-    v = _as_col(v).cast("long")
-    lut = F.lit(_LUT2)
-    out = None
-    for k in range(4):
-        byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))
-        part = F.element_at(lut, (byte + 1).cast("int")).cast("long")
-        term = F.shiftleft(part, 16 * k) if k else part
-        out = term if out is None else out.bitwiseOR(term)
-    return out
-
-
-def zkey2_col(x, y) -> Column:
-    """2D Morton key Column; layout of bitkey.c:76-97 (x even, y odd bits).
-
-    Inputs must be non-negative and < 2^31 per dim; output < 2^62, a
-    sort-safe non-negative LongType.
-    """
-    return spread2_col(x).bitwiseOR(F.shiftleft(spread2_col(y), 1)).alias("zkey")
 
 
 def _compact2_byte(b: int) -> int:
@@ -98,53 +59,82 @@ def _compact2_byte(b: int) -> int:
     return v
 
 
-_LUT2_INV = [_compact2_byte(b) for b in range(256)]
+def _array_sql(values) -> str:
+    return "array(" + ", ".join(map(str, values)) + ")"
 
 
-def compact2_col(v) -> Column:
+_LUT2 = _array_sql(_spread_byte(b, 2) for b in range(256))
+_LUT3 = _array_sql(_spread_byte(b, 3) for b in range(256))
+_LUT2_INV = _array_sql(_compact2_byte(b) for b in range(256))
+
+
+def _lut_sql(v: str, lut: str, nbytes: int, width: int) -> str:
+    """OR of `nbytes` byte lookups on the long expression `v`: byte k
+    indexes the literal array `lut` and its entry lands at bit width*k."""
+    out = None
+    for k in range(nbytes):
+        part = f"CAST(element_at({lut}, CAST(((shiftrightunsigned({v}, {8 * k}) & 255) + 1) AS INT)) AS BIGINT)"
+        term = f"shiftleft({part}, {width * k})" if k else part
+        out = term if out is None else f"({out} | {term})"
+    return out
+
+
+def _spread2_sql(name: str) -> str:
+    return _lut_sql(f"CAST({_quoted(name)} AS BIGINT)", _LUT2, 4, 16)
+
+
+def _spread3_sql(name: str) -> str:
+    return _lut_sql(f"(CAST({_quoted(name)} AS BIGINT) & 2097151)", _LUT3, 3, 24)
+
+
+def _compact2_sql(v: str) -> str:
+    """Even bits of the SQL expression `v` (cast to long), gathered."""
+    return _lut_sql(f"CAST({v} AS BIGINT)", _LUT2_INV, 8, 4)
+
+
+def spread2_col(v: str) -> Column:
+    """Bit-spread a <2^32 integer column: bit i -> bit 2i (JVM-side).
+
+    Four byte-LUT lookups on a literal array — each input reference is a
+    leaf, so the expression tree is linear however Catalyst inlines it.
+    """
+    return F.expr(_spread2_sql(v))
+
+
+def zkey2_col(x: str, y: str) -> Column:
+    """2D Morton key Column; layout of bitkey.c:76-97 (x even, y odd bits).
+
+    Inputs must be non-negative and < 2^31 per dim; output < 2^62, a
+    sort-safe non-negative LongType.
+    """
+    return F.expr(f"({_spread2_sql(x)} | shiftleft({_spread2_sql(y)}, 1)) AS zkey")
+
+
+def compact2_col(v: str) -> Column:
     """Inverse spread: gather even bits of a long column (decode helper).
     Eight byte-LUT lookups — flat tree, same rationale as spread2_col."""
-    v = _as_col(v).cast("long")
-    lut = F.lit(_LUT2_INV)
-    out = None
-    for k in range(8):
-        byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))
-        part = F.element_at(lut, (byte + 1).cast("int")).cast("long")
-        term = F.shiftleft(part, 4 * k) if k else part
-        out = term if out is None else out.bitwiseOR(term)
-    return out
+    return F.expr(_compact2_sql(_quoted(v)))
 
 
-def unzkey2_x_col(k) -> Column:
-    return compact2_col(_as_col(k))
+def unzkey2_x_col(k: str) -> Column:
+    return compact2_col(k)
 
 
-def unzkey2_y_col(k) -> Column:
-    return compact2_col(F.shiftrightunsigned(_as_col(k).cast("long"), 1))
+def unzkey2_y_col(k: str) -> Column:
+    return F.expr(_compact2_sql(f"shiftrightunsigned(CAST({_quoted(k)} AS BIGINT), 1)"))
 
 
-def spread3_col(v) -> Column:
+def spread3_col(v: str) -> Column:
     """Bit-spread a <2^21 integer column: bit i -> bit 3i (JVM-side).
     Three byte-LUT lookups — flat tree, same rationale as spread2_col."""
-    v = _as_col(v).cast("long").bitwiseAND(F.lit(0x1FFFFF))
-    lut = F.lit(_LUT3)
-    out = None
-    for k in range(3):
-        byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))
-        part = F.element_at(lut, (byte + 1).cast("int")).cast("long")
-        term = F.shiftleft(part, 24 * k) if k else part
-        out = term if out is None else out.bitwiseOR(term)
-    return out
+    return F.expr(_spread3_sql(v))
 
 
-def zkey3_col(x, y, z) -> Column:
+def zkey3_col(x: str, y: str, z: str) -> Column:
     """3D Morton key Column for coords < 2^21 (63-bit key; bitkey.c:386-417
     layout: bit 3i=z, 3i+1=y, 3i+2=x)."""
-    return (
-        F.shiftleft(spread3_col(x), 2)
-        .bitwiseOR(F.shiftleft(spread3_col(y), 1))
-        .bitwiseOR(spread3_col(z))
-        .alias("zkey3")
+    return F.expr(
+        f"((shiftleft({_spread3_sql(x)}, 2) | shiftleft({_spread3_sql(y)}, 1)) | {_spread3_sql(z)}) AS zkey3"
     )
 
 

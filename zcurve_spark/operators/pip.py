@@ -2,10 +2,20 @@
 
 SURVEY.md §2.7 construction: a polygon's covering tile set at an
 adaptively chosen level is the generalization of the box decomposition
-(each tile = a solid curve interval); candidates come from a broadcast
-tile equi-join, and the exact test is a vectorized ray-casting kernel in
-an Arrow-batched pandas UDF — exact because all arithmetic is int64 cross
-products (coords < 2^20, products < 2^42), no float rounding.
+(each tile = a solid curve interval).  Each polygon's tiles are
+classified once, on the driver, in one numpy pass (the interior/boundary
+cells of Raster Intervals): *interior* tiles accept every point they
+hold, *boundary* tiles send theirs to the exact test, *outside* tiles
+are dropped.  Candidates come from an equi-join on the tile id against
+a broadcast cover relation built from pandas through Arrow (a local
+relation), and the exact test is a JVM ray cast — two SQL ``aggregate``
+lambdas over the tile's edges, no Python worker.  It is exact because
+all arithmetic is int64 cross products (coords < 2^20, products <
+2^42), no float rounding.
+
+The whole plan is built from a few SQL strings: a Column built node by
+node costs one Py4J round trip per node, and the per-tile Python
+classifier made one per tile.
 
 Boundary semantics: points on a polygon edge or vertex count as INSIDE
 (matches the closed-box convention of the reference, bitkey.c:52-55, and
@@ -14,13 +24,15 @@ the convex-polygon half-plane oracle `cross >= 0`).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.columns import tile_id_col
+from ..functions.columns import _quoted, tile_id_col
+from ..functions.curvekey import unzkey2
 from ..plans.decompose import covering_tiles, pick_cover_level
 
 
@@ -58,102 +70,101 @@ def _pip_kernel(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray
     return inside | on_edge
 
 
-def pip_refine_expr(x, y, edges) -> "F.Column":
-    """Exact inside-or-boundary test as a pure Column expression.
+def pip_refine_sql(x: str, y: str, edges: str) -> str:
+    """Exact inside-or-boundary test of the point (`x`, `y`) as one SQL
+    predicate; `edges` is an array<struct<ex,ey,fx,fy>> column.
 
-    `edges` is an array<struct<ex,ey,fx,fy>> column; ray casting runs as a
-    JVM higher-order aggregate over <=12 edges per candidate — no Python,
-    no Arrow transfer.  Integer cross products are exact (coords < 2^20).
-    """
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-
-    def crossing(acc, e):
-        cond = (e.ey > y) != (e.fy > y)
-        lhs = (x - e.ex) * (e.fy - e.ey)
-        rhs = (e.fx - e.ex) * (y - e.ey)
-        strict = F.when(e.fy > e.ey, lhs < rhs).otherwise(lhs > rhs)
-        return acc + F.when(cond & strict, F.lit(1)).otherwise(F.lit(0))
-
-    def on_edge(acc, e):
-        cross = (e.fx - e.ex) * (y - e.ey) - (e.fy - e.ey) * (x - e.ex)
-        within = (
-            (x >= F.least(e.ex, e.fx)) & (x <= F.greatest(e.ex, e.fx))
-            & (y >= F.least(e.ey, e.fy)) & (y <= F.greatest(e.ey, e.fy))
-        )
-        return acc | ((cross == 0) & within)
-
-    n_cross = F.aggregate(edges, F.lit(0), crossing)
-    edge_hit = F.aggregate(edges, F.lit(False), on_edge)
-    return (n_cross % 2 == 1) | edge_hit
+    Ray casting runs as a JVM higher-order aggregate over the polygon's
+    edges (crossings of the upward ray, counted with `_pip_kernel`'s
+    exact integer comparisons), OR an on-edge aggregate.  Integer cross
+    products are exact (coords < 2^20)."""
+    x, y, edges = _quoted(x), _quoted(y), _quoted(edges)
+    lhs = f"({x} - e.ex) * (e.fy - e.ey)"
+    rhs = f"(e.fx - e.ex) * ({y} - e.ey)"
+    crossing = (
+        f"(e.ey > {y}) <> (e.fy > {y}) "
+        f"AND CASE WHEN e.fy > e.ey THEN {lhs} < {rhs} ELSE {lhs} > {rhs} END"
+    )
+    on_edge = (
+        f"{lhs} = {rhs} "
+        f"AND {x} BETWEEN least(e.ex, e.fx) AND greatest(e.ex, e.fx) "
+        f"AND {y} BETWEEN least(e.ey, e.fy) AND greatest(e.ey, e.fy)"
+    )
+    return (
+        f"(aggregate({edges}, 0, (n, e) -> n + CASE WHEN {crossing} THEN 1 ELSE 0 END) % 2 = 1 "
+        f"OR aggregate({edges}, false, (hit, e) -> hit OR ({on_edge})))"
+    )
 
 
-def _orient(ax, ay, bx, by, cx, cy) -> int:
-    v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-    return (v > 0) - (v < 0)
+def _orient(ax, ay, bx, by, cx, cy) -> np.ndarray:
+    """Sign of the turn a -> b -> c (int64 cross product, exact)."""
+    return np.sign((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))
 
 
-def _seg_intersect(p1, p2, p3, p4) -> bool:
-    """Closed-segment intersection, exact integer arithmetic."""
-    d1 = _orient(*p3, *p4, *p1)
-    d2 = _orient(*p3, *p4, *p2)
-    d3 = _orient(*p1, *p2, *p3)
-    d4 = _orient(*p1, *p2, *p4)
-    if ((d1 > 0) != (d2 > 0) or (d1 == 0) or (d2 == 0)) and (
-        (d3 > 0) != (d4 > 0) or (d3 == 0) or (d4 == 0)
-    ):
-        # conservative (collinear cases resolved by bbox overlap)
-        if max(p1[0], p2[0]) >= min(p3[0], p4[0]) and max(p3[0], p4[0]) >= min(p1[0], p2[0]) \
-           and max(p1[1], p2[1]) >= min(p3[1], p4[1]) and max(p3[1], p4[1]) >= min(p1[1], p2[1]):
-            return True
-    return False
+def classify_tiles(tiles, level: int, bits: int, verts) -> tuple[np.ndarray, np.ndarray]:
+    """(boundary, interior) masks over the level-`level` tile ids `tiles`
+    of the polygon `verts` ((m, 2) ring, closed implicitly).
 
-
-def _seg_rect_intersect(a, b, rx0, ry0, rx1, ry1) -> bool:
-    """Does segment a-b touch the closed rectangle?"""
-    if rx0 <= a[0] <= rx1 and ry0 <= a[1] <= ry1:
-        return True
-    if rx0 <= b[0] <= rx1 and ry0 <= b[1] <= ry1:
-        return True
-    corners = [(rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)]
-    for i in range(4):
-        if _seg_intersect(a, b, corners[i], corners[(i + 1) % 4]):
-            return True
-    return False
-
-
-def classify_tile(tile: int, level: int, bits: int, verts) -> str:
-    """'interior' (whole tile inside polygon), 'boundary' (needs per-point
-    refinement), or 'outside'.
-
-    The per-point hot path only ever touches *boundary* tiles — work is
-    O(polygon perimeter / tile size), not O(area) — the tile analog of
-    the solid-interval fast path (sp_query.c:291-301)."""
-    import numpy as np
-
-    from ..plans.decompose import decode_point
-
+    A tile is *boundary* when some edge touches its closed square: an
+    endpoint lies in it, or the edge meets one of its four sides (closed
+    segments; the orientation signs decide, and a bounding-box overlap
+    settles collinear pairs).  No edge touches any other tile, so it lies
+    wholly inside or wholly outside and its corner decides: *interior*
+    tiles need no per-point work.  One numpy pass over tiles x edges x
+    sides, then one `_pip_kernel` call on every tile's corner.  The
+    per-point hot path only ever touches boundary tiles — work
+    O(perimeter / tile size), not O(area) — the tile analog of the
+    solid-interval fast path (sp_query.c:291-301)."""
+    v = np.asarray(verts, np.int64)
+    tx, ty = unzkey2(np.asarray(tiles, np.uint64))
     shift = bits - level
-    tx, ty = decode_point(tile, 2, level)
-    x0, y0 = tx << shift, ty << shift
+    x0 = (tx.astype(np.int64) << shift)[:, None, None]  # (tiles, 1, 1)
+    y0 = (ty.astype(np.int64) << shift)[:, None, None]
     x1, y1 = x0 + (1 << shift) - 1, y0 + (1 << shift) - 1
-    m = len(verts)
-    for j in range(m):  # any polygon edge touching the tile -> boundary
-        if _seg_rect_intersect(tuple(verts[j]), tuple(verts[(j + 1) % m]), x0, y0, x1, y1):
-            return "boundary"
-    # no edge crosses: tile is uniformly inside or outside; test one corner
-    inside = _pip_kernel(
-        np.array([x0], np.int64), np.array([y0], np.int64), np.asarray(verts, np.int64)
-    )[0]
-    return "interior" if inside else "outside"
+    # edge j runs a -> b: (1, edges, 1)
+    ax, ay = v[None, :, 0, None], v[None, :, 1, None]
+    bx, by = np.roll(ax, -1, axis=1), np.roll(ay, -1, axis=1)
+    # side s of the square runs c -> d, corners counter-clockwise: (tiles, 1, 4)
+    cx, cy = np.concatenate([x0, x1, x1, x0], -1), np.concatenate([y0, y0, y1, y1], -1)
+    dx, dy = np.roll(cx, -1, axis=-1), np.roll(cy, -1, axis=-1)
+    meets = (
+        (_orient(cx, cy, dx, dy, ax, ay) * _orient(cx, cy, dx, dy, bx, by) <= 0)
+        & (_orient(ax, ay, bx, by, cx, cy) * _orient(ax, ay, bx, by, dx, dy) <= 0)
+        & (np.maximum(ax, bx) >= np.minimum(cx, dx)) & (np.maximum(cx, dx) >= np.minimum(ax, bx))
+        & (np.maximum(ay, by) >= np.minimum(cy, dy)) & (np.maximum(cy, dy) >= np.minimum(ay, by))
+    )
+    holds = ((x0 <= ax) & (ax <= x1) & (y0 <= ay) & (ay <= y1))[..., 0]  # endpoint a in the tile
+    boundary = (meets.any(-1) | holds | np.roll(holds, -1, axis=1)).any(-1)
+    interior = ~boundary & _pip_kernel(x0[:, 0, 0], y0[:, 0, 0], v)
+    return boundary, interior
 
 
-def _edges_rows(p: dict) -> list[tuple[int, int, int, int]]:
-    vs = p["vertices"]
-    return [
-        (int(vs[j][0]), int(vs[j][1]), int(vs[(j + 1) % len(vs)][0]), int(vs[(j + 1) % len(vs)][1]))
-        for j in range(len(vs))
-    ]
+_COVER_SCHEMA = (
+    "tile_id long, poly_id long, solid boolean, "
+    "ex array<long>, ey array<long>, fx array<long>, fy array<long>"
+)
+
+
+def _cover_rows(p: dict, bits: int, max_tiles: int) -> tuple[int, pd.DataFrame]:
+    """(cover level, cover rows) of polygon `p`: its kept tiles with the
+    polygon's flat edge arrays on boundary rows and nulls on interior
+    rows, whose points never read them."""
+    v = np.asarray(p["vertices"], np.int64)
+    mins, maxs = tuple(int(c) for c in v.min(0)), tuple(int(c) for c in v.max(0))
+    level = pick_cover_level(mins, maxs, bits=bits, max_tiles=max_tiles)
+    tiles = np.asarray(covering_tiles(mins, maxs, level, bits=bits, max_tiles=4 * max_tiles), np.int64)
+    boundary, interior = classify_tiles(tiles, level, bits, v)
+    keep = boundary | interior
+    f = np.roll(v, -1, axis=0)
+    edges = {"ex": v[:, 0].tolist(), "ey": v[:, 1].tolist(), "fx": f[:, 0].tolist(), "fy": f[:, 1].tolist()}
+    return level, pd.DataFrame(
+        {
+            "tile_id": tiles[keep],
+            "poly_id": np.int64(p["poly_id"]),
+            "solid": interior[keep],
+            **{c: [None if s else e for s in interior[keep]] for c, e in edges.items()},
+        }
+    )
 
 
 def pip_join(
@@ -163,94 +174,44 @@ def pip_join(
     zkey_col: str = "zkey",
     bits: int = 20,
     max_tiles: int = 256,
-    method: str = "expr",
 ) -> DataFrame:
     """Join each point to every polygon containing it.
 
     `polygons`: dicts {poly_id, vertices: [(x, y), ...]} (driver-side,
     broadcastable — the dimension-table side of the join; points side is
-    arbitrarily large).  Returns points columns + poly_id.
+    arbitrarily large).  Returns points columns + poly_id; with no
+    polygon, or none covering a tile, an empty relation that collects
+    with no Spark job.
 
-    Plan: per cover-level group, broadcast a (tile_id, poly_id, edges)
-    relation, equi-join on the point's tile at that level, then refine
-    exactly.  method='expr' (default) ray-casts with JVM array aggregates
-    (whole pipeline stays in the JVM); method='udf' uses the Arrow-batched
-    numpy kernel (reference implementation / cross-check).
+    Plan: per cover level, ONE broadcast equi-join of the points' tile
+    at that level against the level's cover relation (tile_id, poly_id,
+    solid, edges), then ONE filter: `solid` OR the exact ray cast.  The
+    cover carries the edges array ONLY on boundary-tile rows (null for
+    interior), so interior candidates — the bulk at scale — never
+    materialize an edges array (the r3-measured GC trap of copying edges
+    into every candidate row): the filter short-circuits on `solid`
+    inside the same codegen stage, and the edges column is dropped
+    before anything downstream.
     """
-    spark = points.sparkSession
-    by_level: dict[int, list[tuple[int, int, list, bool]]] = {}
-    vert_map: dict[int, list[list[int]]] = {}
+    covers: dict[int, list[pd.DataFrame]] = {}
     for p in polygons:
-        vs = p["vertices"]
-        xs = [v[0] for v in vs]
-        ys = [v[1] for v in vs]
-        mins, maxs = (min(xs), min(ys)), (max(xs), max(ys))
-        level = pick_cover_level(mins, maxs, bits=bits, max_tiles=max_tiles)
-        tiles = covering_tiles(mins, maxs, level, bits=bits, max_tiles=4 * max_tiles)
-        edges = _edges_rows(p)
-        verts = [[int(a), int(b)] for a, b in vs]
-        for t in tiles:
-            cls = classify_tile(int(t), level, bits, verts)
-            if cls == "outside":
-                continue  # pruned: no per-point work at all
-            by_level.setdefault(level, []).append(
-                (int(t), int(p["poly_id"]), edges, cls == "interior")
-            )
-        vert_map[int(p["poly_id"])] = verts
-
-    bc_verts = spark.sparkContext.broadcast(vert_map)
-
-    @F.pandas_udf(T.BooleanType())
-    def pip_udf(poly_id: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        vm = bc_verts.value
-        px = x.to_numpy(np.int64)
-        py = y.to_numpy(np.int64)
-        out = np.zeros(len(px), dtype=bool)
-        for pid_val, idx in poly_id.groupby(poly_id).groups.items():
-            verts = np.asarray(vm[int(pid_val)], dtype=np.int64)
-            ii = np.asarray(idx)
-            out[ii] = _pip_kernel(px[ii], py[ii], verts)
-        return pd.Series(out)
-
-    # ONE scan + ONE broadcast join per level (r6: the previous
-    # interior/boundary union scanned the points side twice — union
-    # branches share no subtree, so at 600k bench rows the plan held
-    # two full scans + two broadcast joins).  The cover relation carries
-    # the edges array ONLY on boundary-tile rows (null for interior), so
-    # interior candidates — the bulk at scale — still never materialize
-    # an edges array (the r3-measured GC trap of copying edges into
-    # every candidate row): the refine filter reads the build-side null
-    # and short-circuits on `solid` inside the same codegen stage, and
-    # the edges column is dropped before anything downstream.
-    cover_schema = (
-        "tile_id long, poly_id long, solid boolean, "
-        "edges array<struct<ex:long,ey:long,fx:long,fy:long>>"
-    )
-    result = None
-    for level, rows in sorted(by_level.items()):
-        cover = spark.createDataFrame(
-            [(t, pid, s, e if not s else None) for t, pid, e, s in rows],
-            cover_schema,
+        level, rows = _cover_rows(p, bits, max_tiles)
+        if len(rows):
+            covers.setdefault(level, []).append(rows)
+    if not covers:
+        return points.limit(0).selectExpr("*", "CAST(NULL AS BIGINT) AS poly_id")
+    spark = points.sparkSession
+    keep = F.expr(f"solid OR {pip_refine_sql('x', 'y', 'edges')}")
+    parts = []
+    for level, frames in sorted(covers.items()):
+        cover = spark.createDataFrame(pd.concat(frames, ignore_index=True), _COVER_SCHEMA).selectExpr(
+            "tile_id", "poly_id", "solid", "arrays_zip(ex, ey, fx, fy) AS edges"
         )
-        cand = points.withColumn(
-            "_tile", tile_id_col(zkey_col, level, bits=bits)
-        ).join(F.broadcast(cover), F.col("_tile") == F.col("tile_id"), "inner")
-        if method == "expr":
-            keep = F.col("solid") | pip_refine_expr("x", "y", F.col("edges"))
-            hits = cand.filter(keep).drop("_tile", "tile_id", "solid", "edges")
-        else:
-            # reference/cross-check path: keep the two-branch shape so the
-            # Python kernel only ever sees boundary rows (a single filter
-            # `solid | udf` would BatchEvalPython every interior row)
-            interior = cand.filter(F.col("solid"))
-            boundary = cand.filter(~F.col("solid")).filter(
-                pip_udf(F.col("poly_id"), F.col("x"), F.col("y"))
-            )
-            hits = interior.unionByName(boundary).drop(
-                "_tile", "tile_id", "solid", "edges"
-            )
-        result = hits if result is None else result.unionByName(hits)
-    return result
+        cand = points.withColumn("_tile", tile_id_col(zkey_col, level, bits=bits)).join(
+            F.broadcast(cover), F.expr("_tile = tile_id")
+        )
+        parts.append(cand.filter(keep).drop("_tile", "tile_id", "solid", "edges"))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def convex_polygon(poly_id: int, cx: int, cy: int, radius: int, n: int, *, seed: int = 0) -> dict:
