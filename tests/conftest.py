@@ -39,11 +39,15 @@ def jobs_run(spark, fn):
 def py4j_calls(fn):
     """(fn(), number of Py4J round trips it made), counted by wrapping
     py4j's ClientServerConnection.send_command for the call.  Garbage
-    made earlier is collected first: py4j frees a JVM object with one
-    more round trip whenever Python collects its proxy."""
+    made earlier is freed first: py4j frees a JVM object with one more
+    round trip whenever Python collects its proxy, sent from a finalizer
+    thread that drains its queue about once a second, so the queue is
+    waited empty (at most 5 s) before counting starts."""
     import gc
+    import time
 
     from py4j.clientserver import ClientServerConnection
+    from pyspark import SparkContext
 
     send = ClientServerConnection.send_command
     calls = 0
@@ -54,6 +58,11 @@ def py4j_calls(fn):
         return send(self, *args, **kwargs)
 
     gc.collect()
+    gateway = SparkContext._gateway
+    frees = gateway._gateway_client.finalizer_deque if gateway else None
+    deadline = time.monotonic() + 5
+    while frees and time.monotonic() < deadline:
+        time.sleep(0.02)
     ClientServerConnection.send_command = counted
     try:
         out = fn()

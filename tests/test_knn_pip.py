@@ -47,8 +47,8 @@ class TestKnn:
         assert list(map(tuple, got[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q)
 
     def test_overlapping_boxes_rank_shared_points_for_both(self, pts, pdf):
-        """One round's predicate ORs the queries' boxes; a row inside two
-        boxes must be tagged, and ranked, for both queries."""
+        """One round's predicate ORs the queries' boxes; the driver must tag
+        a row inside two boxes for both queries, and rank it for both."""
         qs = [
             {"qid": 10, "qx": 400_000, "qy": 600_000, "k": 9},
             {"qid": 11, "qx": 420_000, "qy": 610_000, "k": 9},
@@ -84,6 +84,37 @@ class TestKnn:
         qs = [{"qid": 1, "qx": 0, "qy": 0, "k": 2}, {"qid": 7, "qx": 5, "qy": 5, "k": 0}]
         with pytest.raises(ValueError, match=r"k=0 for qid 7"):
             knn(pts, qs, bits=BITS, domain=DOMAIN)
+
+    def test_far_off_domain_query(self, pts, pdf):
+        """A query whose boxes reach past the domain's side long before they
+        hold any of it keeps going until they do."""
+        qs = [{"qid": 0, "qx": -5_000_000, "qy": 300_000, "k": 2}, {"qid": 1, "qx": 10, "qy": 20, "k": 3}]
+        got = _by_qid(knn(pts, qs, bits=BITS, domain=DOMAIN).collect(), qs)
+        assert got == {q["qid"]: brute_knn(pdf, q) for q in qs}
+        assert len(got[0]) == 2
+
+    def test_repeated_qid_raises_before_any_job(self, pts):
+        qs = [
+            {"qid": 3, "qx": 0, "qy": 0, "k": 2},
+            {"qid": 8, "qx": 9, "qy": 9, "k": 1},
+            {"qid": 3, "qx": 5, "qy": 5, "k": 1},
+        ]
+        err, jobs = jobs_run(pts.sparkSession, lambda: pytest.raises(ValueError, knn, pts, qs, bits=BITS))
+        err.match(r"knn: qid 3 is repeated")
+        assert jobs == 0
+
+    def test_tag_rows_in_every_box_that_holds_them(self):
+        """The driver's tagging: closed boxes, a row in two boxes twice, a
+        row in none dropped, d2 to each holding query."""
+        from zcurve_spark.operators.knn import _tag
+
+        rows = pd.DataFrame({"pid": [7, 8, 9], "x": [10, 15, 40], "y": [10, 20, 40]})
+        boxes = pd.DataFrame(
+            {"qid": [1, 2], "qx": [12, 20], "qy": [12, 20], "x0": [0, 10], "y0": [0, 15],
+             "x1": [15, 30], "y1": [20, 25]}
+        )
+        got = sorted(map(tuple, _tag(rows, boxes)[["qid", "pid", "x", "y", "d2"]].values.tolist()))
+        assert got == [(1, 7, 10, 10, 8), (1, 8, 15, 20, 73), (2, 8, 15, 20, 25)]
 
 
 class TestPipKernel:
@@ -461,6 +492,44 @@ class TestKnnBatchLocal:
         monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
         dist = knn_batch(_local_batch(spark, qs), points=pts, bits=BITS, domain=DOMAIN)
         assert _by_qid(dist.collect(), qs) == want
+
+    @pytest.mark.parametrize("local", [True, False])
+    def test_far_off_domain_query(self, spark, pts, pdf, monkeypatch, local):
+        """A query at qx = -5,000,000: its boxes hold none of the domain
+        until their half-side passes 5,000,000, so a radius above the
+        domain's side must not settle it.  Both forms match brute force."""
+        from zcurve_spark.operators import bbox
+        from zcurve_spark.operators.knn import knn_batch
+
+        qs = [{"qid": 0, "qx": -5_000_000, "qy": 300_000, "k": 2}, {"qid": 1, "qx": 10, "qy": 20, "k": 3}]
+        if not local:
+            monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
+        got = _by_qid(knn_batch(_local_batch(spark, qs), points=pts, bits=BITS, domain=DOMAIN).collect(), qs)
+        assert got == {q["qid"]: brute_knn(pdf, q) for q in qs}
+        assert len(got[0]) == 2
+
+    def test_repeated_qid_raises_before_any_job(self, spark, pts):
+        from zcurve_spark.operators.knn import knn_batch
+
+        qs = [
+            {"qid": 5, "qx": 0, "qy": 0, "k": 2},
+            {"qid": 2, "qx": 9, "qy": 9, "k": 1},
+            {"qid": 5, "qx": 5, "qy": 5, "k": 1},
+        ]
+        qdf = _local_batch(spark, qs)
+        err, jobs = jobs_run(spark, lambda: pytest.raises(ValueError, knn_batch, qdf, points=pts, bits=BITS))
+        err.match(r"knn_batch: qid 5 is repeated")
+        assert jobs == 0
+
+    def test_repeated_qid_raises_distributed(self, spark, pts, monkeypatch):
+        from zcurve_spark.operators import bbox
+        from zcurve_spark.operators.knn import knn_batch
+
+        monkeypatch.setattr(bbox, "_DRIVER_BOXES", 0)
+        rows = [(5, 0, 0, 2), (2, 9, 9, 1), (5, 5, 5, 1)]
+        qdf = spark.createDataFrame(rows, "qid long, qx long, qy long, k int")
+        with pytest.raises(ValueError, match=r"knn_batch: qid 5 is repeated"):
+            knn_batch(qdf, points=pts, bits=BITS, domain=DOMAIN)
 
     def test_empty_batch(self, spark, pts):
         from zcurve_spark.operators.knn import knn_batch

@@ -27,7 +27,7 @@ from zcurve_spark.sources.manifest import (
     write_sorted,
 )
 from zcurve_spark.sources.points import BITS, DOMAIN, points_from_lineitem
-from tests.conftest import brute_knn, jobs_run
+from tests.conftest import brute_knn, jobs_run, py4j_calls
 
 SF_DIR = "/root/testdata/sf0.001"
 MAXC = (1 << BITS) - 1  # largest coordinate the keys encode
@@ -309,6 +309,23 @@ def test_knn_round_is_one_job(spark, sorted_path):
     assert jobs == 0
     rows.sort(key=lambda r: r["rank"])
     assert [(r["pid"], r["x"], r["y"], r["d2"]) for r in rows] == brute_knn(pdf, q)
+
+
+def test_knn_round_py4j_calls(spark, sorted_path):
+    """A one-round store-backed knn is the box lookup's scan collected
+    through Arrow and ranked on the driver: a bounded number of Py4J
+    round trips, not one per node of a generator and window plan."""
+    from zcurve_spark.operators.knn import knn
+
+    q = {"qid": 0, "qx": 480_000, "qy": 520_000, "k": 4}
+
+    def run():
+        return knn(None, [q], bits=BITS, domain=DOMAIN, store_path=sorted_path, spark=spark)
+
+    run()  # warm the Arrow conversion imports
+    df, calls = py4j_calls(run)
+    assert df.count() == 4
+    assert calls <= 150
 
 
 @pytest.mark.parametrize("quoted", [False, True])

@@ -23,8 +23,10 @@ Two shapes:
 
 * :func:`knn` — queries as a Python list; right for interactive
   handfuls of queries (the reference's SRF-per-call usage).  A round is
-  ONE job: one SQL predicate over one scan, a row per (row, query whose
-  box holds it), a window top-k on one partition (no exchange).
+  ONE job, the box lookup's scan: one SQL predicate (each query's box,
+  OR-ed) over one scan, its (pid, x, y) rows collected through Arrow,
+  then tagged with the queries whose box holds them and ranked in numpy
+  (:func:`_top_k`, as the driver form of ``knn_batch`` ranks).
 * :func:`knn_batch` — queries as a DATAFRAME, in one of two forms.  A
   batch of at most 4,000 queries is collected (no job when it is a
   local relation, e.g. built from a pandas frame) and each round runs
@@ -39,8 +41,9 @@ Two shapes:
   batch is collected — the 10^4-10^6-query shape.
 
 ``knn`` and the driver form of ``knn_batch`` share the round loop
-(:func:`_rounds`): the coverage rule above, and the result returned
-through pandas/Arrow as a local relation, so collecting it runs no job.
+(:func:`_rounds`): the coverage rule above, the ranking (:func:`_top_k`),
+and the result returned through pandas/Arrow as a local relation, so
+collecting it runs no job.
 """
 
 from __future__ import annotations
@@ -66,9 +69,9 @@ KNN_SCHEMA = "qid long, rank int, pid long, x long, y long, d2 long"
 
 def _first_radius(domain: int, kmax: int, n_points_hint: int) -> int:
     """Half-side of the first round's boxes: the expected half-side
-    enclosing ~16k points — at that size round 1 almost always
-    terminates, and the candidate set stays tiny relative to a full
-    scan."""
+    enclosing 16·k points (160 at k=10) — at that size round 1 almost
+    always terminates, and the candidate set stays tiny relative to a
+    full scan."""
     return max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
 
 
@@ -98,27 +101,44 @@ def _local_result(spark, rows: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(rows[KNN_COLS], KNN_SCHEMA)
 
 
-def _rounds(spark, pending: pd.DataFrame, r: int, domain: int, answer, max_rounds=None) -> DataFrame:
-    """Answer the queries `pending` (qid, qx, qy, k) in expanding rounds.
+def _check_queries(queries: pd.DataFrame, who: str) -> None:
+    """Raise ValueError naming the first query of `queries` (qid, qx, qy,
+    k) whose k is below 1, or the first repeated qid."""
+    low = queries[queries["k"] < 1]
+    if len(low):
+        raise ValueError(f"{who}: k must be >= 1, got k={low['k'].iloc[0]} for qid {low['qid'].iloc[0]}")
+    dup = queries["qid"][queries["qid"].duplicated()]
+    if len(dup):
+        raise ValueError(f"{who}: qid {dup.iloc[0]} is repeated; qids must be unique")
 
-    ``answer(boxes)`` gets the pending queries with their boxes of
-    half-side r (:func:`_round_boxes`) and returns the round's top-k
+
+def _rounds(spark, pending: pd.DataFrame, r: int, domain: int, answer, max_rounds=None) -> DataFrame:
+    """Answer the queries `pending` (qid, qx, qy, k; unique qids) in
+    expanding rounds.
+
+    ``answer(boxes)`` gets the pending queries, sorted by qid, with their
+    boxes of half-side r (:func:`_round_boxes`) and returns the round's top-k
     rows (KNN_COLS, ranks 1..k per qid).  A query is settled when it has
     k rows with the k-th within r (the termination proof above) or its
-    box is the whole domain; the rest retry at 4r.  Queries still
-    pending after ``max_rounds`` rounds raise RuntimeError."""
+    clipped box is the whole domain (a query far off the domain needs a
+    radius well above the domain's side for that); the rest retry at 4r.
+    Queries still pending after ``max_rounds`` rounds raise
+    RuntimeError."""
+    pending = pending.sort_values("qid", kind="stable")
     done = []
     rounds = 0
     while len(pending):
         if rounds == max_rounds:
             raise RuntimeError(f"knn_batch: {len(pending)} queries uncovered after {max_rounds} rounds")
         rounds += 1
-        top = answer(_round_boxes(pending, r, domain))
+        boxes = _round_boxes(pending, r, domain)
+        top = answer(boxes)
         row_query = pd.Index(pending["qid"]).get_indexer(top["qid"])
         n = np.bincount(row_query, minlength=len(pending))
         dmax = np.zeros(len(pending), np.int64)
         np.maximum.at(dmax, row_query, top["d2"].to_numpy(np.int64))
-        settled = ((n >= pending["k"].to_numpy()) & (dmax <= r * r)) | (r >= domain)
+        whole = (boxes[["x0", "y0", "x1", "y1"]].to_numpy() == [0, 0, domain - 1, domain - 1]).all(axis=1)
+        settled = ((n >= pending["k"].to_numpy()) & (dmax <= r * r)) | whole
         if settled.any():
             done.append(top[settled[row_query]])
         pending = pending[~settled]
@@ -140,11 +160,20 @@ def knn(
 ) -> DataFrame:
     """Top-k nearest points per query.
 
-    `queries`: dicts with qid, qx, qy, k >= 1.  Returns (qid, rank, pid,
-    x, y, d2) with rank 1..k ordered by squared Euclidean distance, pid
-    tie-break.  Pass ``store_path`` (a :func:`points_store` layout) to
-    read manifest-pruned candidate files per round instead of scanning
-    `points`; `points` may then be None.
+    `queries`: dicts with unique qids, qx, qy, k >= 1 (else ValueError
+    before any job).  Returns (qid, rank, pid, x, y, d2) with rank 1..k
+    ordered by squared Euclidean distance, (pid, x, y) tie-break, as a
+    local relation (collecting it runs no job).  Pass ``store_path`` (a
+    :func:`points_store` layout) to read manifest-pruned candidate files
+    per round instead of scanning `points`; `points` may then be None.
+
+    A round is one Spark job: the scan :func:`bbox_lookup_pruned` runs,
+    filtered by every pending query's box (OR-ed), whose (pid, x, y) rows
+    come back through Arrow.  The driver tags each row with the queries
+    whose box holds it and ranks them in numpy (:func:`_top_k`).  So the
+    driver receives every candidate row of a round, not k rows per
+    query, the bound the driver form of :func:`knn_batch` accepts too:
+    about 16 times the largest k per query at the first radius.
     """
     if store_path is not None:
         from ..sources.manifest import read_pruned
@@ -157,53 +186,43 @@ def knn(
             n_points_hint = store_total_rows(store_path)
     else:
         spark = points.sparkSession
-    for q in queries:
-        if q["k"] < 1:
-            raise ValueError(f"knn: k must be >= 1, got k={q['k']} for qid {q['qid']}")
+    pending = pd.DataFrame([[q[c] for c in QUERY_COLS] for q in queries], columns=QUERY_COLS)
+    _check_queries(pending, "knn")
     if n_points_hint is None:
         # No count() fallback (full scan before any work — VERDICT #4).
         # Underestimating the density only costs extra (cheap) early
         # rounds; start from a mid-density guess and let expansion work.
         n_points_hint = 1_000_000
-    kmax = max((q["k"] for q in queries), default=1)
-    # pid is not unique in the synthetic tables -> extend the tiebreak
-    # to full coords so ranking is a total order (oracle-comparable)
-    w = Window.partitionBy("qid").orderBy("d2", "pid", "x", "y")
+    kmax = int(pending["k"].max()) if len(pending) else 1
 
     def answer(boxes: pd.DataFrame) -> pd.DataFrame:
-        qs = boxes.to_numpy().tolist()  # (qid, qx, qy, k, x0, y0, x1, y1) as Python ints
+        corners = boxes[["x0", "y0", "x1", "y1"]].to_numpy().tolist()  # as Python ints
         if store_path is not None:
-            ivs = [decompose_box((x0, y0), (x1, y1), bits=bits, budget=budget) for *_, x0, y0, x1, y1 in qs]
+            ivs = [decompose_box((x0, y0), (x1, y1), bits=bits, budget=budget) for x0, y0, x1, y1 in corners]
             src = read_pruned(spark, store_path, [iv for qivs in ivs for iv in qivs])
-            preds = [box_scan_sql(zkey_col, v, XY, q[4:6], q[6:8]) for q, v in zip(qs, ivs)]
+            preds = [box_scan_sql(zkey_col, v, XY, c[:2], c[2:]) for c, v in zip(corners, ivs)]
         else:
             # a computed key's ranges push nowhere, and Catalyst would inline
             # its expression into every BETWEEN (> 64 KB of code at 3 queries)
-            src, preds = points, [box_sql(XY, q[4:6], q[6:8]) for q in qs]
+            src, preds = points, [box_sql(XY, c[:2], c[2:]) for c in corners]
         scan = " OR ".join(f"({p})" for p in preds)
-        # one output row per (row, query whose box holds it)
-        tags = ", ".join(
-            f"named_struct('qid', {qid}L, 'qx', {qx}L, 'qy', {qy}L, 'k', {k}, "
-            f"'hit', {box_sql(XY, (x0, y0), (x1, y1))})"
-            for qid, qx, qy, k, x0, y0, x1, y1 in qs
-        )
-        d2 = (F.col("x") - F.col("qx")) ** 2 + (F.col("y") - F.col("qy")) ** 2
-        # one partition satisfies the window's distribution: no exchange,
-        # so the round is one job, and only k rows per query are collected
-        rows = (
-            src.filter(F.expr(scan))
-            .selectExpr("pid", "x", "y", f"inline(filter(array({tags}), t -> t.hit))")
-            .withColumn("d2", d2.cast("long"))
-            .coalesce(1)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select(*KNN_COLS)
-            .collect()
-        )
-        return pd.DataFrame(rows, columns=KNN_COLS)
+        rows = src.filter(F.expr(scan)).select("pid", *XY).toPandas()
+        return _top_k(_tag(rows, boxes), boxes)
 
-    pending = pd.DataFrame([[q[c] for c in QUERY_COLS] for q in queries], columns=QUERY_COLS)
     return _rounds(spark, pending, _first_radius(domain, kmax, n_points_hint), domain, answer)
+
+
+def _tag(rows: pd.DataFrame, boxes: pd.DataFrame) -> pd.DataFrame:
+    """The candidates (qid, pid, x, y, d2): each of `rows` (pid, x, y)
+    once per query of `boxes` (qid, qx, qy, x0, y0, x1, y1) whose box
+    holds it, with its squared distance to that query."""
+    x, y = (rows[c].to_numpy(np.int64)[:, None] for c in XY)
+    b = {c: boxes[c].to_numpy(np.int64) for c in ("qid", "qx", "qy", "x0", "y0", "x1", "y1")}
+    row, query = np.nonzero((b["x0"] <= x) & (x <= b["x1"]) & (b["y0"] <= y) & (y <= b["y1"]))
+    x, y = x[row, 0], y[row, 0]
+    dx, dy = x - b["qx"][query], y - b["qy"][query]
+    pid = rows["pid"].to_numpy(np.int64)[row]
+    return pd.DataFrame({"qid": b["qid"][query], "pid": pid, "x": x, "y": y, "d2": dx * dx + dy * dy})
 
 
 def _top_k(cand: pd.DataFrame, pending: pd.DataFrame) -> pd.DataFrame:
@@ -241,7 +260,8 @@ def knn_batch(
     """SET-ORIENTED kNN: `queries` is a DATAFRAME (qid, qx, qy, k) — the
     batch shape (r2 VERDICT "What's missing" #2: the list-based
     :func:`knn` builds one predicate term per query, fine for 16
-    queries, wrong for 10^6).  Same result contract as :func:`knn`:
+    queries, wrong for 10^6).  qids must be unique and k >= 1 (else
+    ValueError, before any round).  Same result contract as :func:`knn`:
     (qid, rank, pid, x, y, d2), rank by squared Euclidean distance with
     (pid, x, y) tiebreak.  Reads the store at ``store_path`` or else
     ``points``; one of them is required.
@@ -305,9 +325,14 @@ def knn_batch(
         return _knn_batch_local(
             spark, batch, points, store_path, bits, domain, n_points_hint, zkey_col, budget, max_rounds
         )
-    kmax_row, kmin, kmin_qid = queries.agg(F.max("k"), F.min("k"), F.min_by("qid", "k")).first()
+    kmax_row, kmin, kmin_qid, repeats = queries.agg(
+        F.max("k"), F.min("k"), F.min_by("qid", "k"), F.count("qid") - F.count_distinct("qid")
+    ).first()
     if kmin < 1:
         raise ValueError(f"knn_batch: k must be >= 1, got k={kmin} for qid {kmin_qid}")
+    if repeats:
+        dup = queries.groupBy("qid").count().filter("count > 1").first()["qid"]
+        raise ValueError(f"knn_batch: qid {dup} is repeated; qids must be unique")
     r = _first_radius(domain, int(kmax_row), n_points_hint)
     ckpt = checkpointer or (lambda df: df.localCheckpoint())
 
@@ -362,19 +387,19 @@ def knn_batch(
             .select("qid", "rank", "pid", "x", "y", "d2", "k")
         )
         topk = ckpt(topk)  # k rows/query; feeds both stats and output
-        if r >= domain:
-            covered = pending.select("qid")
-        else:
-            covered = (
-                topk.groupBy("qid")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max("d2").alias("dmax"),
-                    F.first("k").alias("_k"),
-                )
-                .filter((F.col("n") >= F.col("_k")) & (F.col("dmax") <= F.lit(r * r)))
-                .select("qid")
+        covered = (
+            topk.groupBy("qid")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max("d2").alias("dmax"),
+                F.first("k").alias("_k"),
             )
+            .filter((F.col("n") >= F.col("_k")) & (F.col("dmax") <= F.lit(r * r)))
+            .select("qid")
+        )
+        if 2 * r + 1 >= domain:  # a box may hold the whole domain: its query is settled
+            whole = f"x0 = 0 AND y0 = 0 AND x1 = {domain - 1} AND y1 = {domain - 1}"
+            covered = covered.union(boxes.filter(whole).select("qid"))
         # done parts derive from the CHECKPOINTED topk by one cheap
         # join — materializing them too cost one eager job per round
         # for k rows per query (r6; same results, one fewer job per
@@ -403,9 +428,7 @@ def _knn_batch_local(
     from ..sources.manifest import read_pruned
     from .bbox import bbox_join_bucketed, bucketed_intervals
 
-    if len(queries) and queries["k"].min() < 1:
-        bad = queries.loc[queries["k"].idxmin()]
-        raise ValueError(f"knn_batch: k must be >= 1, got k={bad['k']} for qid {bad['qid']}")
+    _check_queries(queries, "knn_batch")
 
     def answer(boxes: pd.DataFrame) -> pd.DataFrame:
         bivs, shift = bucketed_intervals(boxes, bits=bits, budget=budget)
@@ -418,9 +441,8 @@ def _knn_batch_local(
         d2 = "(x - qx) * (x - qx) + (y - qy) * (y - qy) AS d2"
         return _top_k(cand.selectExpr("qid", "pid", "x", "y", d2).toPandas(), boxes)
 
-    pending = queries.sort_values("qid", kind="stable")
     r = _first_radius(domain, int(queries["k"].max()) if len(queries) else 1, n_points_hint)
-    return _rounds(spark, pending, r, domain, answer, max_rounds)
+    return _rounds(spark, queries, r, domain, answer, max_rounds)
 
 
 def knn_geo_batch(
