@@ -36,6 +36,17 @@ def jobs_run(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def codegen_compiles(spark, fn):
+    """(fn(), number of classes Spark's code generator compiled while it
+    ran), from the count of CodegenMetrics' compilation-time histogram.
+    A class found in the generator's cache is not compiled again and is
+    not counted."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = metric.getCount()
+    out = fn()
+    return out, metric.getCount() - before
+
+
 def py4j_calls(fn):
     """(fn(), number of Py4J round trips it made), counted by wrapping
     py4j's ClientServerConnection.send_command for the call.  Garbage

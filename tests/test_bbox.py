@@ -7,10 +7,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from zcurve_spark.operators.bbox import (
     bbox_join_bucketed,
     bbox_lookup,
+    boxes_sql,
     bucketed_intervals,
     bucketed_intervals_dist,
     count_hits,
@@ -109,6 +111,24 @@ class TestBboxLookup:
         for budget in (1, 4, 1024):
             got = bbox_lookup(pts, b["mins"], b["maxs"], bits=BITS, budget=budget).toPandas()
             assert _rowset(got) == exp
+
+
+class TestBoxesSql:
+    def test_no_boxes_is_false(self, pts):
+        """No boxes match no row (an empty array would not resolve)."""
+        assert boxes_sql(("x", "y"), []) == "false"
+        assert pts.filter(F.expr(boxes_sql(("x", "y"), []))).count() == 0
+
+    def test_3d_any_of_the_boxes(self, pts, pdf):
+        """Three columns test three dims; a row in any box (or in two,
+        once) passes."""
+        boxes = _big_boxes(3, ndims=3) + [{"mins": (400_000,) * 3, "maxs": (600_000,) * 3}]
+        got = pts.filter(F.expr(boxes_sql(("x", "y", "z"), [(b["mins"], b["maxs"]) for b in boxes])))
+        exp = pd.concat([_brute(pdf, b) for b in boxes])
+        assert exp.index.duplicated().any()  # the last box overlaps the first
+        exp = exp[~exp.index.duplicated()][["pid", "x", "y", "z"]]  # a row of pdf once
+        assert _rowset(got.select("pid", "x", "y", "z").toPandas()) == _rowset(exp)
+        assert len(exp) > 0
 
 
 class TestBboxBatchJoin:

@@ -20,6 +20,8 @@ from zcurve_spark.plans.decompose import (
     decode_point,
     explode_buckets,
     encode_point,
+    hilbert3_covers,
+    hilbert_covers,
     pick_cover_level,
 )
 
@@ -182,6 +184,16 @@ class TestDecomposeBoxes:
             decompose_boxes(mins, maxs, BITS, 16, qids=np.array([76, 77, 78]))
         with pytest.raises(ValueError, match=r"box 0 \(\(-1, 4\), \(4, 4\)\)"):
             decompose_boxes(mins[2:], maxs[2:], BITS, 16)
+
+    def test_single_box_outside_domain_names_its_corners(self):
+        """decompose_box and the Hilbert covers word the error as
+        decompose_boxes does."""
+        with pytest.raises(ValueError, match=r"^box \(\(-5, -5\), \(10, 10\)\) lies outside \[0, 2\^8\)$"):
+            decompose_box((-5, -5), (10, 10), bits=BITS)
+        with pytest.raises(ValueError, match=r"^box \(\(3, 0\), \(256, 9\)\) lies outside \[0, 2\^8\)$"):
+            hilbert_covers((3, 0), (256, 9), order=BITS)
+        with pytest.raises(ValueError, match=r"^box \(\(0, -1, 0\), \(9, 9, 9\)\) lies outside \[0, 2\^8\)$"):
+            hilbert3_covers((0, -1, 0), (9, 9, 9), order=BITS)
 
     def test_keys_wider_than_63_bits_raise_naming_bits(self):
         for ndims, bits in ((2, 32), (3, 22)):

@@ -27,7 +27,7 @@ from zcurve_spark.sources.manifest import (
     write_sorted,
 )
 from zcurve_spark.sources.points import BITS, DOMAIN, points_from_lineitem
-from tests.conftest import brute_knn, jobs_run, py4j_calls
+from tests.conftest import brute_knn, codegen_compiles, jobs_run, py4j_calls
 
 SF_DIR = "/root/testdata/sf0.001"
 MAXC = (1 << BITS) - 1  # largest coordinate the keys encode
@@ -216,6 +216,29 @@ def test_bbox_lookup_pruned_runs_one_job(spark, sorted_path):
         assert exec_jobs == 1, (box, len(rows))
 
 
+def test_lookup_with_a_new_box_compiles_nothing(spark, sorted_path):
+    """A box's bounds are data, not code: after one warm lookup, a lookup
+    with a different box (reading two files, not one) reuses every
+    compiled class."""
+    from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
+
+    bbox_lookup_pruned(spark, sorted_path, (100_000, 100_000), (110_000, 110_000), bits=BITS).collect()
+    box = ((100_123, 100_456), (220_789, 330_012))
+    rows, compiled = codegen_compiles(
+        spark, lambda: bbox_lookup_pruned(spark, sorted_path, *box, bits=BITS).collect()
+    )
+    assert compiled == 0
+    want = bbox_lookup(spark.read.parquet(sorted_path), *box, bits=BITS).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want)) and rows
+
+
+def test_lookup_off_the_domain_names_the_box(spark, sorted_path):
+    from zcurve_spark.operators.bbox import bbox_lookup_pruned
+
+    with pytest.raises(ValueError, match=r"box \(\(-5, -5\), \(10, 10\)\) lies outside \[0, 2\^20\)"):
+        bbox_lookup_pruned(spark, sorted_path, (-5, -5), (10, 10), bits=BITS)
+
+
 def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
     """write_sorted records the schema; read_pruned opens pruned files
     (and builds the empty result) with it and runs no job doing so.  A
@@ -326,6 +349,44 @@ def test_knn_round_py4j_calls(spark, sorted_path):
     df, calls = py4j_calls(run)
     assert df.count() == 4
     assert calls <= 150
+
+
+def _knn_queries(n: int, seed: int) -> list[dict]:
+    """`n` seeded queries inside the domain, k from 1 to 8."""
+    rng = np.random.default_rng(seed)
+    xy = rng.integers(0, DOMAIN, (n, 2))
+    k = rng.integers(1, 9, n)
+    return [{"qid": i, "qx": int(x), "qy": int(y), "k": int(kk)} for i, ((x, y), kk) in enumerate(zip(xy, k))]
+
+
+def test_knn_rounds_with_new_queries_compile_nothing(spark, sorted_path):
+    """After one warm knn round, rounds over 1 and over 24 new queries
+    (new bounds, more boxes) compile no class, store-backed or in
+    memory."""
+    from zcurve_spark.operators.knn import knn
+
+    pts = points_from_lineitem(spark, SF_DIR)
+    for src in ({"points": None, "store_path": sorted_path, "spark": spark}, {"points": pts}):
+        def run(qs):
+            return knn(queries=qs, bits=BITS, domain=DOMAIN, **src).collect()
+
+        run([{"qid": 0, "qx": 480_000, "qy": 520_000, "k": 4}])
+        for qs in ([{"qid": 1, "qx": 123_456, "qy": 654_321, "k": 3}], _knn_queries(24, 1019)):
+            rows, compiled = codegen_compiles(spark, lambda: run(qs))
+            assert compiled == 0, (list(src), len(qs))
+            assert len(rows) == sum(q["k"] for q in qs)
+
+
+def test_knn_24_queries_match_brute_force(spark, sorted_path):
+    """A 24-query store-backed knn ranks every query's neighbours exactly."""
+    from zcurve_spark.operators.knn import knn
+
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    qs = _knn_queries(24, 1020)
+    got = knn(None, qs, bits=BITS, domain=DOMAIN, store_path=sorted_path, spark=spark).toPandas()
+    for q in qs:
+        g = got[got.qid == q["qid"]].sort_values("rank")
+        assert list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q), q
 
 
 @pytest.mark.parametrize("quoted", [False, True])

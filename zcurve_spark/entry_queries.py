@@ -268,7 +268,7 @@ def q_bbox_rows_3d_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths, demonstrated at full key width."""
     from decimal import Decimal
 
-    from .operators.bbox import box_refine_predicate
+    from .operators.bbox import boxes_sql
     from .plans.decompose import coalesce_intervals, decompose_box
 
     pts = _full3d_points(spark, sf_dir)
@@ -277,9 +277,8 @@ def q_bbox_rows_3d_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = F.lit(False)
     for iv in ivs:
         pred = pred | F.col("k3").between(F.lit(Decimal(iv.lo)), F.lit(Decimal(iv.hi)))
-    hits = pts.filter(pred).filter(
-        box_refine_predicate(["xb", "yb", "zb"], BBOX_FULL3D["mins"], BBOX_FULL3D["maxs"])
-    )
+    box = (BBOX_FULL3D["mins"], BBOX_FULL3D["maxs"])
+    hits = pts.filter(pred).filter(F.expr(boxes_sql(("xb", "yb", "zb"), [box])))
     return hits.select("pid", "xb", "yb", "zb").orderBy("pid")
 
 

@@ -8,10 +8,12 @@ Re-expression of ``zcurve_2d_lookup`` / ``zcurve_3d_lookup``
     encode box corners                driver-side decompose_box()
     lazy LITMAX/BIGMIN splitting      budgeted decomposition (numpy-free,
       driven by B-tree pages            pure ints; laziness = budget)
-    B-tree descent + page walk        manifest file pruning, then a few
-                                        zkey BETWEENs pushed to Parquet
-                                        row-group min-max pruning
-    per-key `between` refinement      per-dim box predicate (codegen)
+    B-tree descent + page walk        manifest file pruning; the pruned
+                                        files are read whole (no key
+                                        BETWEENs)
+    per-key `between` refinement      exact box test over the pruned
+                                        files (boxes_sql: the bounds an
+                                        array constant, not code)
     TID mergesort (list_sort.c)       sort by row id only where parity
                                         demands it (lookup vs *_tidonly)
 
@@ -32,12 +34,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.decompose import (
     bucket_shift_for,
-    coalesce_intervals,
     decompose_box,
     decompose_boxes,
     explode_buckets,
@@ -46,33 +47,31 @@ from ..plans.decompose import (
 )
 
 
-def box_sql(cols, mins, maxs) -> str:
-    """Exact per-dimension closed-box test (bitkey.c:35-59 semantics) as
-    one SQL string."""
-    return (
-        " AND ".join(
-            f"{_quoted(c)} BETWEEN {int(lo)} AND {int(hi)}" for c, lo, hi in zip(cols, mins, maxs)
-        )
-        or "true"
+def boxes_sql(cols, boxes) -> str:
+    """The closed-box test (bitkey.c:35-59 semantics) for any of `boxes`,
+    a list of (mins, maxs), as one SQL predicate over the columns `cols`
+    (2 or 3):
+
+        exists(array(named_struct('x0', ..L, 'x1', ..L, 'y0', ..L,
+        'y1', ..L), ...), _b -> x BETWEEN _b.x0 AND _b.x1 AND ...)
+
+    The bounds are data, not code.  Catalyst folds the array into one
+    constant that the generated code reads by reference, so the code
+    depends on neither the bounds nor the number of boxes, and a lookup
+    or kNN round with new boxes reuses the compiled class.  Bounds
+    written as plain literals would be inlined into the generated Java,
+    so every new box would compile new classes.  No boxes is ``false``."""
+    if not boxes:
+        return "false"
+    dims = ("x", "y", "z")[: len(cols)]
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(f"'{d}0', {int(lo)}L, '{d}1', {int(hi)}L" for d, lo, hi in zip(dims, mins, maxs))
+        + ")"
+        for mins, maxs in boxes
     )
-
-
-def box_refine_predicate(cols: list[str], mins, maxs) -> Column:
-    """:func:`box_sql` as a Column."""
-    return F.expr(box_sql(cols, mins, maxs))
-
-
-def box_scan_sql(key_col: str, intervals, cols, mins, maxs) -> str:
-    """The store-scan predicate for one box as one SQL string: <= 6
-    coalesced key BETWEENs (pushed to parquet row-group pruning) AND the
-    exact box test.  A Column built literal by literal would cost one
-    Py4J call per literal."""
-    k = _quoted(key_col)
-    keys = " OR ".join(
-        f"{k} BETWEEN {iv.lo} AND {iv.hi}"
-        for iv in coalesce_intervals(intervals, max_intervals=6)
-    )
-    return f"({keys or 'false'}) AND ({box_sql(cols, mins, maxs)})"
+    test = " AND ".join(f"{_quoted(c)} BETWEEN _b.{d}0 AND _b.{d}1" for c, d in zip(cols, dims))
+    return f"exists(array({structs}), _b -> {test})"
 
 
 def _quoted(name: str) -> str:
@@ -146,8 +145,8 @@ def bbox_lookup(
     to the interpreter).  One shift + InSet keeps the whole filter in
     codegen; exactness comes from the per-dim refinement regardless of
     bucket granularity.  (The stored-layout path, bbox_lookup_pruned,
-    uses BETWEENs instead: there zkey is a plain column — no duplication —
-    and the BETWEENs push down to parquet row groups.)
+    prunes files by the manifest instead and filters with the box test
+    alone.)
     """
     intervals = _box_cover(curve, mins, maxs, bits, budget)
     if not intervals:
@@ -155,7 +154,7 @@ def bbox_lookup(
     buckets, shift = interval_buckets(intervals)
     k = F.col(zkey_col).cast("long")
     cand = points.filter(F.shiftrightunsigned(k, shift).isin(buckets))
-    hits = cand.filter(box_refine_predicate(list(coord_cols), mins, maxs))
+    hits = cand.filter(F.expr(boxes_sql(coord_cols, [(mins, maxs)])))
     out = hits.select(id_col, *coord_cols)
     return out.orderBy(id_col) if sort_by_id else out
 
@@ -177,25 +176,30 @@ def bbox_lookup_pruned(
     """:func:`bbox_lookup` over the materialized key-sorted store, planned
     without a Spark job and answered by one.  The manifest prunes FILES
     (the B-tree descent, sp_tree.c:266-354) and supplies their schema, so
-    no inference job runs.  One SQL predicate (:func:`box_scan_sql`)
-    filters the scan: <= 6 coalesced key BETWEENs, pushed to parquet
-    row-group pruning (the in-page binsearch, sp_tree.c:164-237;
-    Catalyst's cost grows steeply with OR-chain length), AND the exact
-    per-dim box refinement.  The id sort coalesces to one partition, so
-    it runs no sampling or exchange job; a lookup box reads one or two
-    files, so the scan loses little parallelism.  Result set is identical
-    to the full-scan path (the bbox_rows_pruned oracle entry asserts
-    that).
+    no inference job runs.  The exact box test (:func:`boxes_sql`) runs
+    on the pruned files, with no key BETWEENs: its bounds are an array
+    constant, so every lookup reuses one compiled class (per-box
+    literals would compile two new classes per call and run the scan in
+    cold bytecode).  The trade-off: nothing is pushed to parquet
+    row-group pruning (the in-page binsearch, sp_tree.c:164-237).  Each
+    file ``write_sorted`` writes is one row group, so that pruning
+    skipped nothing here (~1,880 rows read per hit with or without it);
+    a store whose files hold many row groups would read them all.  The
+    id sort coalesces to one partition, so it runs no sampling or
+    exchange job; a lookup box reads one or two files, so the scan loses
+    little parallelism.  Result set is identical to the full-scan path
+    (the bbox_rows_pruned oracle entry asserts that).
 
     ``curve`` selects the interval decomposition as in
     :func:`bbox_lookup`: "z" for a zkey-sorted layout, "hilbert" for an
     hkey-sorted one, "hilbert3" (3 coord_cols) for an hkey3-sorted one;
     any other value raises ValueError — the lookup machinery is
-    curve-agnostic."""
+    curve-agnostic.  ``zkey_col`` is not read: the manifest's key ranges
+    do the pruning."""
     from ..sources.manifest import read_pruned
 
     intervals = _box_cover(curve, mins, maxs, bits, budget)
-    pred = F.expr(box_scan_sql(zkey_col, intervals, coord_cols, mins, maxs))
+    pred = F.expr(boxes_sql(coord_cols, [(mins, maxs)]))
     out = read_pruned(spark, store_path, intervals).filter(pred).select(id_col, *coord_cols)
     return out.coalesce(1).sortWithinPartitions(id_col) if sort_by_id else out
 

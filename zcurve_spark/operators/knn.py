@@ -23,10 +23,14 @@ Two shapes:
 
 * :func:`knn` — queries as a Python list; right for interactive
   handfuls of queries (the reference's SRF-per-call usage).  A round is
-  ONE job, the box lookup's scan: one SQL predicate (each query's box,
-  OR-ed) over one scan, its (pid, x, y) rows collected through Arrow,
-  then tagged with the queries whose box holds them and ranked in numpy
-  (:func:`_top_k`, as the driver form of ``knn_batch`` ranks).
+  ONE job, the box lookup's scan: the manifest prunes files by the
+  round's boxes, and the exact box test runs on the pruned files as one
+  ``exists`` over an array of the pending queries' boxes
+  (:func:`.bbox.boxes_sql`; no key BETWEENs, and the bounds are data,
+  so every round reuses one compiled class).  Its (pid, x, y) rows come
+  back through Arrow, are tagged with the queries whose box holds them
+  and ranked in numpy (:func:`_top_k`, as the driver form of
+  ``knn_batch`` ranks).
 * :func:`knn_batch` — queries as a DATAFRAME, in one of two forms.  A
   batch of at most 4,000 queries is collected (no job when it is a
   local relation, e.g. built from a pandas frame) and each round runs
@@ -58,7 +62,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.decompose import decompose_box
-from .bbox import box_scan_sql, box_sql
+from .bbox import boxes_sql
 
 DOMAIN = 1_000_000
 XY = ("x", "y")
@@ -167,10 +171,16 @@ def knn(
     :func:`points_store` layout) to read manifest-pruned candidate files
     per round instead of scanning `points`; `points` may then be None.
 
-    A round is one Spark job: the scan :func:`bbox_lookup_pruned` runs,
-    filtered by every pending query's box (OR-ed), whose (pid, x, y) rows
-    come back through Arrow.  The driver tags each row with the queries
-    whose box holds it and ranks them in numpy (:func:`_top_k`).  So the
+    A round is one Spark job: the scan :func:`bbox_lookup_pruned` runs.
+    The manifest prunes files by the pending queries' boxes, and the
+    exact box test runs on the pruned files (or on `points`) as one
+    predicate over an array of those boxes (:func:`.bbox.boxes_sql`),
+    with no key BETWEENs: the bounds are an array constant, so a round
+    compiles no new class whatever its boxes or their number.
+    ``zkey_col`` is not read: the manifest's key ranges do the pruning.
+    The round's (pid, x, y) rows come back through Arrow.  The driver
+    tags each row with the queries whose box holds it and ranks them in
+    numpy (:func:`_top_k`).  So the
     driver receives every candidate row of a round, not k rows per
     query, the bound the driver form of :func:`knn_batch` accepts too:
     about 16 times the largest k per query at the first radius.
@@ -197,16 +207,12 @@ def knn(
 
     def answer(boxes: pd.DataFrame) -> pd.DataFrame:
         corners = boxes[["x0", "y0", "x1", "y1"]].to_numpy().tolist()  # as Python ints
+        src = points
         if store_path is not None:
             ivs = [decompose_box((x0, y0), (x1, y1), bits=bits, budget=budget) for x0, y0, x1, y1 in corners]
             src = read_pruned(spark, store_path, [iv for qivs in ivs for iv in qivs])
-            preds = [box_scan_sql(zkey_col, v, XY, c[:2], c[2:]) for c, v in zip(corners, ivs)]
-        else:
-            # a computed key's ranges push nowhere, and Catalyst would inline
-            # its expression into every BETWEEN (> 64 KB of code at 3 queries)
-            src, preds = points, [box_sql(XY, c[:2], c[2:]) for c in corners]
-        scan = " OR ".join(f"({p})" for p in preds)
-        rows = src.filter(F.expr(scan)).select("pid", *XY).toPandas()
+        pred = boxes_sql(XY, [(c[:2], c[2:]) for c in corners])
+        rows = src.filter(F.expr(pred)).select("pid", *XY).toPandas()
         return _top_k(_tag(rows, boxes), boxes)
 
     return _rounds(spark, pending, _first_radius(domain, kmax, n_points_hint), domain, answer)

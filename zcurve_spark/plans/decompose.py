@@ -93,6 +93,12 @@ def _box_volume(klo: int, khi: int, ndims: int, bits: int) -> int:
     return v
 
 
+def _outside(mins, maxs, bits: int) -> ValueError:
+    """The error for the box [mins, maxs] reaching outside [0, 2^bits),
+    worded as :func:`decompose_boxes` words it."""
+    return ValueError(f"box ({tuple(map(int, mins))}, {tuple(map(int, maxs))}) lies outside [0, 2^{bits})")
+
+
 def decompose_box(
     mins: tuple[int, ...],
     maxs: tuple[int, ...],
@@ -117,7 +123,7 @@ def decompose_box(
         if a > b:
             return []
         if a < 0 or b >= (1 << bits):
-            raise ValueError(f"coords out of [0, 2^{bits}) domain")
+            raise _outside(mins, maxs, bits)
 
     klo = encode_point(tuple(mins), bits)
     khi = encode_point(tuple(maxs), bits)
@@ -409,7 +415,7 @@ def hilbert_covers(
         return []
     for v in (bx0, by0, bx1, by1):
         if v < 0 or v >= (1 << order):
-            raise ValueError(f"coords out of [0, 2^{order}) domain")
+            raise _outside(mins, maxs, order)
 
     solid_out: list[Interval] = []
     heap: list[tuple[int, int, int, int]] = []  # (-waste, lo, depth, i)
@@ -477,7 +483,7 @@ def hilbert3_covers(
         return []
     for v in (*b0, *b1):
         if v < 0 or v >= (1 << order):
-            raise ValueError(f"coords out of [0, 2^{order}) domain")
+            raise _outside(mins, maxs, order)
 
     import numpy as _np
 

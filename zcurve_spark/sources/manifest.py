@@ -11,9 +11,11 @@ The reference's index is a B-tree over the z-key expression
   contract (no Iceberg runtime jar in this sandbox; the manifest is
   API-shaped so a real catalog can replace it).
 * ``read_pruned`` — file-level pruning against decomposed intervals
-  (the B-tree *descent*, sp_tree.c:266-354), with row-group pruning via
-  pushed BETWEEN filters happening below (the in-page binary search,
-  sp_tree.c:164-237).
+  (the B-tree *descent*, sp_tree.c:266-354).  The lookups run the exact
+  box test on the pruned files, with no key BETWEENs below it (the
+  in-page binary search, sp_tree.c:164-237, has no analog): each file
+  is one row group, so pushed key ranges skipped nothing inside a file,
+  and their per-query literals compiled new code for every query.
 * ``StageRunner`` — resumable checkpointed stages: a stage whose
   manifest exists with matching input fingerprint is skipped on re-run
   (north rule: "any stage is resumable", per-partition lineage+metrics).
@@ -244,11 +246,11 @@ def prune_files(manifest: dict, intervals) -> list[str]:
 
 def read_pruned(spark: SparkSession, path: str, intervals) -> DataFrame:
     """Read only the files that can contain keys in `intervals`; callers
-    still apply the interval/refinement predicates (row-group pruning +
-    exact filter) below this.  Files open with the manifest's schema, so
-    building the DataFrame runs no Spark job; a manifest written without
-    a ``schema`` (or no manifest at all) falls back to schema inference,
-    which runs one.  `intervals` as for :func:`prune_files`."""
+    still apply the exact box test below this.  Files open with the
+    manifest's schema, so building the DataFrame runs no Spark job; a
+    manifest written without a ``schema`` (or no manifest at all) falls
+    back to schema inference, which runs one.  `intervals` as for
+    :func:`prune_files`."""
     manifest = load_manifest(path)
     if manifest is None:
         return spark.read.parquet(path)

@@ -4,10 +4,10 @@
   zkey-range-partitioned + sorted + manifested under a work dir, once
   per (input, bits) fingerprint — re-runs resume (StageRunner).
 * :func:`read_store` reads a whole store at its declared parallelism
-  (the box-batch join's input).  Single lookups read through
-  :func:`.manifest.read_pruned` instead: manifest file pruning (the
-  B-tree descent, sp_tree.c:266-354) + pushed BETWEEN filters
-  (row-group pruning = in-page binsearch, sp_tree.c:164-237).
+  (the box-batch join's input).  Single lookups and ``knn`` rounds read
+  through :func:`.manifest.read_pruned` instead: the manifest prunes
+  files (the B-tree descent, sp_tree.c:266-354), and the exact box test
+  runs on the pruned files, with no key BETWEENs.
 
 The work dir defaults to ``$SPARK_GRAFT_WORK_DIR`` or /tmp/zcurve_stage;
 at cluster scale this is the Iceberg warehouse path.
