@@ -168,7 +168,7 @@ def test_bbox_lookup_pruned_equals_fullscan(spark, sorted_path, curve_stores):
                 )
                 refs[mins, maxs] = sorted(map(tuple, ref.collect()))
             got = bbox_lookup_pruned(
-                spark, path, mins, maxs, zkey_col=key, coord_cols=cols, bits=BITS, curve=curve
+                spark, path, mins, maxs, coord_cols=cols, bits=BITS, curve=curve
             ).collect()
             assert sorted(map(tuple, got)) == refs[mins, maxs], (curve, mins, maxs)
             assert [r.pid for r in got] == sorted(r.pid for r in got), (curve, mins, maxs)
@@ -185,8 +185,9 @@ def test_lookups_share_curve_dispatch(spark, curve_stores):
 
     for curve, (path, key, cols) in curve_stores.items():
         mins, maxs = _lookup_boxes(len(cols), (0,) * len(cols))[0]
-        kw = dict(zkey_col=key, coord_cols=cols, bits=BITS, curve=curve)
-        mem = sorted(map(tuple, bbox_lookup(spark.read.parquet(path), mins, maxs, **kw).collect()))
+        kw = dict(coord_cols=cols, bits=BITS, curve=curve)
+        mem = bbox_lookup(spark.read.parquet(path), mins, maxs, zkey_col=key, **kw).collect()
+        mem = sorted(map(tuple, mem))
         assert mem == sorted(map(tuple, bbox_lookup_pruned(spark, path, mins, maxs, **kw).collect())), curve
         assert mem, curve
     path, key, _ = curve_stores["hilbert"]
@@ -195,7 +196,7 @@ def test_lookups_share_curve_dispatch(spark, curve_stores):
         with pytest.raises(ValueError, match=f"curve={bad!r}"):
             bbox_lookup(pts, (0, 0), (9, 9), zkey_col=key, bits=BITS, curve=bad)
         with pytest.raises(ValueError, match=f"curve={bad!r}"):
-            bbox_lookup_pruned(spark, path, (0, 0), (9, 9), zkey_col=key, bits=BITS, curve=bad)
+            bbox_lookup_pruned(spark, path, (0, 0), (9, 9), bits=BITS, curve=bad)
 
 
 def test_bbox_lookup_pruned_runs_one_job(spark, sorted_path):
@@ -267,6 +268,29 @@ def test_manifest_schema_round_trips(spark, sorted_path, tmp_path):
     assert read_pruned(spark, legacy, []).columns == df.columns
 
 
+def test_lookup_without_manifest_scans_whole_store(spark, sorted_path, tmp_path):
+    """A store with no manifest prunes nothing: read_pruned reads it
+    whole, and a lookup and a knn over it scan every file through the
+    box test, still answering exactly."""
+    from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
+    from zcurve_spark.operators.knn import knn
+
+    bare = str(tmp_path / "bare")
+    shutil.copytree(sorted_path, bare)
+    os.remove(os.path.join(bare, MANIFEST_NAME))
+    full = spark.read.parquet(sorted_path)
+    assert read_pruned(spark, bare, COVERS["z"]((0, 0), (9, 9))).count() == full.count()
+    box = ((100_000, 100_000), (220_000, 330_000))
+    got = bbox_lookup_pruned(spark, bare, *box, bits=BITS).collect()
+    want = bbox_lookup(full, *box, bits=BITS).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and want
+    assert [r.pid for r in got] == sorted(r.pid for r in got)
+    pdf = points_from_lineitem(spark, SF_DIR).toPandas()
+    q = {"qid": 1, "qx": 300_000, "qy": 600_000, "k": 4}
+    g = knn(None, [q], bits=BITS, domain=DOMAIN, store_path=bare, spark=spark).toPandas()
+    assert list(map(tuple, g[["pid", "x", "y", "d2"]].values.tolist())) == brute_knn(pdf, q)
+
+
 @pytest.fixture(scope="module")
 def quoted_store(spark, tmp_path_factory):
     """A zkey store whose key column, `z key`, needs quoting in SQL."""
@@ -277,26 +301,27 @@ def quoted_store(spark, tmp_path_factory):
 
 
 def test_bbox_lookup_pruned_quotes_identifiers(spark, sorted_path, quoted_store):
-    """The lookup predicate is one SQL string: a key column whose name
-    needs quoting must still resolve."""
+    """The lookup predicate is one SQL string that names only the
+    coordinates: a store whose key column needs quoting answers exactly
+    (the manifest's key ranges prune its files)."""
     from zcurve_spark.operators.bbox import bbox_lookup, bbox_lookup_pruned
 
     box = ((100_000, 100_000), (220_000, 330_000))
-    got = bbox_lookup_pruned(spark, quoted_store, *box, zkey_col="z key", bits=BITS).collect()
+    got = bbox_lookup_pruned(spark, quoted_store, *box, bits=BITS).collect()
     want = bbox_lookup(spark.read.parquet(sorted_path), *box, bits=BITS).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(want) > 0
 
 
 def test_knn_quotes_identifiers(spark, quoted_store):
-    """knn's round predicate is one SQL string too: the `z key` store
-    answers exactly."""
+    """knn's round predicate is one SQL string too, naming only the
+    coordinates: the `z key` store answers exactly."""
     from zcurve_spark.operators.knn import knn
 
     pdf = points_from_lineitem(spark, SF_DIR).toPandas()
     qs = [{"qid": 3, "qx": 250_000, "qy": 750_000, "k": 5}, {"qid": 4, "qx": 900_000, "qy": 10, "k": 3}]
     got = knn(
-        None, qs, bits=BITS, domain=DOMAIN, zkey_col="z key", store_path=quoted_store, spark=spark
+        None, qs, bits=BITS, domain=DOMAIN, store_path=quoted_store, spark=spark
     ).toPandas()
     for q in qs:
         g = got[got.qid == q["qid"]].sort_values("rank")
@@ -463,7 +488,7 @@ def test_hilbert_store_pruned_lookup(spark, curve_stores):
     path = curve_stores["hilbert"][0]
     box = ((200_000, 300_000), (420_000, 500_000))
     got = bbox_lookup_pruned(
-        spark, path, box[0], box[1], zkey_col="hkey", bits=BITS, curve="hilbert"
+        spark, path, box[0], box[1], bits=BITS, curve="hilbert"
     ).collect()
     exp = (
         points_from_lineitem(spark, SF_DIR)
@@ -492,7 +517,6 @@ def test_hilbert3_store_pruned_lookup(spark, curve_stores):
         path,
         box[0],
         box[1],
-        zkey_col="hkey3",
         coord_cols=("x", "y", "z"),
         bits=BITS,
         curve="hilbert3",

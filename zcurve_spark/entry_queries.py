@@ -331,7 +331,6 @@ def q_bbox_rows_hilbert_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         BBOX_SINGLE["mins"],
         BBOX_SINGLE["maxs"],
-        zkey_col="hkey",
         bits=BITS,
         curve="hilbert",
     )
@@ -378,7 +377,6 @@ def q_bbox_rows_hilbert3_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         BBOX_SINGLE_3D["mins"],
         BBOX_SINGLE_3D["maxs"],
-        zkey_col="hkey3",
         coord_cols=("x", "y", "z"),
         bits=BITS,
         curve="hilbert3",

@@ -144,9 +144,13 @@ def bbox_lookup(
     (measured: 24 terms -> 10k-line generated method -> janino bails out
     to the interpreter).  One shift + InSet keeps the whole filter in
     codegen; exactness comes from the per-dim refinement regardless of
-    bucket granularity.  (The stored-layout path, bbox_lookup_pruned,
-    prunes files by the manifest instead and filters with the box test
-    alone.)
+    bucket granularity.  The box test's bounds are data
+    (:func:`boxes_sql`), so nothing is pushed to parquet: over a
+    Parquet-read frame every row group is read, where literal bounds
+    would let its x/y statistics skip most of them (at the price of new
+    compiled classes per box).  The stored-layout path,
+    bbox_lookup_pruned, prunes files by the manifest instead and filters
+    with the box test alone.
     """
     intervals = _box_cover(curve, mins, maxs, bits, budget)
     if not intervals:
@@ -165,7 +169,6 @@ def bbox_lookup_pruned(
     mins,
     maxs,
     *,
-    zkey_col: str = "zkey",
     coord_cols: tuple[str, ...] = ("x", "y"),
     id_col: str = "pid",
     bits: int = 30,
@@ -184,7 +187,9 @@ def bbox_lookup_pruned(
     row-group pruning (the in-page binsearch, sp_tree.c:164-237).  Each
     file ``write_sorted`` writes is one row group, so that pruning
     skipped nothing here (~1,880 rows read per hit with or without it);
-    a store whose files hold many row groups would read them all.  The
+    a store whose files hold many row groups would read them all, and a
+    store with no manifest is read whole, every row of every file
+    through the box test (:func:`.manifest.read_pruned`).  The
     id sort coalesces to one partition, so it runs no sampling or
     exchange job; a lookup box reads one or two files, so the scan loses
     little parallelism.  Result set is identical to the full-scan path
@@ -194,8 +199,8 @@ def bbox_lookup_pruned(
     :func:`bbox_lookup`: "z" for a zkey-sorted layout, "hilbert" for an
     hkey-sorted one, "hilbert3" (3 coord_cols) for an hkey3-sorted one;
     any other value raises ValueError — the lookup machinery is
-    curve-agnostic.  ``zkey_col`` is not read: the manifest's key ranges
-    do the pruning."""
+    curve-agnostic.  The key column is never named: the manifest's
+    per-file key ranges do the pruning."""
     from ..sources.manifest import read_pruned
 
     intervals = _box_cover(curve, mins, maxs, bits, budget)

@@ -157,7 +157,6 @@ def knn(
     bits: int = 20,
     domain: int = DOMAIN,
     n_points_hint: int | None = None,
-    zkey_col: str = "zkey",
     budget: int = 32,
     store_path: str | None = None,
     spark=None,
@@ -176,8 +175,9 @@ def knn(
     exact box test runs on the pruned files (or on `points`) as one
     predicate over an array of those boxes (:func:`.bbox.boxes_sql`),
     with no key BETWEENs: the bounds are an array constant, so a round
-    compiles no new class whatever its boxes or their number.
-    ``zkey_col`` is not read: the manifest's key ranges do the pruning.
+    compiles no new class whatever its boxes or their number.  The key
+    column is never named: the manifest's per-file key ranges prune, and
+    a store with no manifest is read whole every round.
     The round's (pid, x, y) rows come back through Arrow.  The driver
     tags each row with the queries whose box holds it and ranks them in
     numpy (:func:`_top_k`).  So the

@@ -248,9 +248,11 @@ def read_pruned(spark: SparkSession, path: str, intervals) -> DataFrame:
     """Read only the files that can contain keys in `intervals`; callers
     still apply the exact box test below this.  Files open with the
     manifest's schema, so building the DataFrame runs no Spark job; a
-    manifest written without a ``schema`` (or no manifest at all) falls
-    back to schema inference, which runs one.  `intervals` as for
-    :func:`prune_files`."""
+    manifest written without a ``schema`` falls back to schema
+    inference, which runs one.  A store with no manifest at all prunes
+    nothing: this reads the whole store (inferring its schema), and the
+    lookups and kNN rounds above it scan every row of every file through
+    their box test.  `intervals` as for :func:`prune_files`."""
     manifest = load_manifest(path)
     if manifest is None:
         return spark.read.parquet(path)
