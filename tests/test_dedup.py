@@ -205,6 +205,23 @@ class TestSimhashBandingGuarantee:
         got_pairs = set(map(tuple, got[["a_id", "b_id"]].values.tolist()))
         assert got_pairs == expect
 
+    def test_full64_bit_fingerprints_band_correctly(self, spark):
+        """Fingerprints with the sign bit set (>= 2^63, stored as negative
+        longs) must band and verify identically — shiftrightunsigned is the
+        load-bearing detail."""
+        from zcurve_spark.operators.dedup import banded_hamming_pairs
+
+        a = (1 << 63) | 0b1011  # negative as signed long
+        b = a ^ (1 << 62) ^ 1   # hamming 2 from a
+        c = (1 << 40) - 1       # 40 low bits set: hamming 38 from a
+        rows = [(1, a - (1 << 64)), (2, b - (1 << 64)), (3, c)]
+        fps = spark.createDataFrame(rows, "id long, fp long")
+        got = sorted(
+            (r["a_id"], r["b_id"], r["hamming"])
+            for r in banded_hamming_pairs(fps, bits=64, max_hamming=4).collect()
+        )
+        assert got == [(1, 2, 2)]
+
 
 class TestMinhashShortDocs:
     def test_empty_gram_docs_never_pair(self, spark):

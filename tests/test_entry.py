@@ -68,3 +68,12 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"tile_l8", "n_spans", "n_docs", "n_media"} <= set(df.columns)
+
+
+def test_driver_window_is_oracle_checked():
+    """The driver checks the first 50 queries(): each of them has an
+    oracle_sql() entry, and every oracle names a query."""
+    window = list(QUERIES)[:50]
+    assert len(window) == 50
+    assert [n for n in window if n not in ORACLES] == []
+    assert sorted(set(ORACLES) - set(QUERIES)) == []

@@ -57,11 +57,22 @@ def test_invariant_through_geo_and_tiles(docs):
 def test_invariant_through_shuffle_and_join(spark, docs):
     orig = _seqs(docs)
     spans = with_span_geo(explode_spans(docs), bits=30).repartition(16, "zkey")
-    # join against a derived per-doc dim table, then reassemble
+    # join against a derived per-doc dim table, and left-join a per-ref
+    # table (one row per distinct media_ref) onto the spans, then
+    # reassemble each
     dim = spans.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    joined = spans.join(dim, "doc_id")
-    back = _seqs(reassemble(joined))
-    assert back == orig
+    refs = (
+        spans.filter(F.col("kind") == "media")
+        .select("media_ref")
+        .distinct()
+        .withColumn("ref_hash", F.xxhash64("media_ref"))
+    )
+    by_ref = spans.join(refs, "media_ref", "left")
+    assert by_ref.filter(F.col("ref_hash").isNotNull()).count() == spans.filter(
+        F.col("kind") == "media"
+    ).count()
+    for joined in (spans.join(dim, "doc_id"), by_ref):
+        assert _seqs(reassemble(joined)) == orig
 
 
 def test_invariant_through_checkpoint_roundtrip(spark, docs, tmp_path):

@@ -1,21 +1,18 @@
-"""Storage layer: sorted layout, manifest stats, file pruning, resumable
-stages — and proof that zkey BETWEEN predicates reach the Parquet scan
-(PushedFilters), the Spark analog of the B-tree descent."""
+"""Storage layer: sorted layout, manifest stats, file pruning (the Spark
+analog of the B-tree descent), resumable stages, and the store-backed
+lookups and kNN over it."""
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import shutil
-from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from zcurve_spark.functions.columns import interval_filter
 from zcurve_spark.functions.udfs import hilbert2_udf, hilbert3_udf
 from zcurve_spark.plans.decompose import decompose_box, hilbert3_covers, hilbert_covers
 from zcurve_spark.sources.manifest import (
@@ -112,25 +109,10 @@ def test_pruning_correct_and_effective(spark, sorted_path):
     assert 0 < len(kept) < len(m["files"]), "pruning should drop some files"
     full = spark.read.parquet(sorted_path)
     pruned = read_pruned(spark, sorted_path, ivs)
-    pred = interval_filter("zkey", ivs) & F.col("x").between(*[box[0][0], box[1][0]]) & F.col(
-        "y"
-    ).between(box[0][1], box[1][1])
+    pred = F.col("x").between(box[0][0], box[1][0]) & F.col("y").between(box[0][1], box[1][1])
     assert sorted(r.pid for r in pruned.filter(pred).collect()) == sorted(
         r.pid for r in full.filter(pred).collect()
     )
-
-
-def test_pushed_filters_reach_parquet_scan(spark, sorted_path):
-    """On the stored layout, zkey BETWEENs must appear in PushedFilters."""
-    ivs = decompose_box((100_000, 100_000), (150_000, 160_000), bits=BITS, budget=8)
-    df = spark.read.parquet(sorted_path).filter(interval_filter("zkey", ivs))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters" in plan
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l][0]
-    assert "zkey" in pushed and "GreaterThanOrEqual" in pushed
 
 
 def test_stage_runner_resume(spark, tmp_path):

@@ -168,18 +168,3 @@ def quantize_lat_col(lat, bits: int = 30) -> Column:
     n = float(1 << bits)
     q = F.floor((_as_col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
     return F.least(F.greatest(q, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
-
-
-def interval_filter(zkey, intervals) -> Column:
-    """OR-of-BETWEEN predicate over decomposed curve intervals.
-
-    Pushes down to Parquet row-group min-max pruning on a zkey-sorted
-    layout — the Spark analog of the reference's B-tree descent
-    (sp_tree.c:266-354).  `intervals` is a list of (lo, hi[, solid]).
-    """
-    k = _as_col(zkey)
-    pred = F.lit(False)
-    for iv in intervals:
-        lo, hi = (iv.lo, iv.hi) if hasattr(iv, "lo") else (iv[0], iv[1])
-        pred = pred | k.between(F.lit(int(lo)), F.lit(int(hi)))
-    return pred

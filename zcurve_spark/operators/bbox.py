@@ -79,27 +79,6 @@ def _quoted(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def interval_buckets(intervals, max_buckets: int = 1024) -> tuple[list[int], int]:
-    """(bucket ids, shift) covering `intervals` with <= max_buckets
-    prefix buckets.  The coarsest interval picks the starting shift;
-    widen until the bucket count fits."""
-    if not intervals:
-        return [], 0
-    spans = sorted(iv.hi - iv.lo + 1 for iv in intervals)
-    shift = max(1, spans[len(spans) // 2].bit_length())
-    while True:
-        buckets = set()
-        for iv in intervals:
-            lo_b, hi_b = iv.lo >> shift, iv.hi >> shift
-            if len(buckets) + (hi_b - lo_b + 1) > max_buckets:
-                buckets = None
-                break
-            buckets.update(range(lo_b, hi_b + 1))
-        if buckets is not None:
-            return sorted(buckets), shift
-        shift += 2
-
-
 def _box_cover(curve: str, mins, maxs, bits: int, budget: int):
     """The key intervals covering the box [mins, maxs] on `curve`: "z"
     (LITMAX/BIGMIN, any arity), "hilbert" (2D quadrant cover) or
@@ -139,13 +118,16 @@ def bbox_lookup(
     the pruned key ranges depend on the curve, never the result.
 
     Candidate pruning is ONE `zkey >> shift IN (buckets)` hash-set probe
-    over prefix buckets of the decomposed intervals: an OR-of-BETWEEN on
-    a *computed* key column duplicates the key expression tree per term
-    (measured: 24 terms -> 10k-line generated method -> janino bails out
-    to the interpreter).  One shift + InSet keeps the whole filter in
-    codegen; exactness comes from the per-dim refinement regardless of
-    bucket granularity.  The box test's bounds are data
-    (:func:`boxes_sql`), so nothing is pushed to parquet: over a
+    over the prefix buckets of the decomposed intervals: an OR-of-BETWEEN
+    on a *computed* key column duplicates the key expression tree per
+    term (measured: 24 terms -> 10k-line generated method -> janino bails
+    out to the interpreter).  One shift + InSet keeps the whole filter in
+    codegen.  The bucket width follows the batch join's rule
+    (:func:`bucket_shift_for`: at most 2 buckets per interval), and the
+    probe holds the distinct buckets the intervals explode onto
+    (:func:`explode_buckets`); exactness comes from the per-dim
+    refinement regardless of bucket granularity.  The box test's bounds
+    are data (:func:`boxes_sql`), so nothing is pushed to parquet: over a
     Parquet-read frame every row group is read, where literal bounds
     would let its x/y statistics skip most of them (at the price of new
     compiled classes per box).  The stored-layout path,
@@ -155,7 +137,10 @@ def bbox_lookup(
     intervals = _box_cover(curve, mins, maxs, bits, budget)
     if not intervals:
         return points.select(id_col, *coord_cols).limit(0)
-    buckets, shift = interval_buckets(intervals)
+    lo = np.array([iv.lo for iv in intervals], dtype=np.int64)
+    hi = np.array([iv.hi for iv in intervals], dtype=np.int64)
+    shift = bucket_shift_for(lo, hi, len(coord_cols) * bits)
+    buckets = np.unique(explode_buckets(lo, hi, shift)[1]).tolist()
     k = F.col(zkey_col).cast("long")
     cand = points.filter(F.shiftrightunsigned(k, shift).isin(buckets))
     hits = cand.filter(F.expr(boxes_sql(coord_cols, [(mins, maxs)])))

@@ -525,8 +525,9 @@ def banded_hamming_pairs(
     fp_col: str = "fp",
 ) -> DataFrame:
     """All pairs of a (id, fingerprint) relation within hamming distance
-    <= max_hamming — the GENERIC banded hamming join shared by text
-    SimHash (48-bit) and image pHash (64-bit, operators/imagehash.py).
+    <= max_hamming — the banded hamming join behind SimHash
+    (:func:`simhash_neardup_pairs`), for fingerprints of any width up to
+    64 bits.
 
     Pigeonhole banding: with n_bands bands, any pair within hamming
     distance < n_bands shares at least one exact band (its <= max_hamming
@@ -569,11 +570,10 @@ def banded_hamming_pairs(
     # shuffle_hash (not broadcast): both sides then shuffle on the SAME
     # (band, bb) partitioning over the SAME subtree, so ReuseExchange
     # computes the fingerprint relation ONCE.  With AQE's broadcast
-    # pick (small inputs) the build side re-executes the whole subtree
-    # — harmless for codegen SimHash, but a pHash/audio/video
-    # fingerprint subtree contains a Python decode stage that would run
-    # twice (measured on the 22k-image bench corpus: 2 MapInPandas
-    # nodes, 0 ReusedExchange; with the hint 1 live Python stage).
+    # pick (small inputs) the build side re-executes the whole
+    # fingerprint subtree; a subtree with a Python stage would run it
+    # twice (measured: 2 MapInPandas nodes and 0 ReusedExchange without
+    # the hint, 1 live Python stage with it).
     cand = (
         a.join(b.hint("shuffle_hash"), ["band", "bb"])
         .filter(F.col("a_id") < F.col("b_id"))
@@ -583,116 +583,9 @@ def banded_hamming_pairs(
     # commutes with dropDuplicates — but the filter is codegen on the
     # un-shuffled join output while the dedup is an exchange keyed on
     # (a_id, b_id).  Filtering first shrinks that exchange from ALL
-    # candidate pairs (quadratic in bucket occupancy — 2.4e8 rows at the
-    # measured radius-12/22k-image shape) to true pairs only.
-    ham = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-    return (
-        cand.withColumn("hamming", ham.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["a_id", "b_id"])
-        .select("a_id", "b_id", "hamming")
-    )
-
-
-def hamming_pairs_multiblock(
-    fps: DataFrame,
-    *,
-    bits: int,
-    max_hamming: int,
-    n_blocks: int | None = None,
-    id_col: str = "id",
-    fp_col: str = "fp",
-) -> DataFrame:
-    """Exact hamming-radius pair search with WIDE candidate keys — the
-    web-scale form of :func:`banded_hamming_pairs`.
-
-    Divisor banding keys each of n_bands tables on bits/n_bands bits;
-    at radius 12 over 64 bits that is 16 tables of 4-BIT keys (256
-    distinct values), so every table degenerates into n/256-row buckets
-    and candidate generation goes quadratic regardless of corpus
-    content (measured: a 22k-image corpus produced ~2.4x10^8 candidate
-    pairs).  The fix, due to Manku/Jain/Das Sarma ("Detecting
-    Near-Duplicates for Web Crawling", WWW'07 — Google's production
-    simhash dedup), keys each table on a COMBINATION of b - r blocks
-    out of b: any pair within hamming r leaves >= b - r blocks
-    untouched, so at least one combination key matches exactly (recall
-    1.0, same pigeonhole), while the key is (b-r)/b * bits wide — e.g.
-    r=3, b=8 over 64 bits gives C(8,5) = 56 tables of 40-BIT keys,
-    selective at 10^12 rows.
-
-    The trade is explode factor (C(b, r) tables) vs key width, which is
-    why this scheme is for SMALL radii (r <= ~4, exactly Manku's
-    production setting k=3); large radii are information-theoretically
-    expensive in hamming space (|ball(12)| over 64 bits ~ 3x10^12) and
-    belong to the moderate-corpus divisor path.  Default n_blocks =
-    smallest b dividing bits with C(b, r) <= 64 tables.
-
-    Same join shape as banded_hamming_pairs: one shuffle equi-join on
-    (table, key) over one shared fingerprint subtree (shuffle_hash
-    hint -> ReuseExchange computes any embedded Python decode stage
-    once), bit_count verify on candidates only."""
-    import math as _math
-
-    r = max_hamming
-    if n_blocks is None:
-        # LARGEST viable b: key width = (b - r)/b * bits grows with b,
-        # so more blocks = wider (more selective) keys, bounded by the
-        # C(b, r) <= 64 table/explode budget
-        n_blocks = max(
-            (
-                b
-                for b in range(r + 1, bits + 1)
-                if bits % b == 0 and _math.comb(b, r) <= 64
-            ),
-            default=None,
-        )
-        if n_blocks is None:
-            raise ValueError(
-                f"no block count with <= 64 tables for radius {r} over {bits} bits; "
-                "use banded_hamming_pairs for large radii"
-            )
-    if bits % n_blocks or r >= n_blocks:
-        raise ValueError(
-            "need n_blocks | bits and max_hamming < n_blocks, got "
-            f"n_blocks={n_blocks}, bits={bits}, max_hamming={r}"
-        )
-    bw = bits // n_blocks
-    from itertools import combinations
-
-    keep = n_blocks - r
-    tables = list(combinations(range(n_blocks), keep))
-    s = fps.select(F.col(id_col).alias("id"), F.col(fp_col).alias("sh"))
-
-    def key_for(blocks: tuple) -> F.Column:
-        k = F.lit(0).cast("long")
-        for bi in blocks:
-            blk = F.shiftrightunsigned(F.col("sh"), bi * bw).bitwiseAND(
-                F.lit((1 << bw) - 1)
-            )
-            k = F.shiftleft(k, bw).bitwiseOR(blk)
-        return k
-
-    keyed = s.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(ti).alias("tbl"), key_for(t).alias("key"))
-                    for ti, t in enumerate(tables)
-                ]
-            )
-        ).alias("tk"),
-    ).select("id", "sh", "tk.tbl", "tk.key")
-    a = keyed.select(F.col("id").alias("a_id"), F.col("sh").alias("sha"), "tbl", "key")
-    b = keyed.select(F.col("id").alias("b_id"), F.col("sh").alias("shb"), "tbl", "key")
-    cand = (
-        a.join(b.hint("shuffle_hash"), ["tbl", "key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-    )
-    # filter-then-dedup, same rationale as banded_hamming_pairs: the
-    # pair-dedup exchange carries verified pairs only, never the raw
-    # candidate multiset (up to C(b, r) copies of each pair).
+    # candidate pairs (quadratic in bucket occupancy — 2.4e8 rows
+    # measured at radius 12 over 22k 64-bit fingerprints) to true pairs
+    # only.
     ham = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
     return (
         cand.withColumn("hamming", ham.cast("long"))
