@@ -140,9 +140,10 @@ def bbox_lookup(
     lo = np.array([iv.lo for iv in intervals], dtype=np.int64)
     hi = np.array([iv.hi for iv in intervals], dtype=np.int64)
     shift = bucket_shift_for(lo, hi, len(coord_cols) * bits)
-    buckets = np.unique(explode_buckets(lo, hi, shift)[1]).tolist()
-    k = F.col(zkey_col).cast("long")
-    cand = points.filter(F.shiftrightunsigned(k, shift).isin(buckets))
+    buckets = ", ".join(map(str, np.unique(explode_buckets(lo, hi, shift)[1])))
+    # one SQL string: Column.isin(list) costs Py4J round trips per literal
+    k = f"CAST({_quoted(zkey_col)} AS BIGINT)"
+    cand = points.filter(F.expr(f"shiftrightunsigned({k}, {shift}) IN ({buckets})"))
     hits = cand.filter(F.expr(boxes_sql(coord_cols, [(mins, maxs)])))
     out = hits.select(id_col, *coord_cols)
     return out.orderBy(id_col) if sort_by_id else out
