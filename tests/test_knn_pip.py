@@ -85,6 +85,12 @@ class TestKnn:
         with pytest.raises(ValueError, match=r"k=0 for qid 7"):
             knn(pts, qs, bits=BITS, domain=DOMAIN)
 
+    def test_no_points_and_no_store_raises_before_any_job(self, pts):
+        qs = [{"qid": 1, "qx": 0, "qy": 0, "k": 2}]
+        err, jobs = jobs_run(pts.sparkSession, lambda: pytest.raises(ValueError, knn, None, qs, bits=BITS))
+        err.match(r"knn needs `points` or `store_path`")
+        assert jobs == 0
+
     def test_far_off_domain_query(self, pts, pdf):
         """A query whose boxes reach past the domain's side long before they
         hold any of it keeps going until they do."""

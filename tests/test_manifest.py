@@ -524,9 +524,10 @@ def test_hilbert3_store_pruned_lookup(spark, curve_stores):
 
 
 class TestCoordinateStats:
-    """r3 VERDICT #5: per-dimension coordinate min-max in the manifest
-    (the Iceberg-column-stats analog) lets pure-coordinate-predicate
-    scans prune files with NO curve-interval decomposition."""
+    """`write_sorted` records per-dimension coordinate min-max and byte
+    sizes in the manifest (the Iceberg-column-stats analog); files are
+    pruned by their key ranges (`prune_files`), and perfbench reads each
+    file's `bytes`."""
 
     def test_write_sorted_records_coord_stats_and_bytes(self, spark, sorted_path):
         m = load_manifest(sorted_path)
@@ -534,62 +535,6 @@ class TestCoordinateStats:
             assert f["bytes"] > 0
             assert "x" in f["stats"] and "y" in f["stats"]
             assert f["stats"]["x"]["min"] <= f["stats"]["x"]["max"]
-
-    def test_coord_pruning_correct_and_effective(self, spark, sorted_path):
-        from zcurve_spark.sources.manifest import prune_files_coords
-
-        m = load_manifest(sorted_path)
-        boxes = [{"mins": (100_000, 100_000), "maxs": (150_000, 160_000)}]
-        kept = prune_files_coords(m, boxes, ("x", "y"))
-        assert 0 < len(kept) < len(m["files"]), "coord stats should prune"
-        pred = F.col("x").between(100_000, 150_000) & F.col("y").between(
-            100_000, 160_000
-        )
-        full = spark.read.parquet(sorted_path).filter(pred)
-        pruned = spark.read.parquet(*[f"{sorted_path}/{n}" for n in kept]).filter(pred)
-        assert sorted(r.pid for r in pruned.collect()) == sorted(
-            r.pid for r in full.collect()
-        )
-        assert full.count() > 0
-
-    def test_files_without_stats_conservatively_kept(self):
-        from zcurve_spark.sources.manifest import prune_files_coords
-
-        m = {"files": [{"file": "a.parquet", "stats": {}},
-                       {"file": "b.parquet",
-                        "stats": {"x": {"min": 0, "max": 10},
-                                  "y": {"min": 0, "max": 10}}}]}
-        boxes = [{"mins": (1000, 1000), "maxs": (2000, 2000)}]
-        # a has no stats -> kept; b's ranges exclude the box -> dropped
-        assert prune_files_coords(m, boxes) == ["a.parquet"]
-
-    def test_augment_existing_manifest(self, spark, tmp_path):
-        """A pre-r4 manifest (no stats/bytes) is upgraded in place from
-        parquet footers only — no data rewrite — and idempotently."""
-        import json
-        import os
-
-        from zcurve_spark.sources.manifest import (
-            MANIFEST_NAME,
-            augment_manifest_stats,
-        )
-
-        p = str(tmp_path / "legacy")
-        pts = points_from_lineitem(spark, SF_DIR)
-        write_sorted(pts, p, n_partitions=4)
-        # strip the stats to simulate a legacy manifest
-        m = load_manifest(p)
-        for f in m["files"]:
-            f.pop("stats", None)
-            f.pop("bytes", None)
-        with open(os.path.join(p, MANIFEST_NAME), "w") as fh:
-            json.dump(m, fh)
-        m1 = augment_manifest_stats(p, ("x", "y"))
-        assert all("x" in f["stats"] and f["bytes"] > 0 for f in m1["files"])
-        t = os.path.getmtime(os.path.join(p, MANIFEST_NAME))
-        m2 = augment_manifest_stats(p, ("x", "y"))  # idempotent: no rewrite
-        assert os.path.getmtime(os.path.join(p, MANIFEST_NAME)) == t
-        assert m2["files"] == m1["files"]
 
 
 class TestStoreParallelism:

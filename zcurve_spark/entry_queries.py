@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import text as TX
-from .functions.columns import zkey2_col
 from .operators import dedup as DD
 from .operators import similarity as SIM
 from .operators.bbox import (
@@ -210,7 +209,7 @@ def q_bbox_rows_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bbox_rows_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same row set as bbox_rows, but read through the materialized
     zkey-sorted store: manifest file pruning (sp_tree.c:266-354's B-tree
-    descent) + pushed BETWEEN row-group pruning.  Shares bbox_rows'
+    descent) + the exact box test on the pruned files.  Shares bbox_rows'
     oracle — pruned == unpruned is exactly the correctness claim."""
     from .operators.bbox import bbox_lookup_pruned
     from .sources.store import points_store
@@ -334,32 +333,6 @@ def q_bbox_rows_hilbert_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=BITS,
         curve="hilbert",
     )
-
-
-def q_bbox_rows_coordstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Box lookup through COORDINATE-STATS file pruning (r4): the
-    manifest's per-file x/y min-max (Iceberg-column-stats analog) picks
-    the candidate files for a pure coordinate predicate — no curve
-    decomposition anywhere.  Shares the bbox_rows oracle: a third,
-    independent path to the same rows (full scan / interval descent /
-    column stats must all agree)."""
-    import os as _os
-
-    from .sources.manifest import augment_manifest_stats, prune_files_coords
-    from .sources.store import points_store
-
-    path = points_store(spark, sf_dir)
-    m = augment_manifest_stats(path, ("x", "y"))
-    box = {"mins": BBOX_SINGLE["mins"], "maxs": BBOX_SINGLE["maxs"]}
-    names = prune_files_coords(m, [box], ("x", "y"))
-    if not names:
-        return spark.read.parquet(path).select("pid", "x", "y").limit(0)
-    pts = spark.read.parquet(*[_os.path.join(path, n) for n in sorted(names)])
-    hits = pts.filter(
-        F.col("x").between(box["mins"][0], box["maxs"][0])
-        & F.col("y").between(box["mins"][1], box["maxs"][1])
-    )
-    return hits.select("pid", "x", "y").orderBy("pid")
 
 
 def q_bbox_rows_hilbert3_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,12 +1707,6 @@ def _oracle_sql() -> dict[str, str]:
               AND y BETWEEN {b3['mins'][1]} AND {b3['maxs'][1]}
               AND z BETWEEN {b3['mins'][2]} AND {b3['maxs'][2]}
         """,
-        "bbox_rows_coordstats": f"""
-            WITH {PTS_CTE}
-            SELECT pid, x, y FROM pts
-            WHERE x BETWEEN {b['mins'][0]} AND {b['maxs'][0]}
-              AND y BETWEEN {b['mins'][1]} AND {b['maxs'][1]}
-        """,
         "bbox_rows_hilbert3_pruned": f"""
             WITH {PTS_CTE}
             SELECT pid, x, y, z FROM pts
@@ -2553,15 +2520,13 @@ def build_queries():
     per-query list path's row set and oracle are identical to
     knn_batch's); store_incremental by store_changes (read_changes over
     pure appends equals read_incremental, pytest-asserted, and the CDC
-    path subsumes the append-only file diff); bbox_rows_pruned by
-    bbox_rows_coordstats (same store, same box, the coord-stats pruning
-    variant) + bbox_rows_hilbert3_pruned (the interval-pruned read path
-    on an hkey store — read_pruned is curve-agnostic, so
-    bbox_rows_hilbert_pruned follows the same rule:
-    2D-hilbert querying stays proven by in-window bbox_rows_hilbert,
-    pruned reading by the 3D cell; bbox_rows_hilbert3 is likewise
-    subsumed by bbox_rows_hilbert3_pruned — the same octree cover over
-    the same boxes through the strictly harder pruned-store read);
+    path subsumes the append-only file diff); bbox_rows_hilbert_pruned
+    by bbox_rows_pruned + bbox_rows_hilbert3_pruned (read_pruned is
+    curve-agnostic: 2D-hilbert querying stays proven by in-window
+    bbox_rows_hilbert, pruned reading by the Z store's bbox_rows_pruned
+    and the 3D hkey cell); bbox_rows_hilbert3 by
+    bbox_rows_hilbert3_pruned (the same octree cover over the same boxes
+    through the strictly harder pruned-store read);
     bbox_rows_3d by bbox_rows_3d_full (same boxes through the strictly
     harder 96-bit octree path; the 62-bit 3D path keeps pytest
     coverage); ngram_jaccard by dedup_components + dedup_pipeline,
@@ -2586,7 +2551,7 @@ def build_queries():
         "zkey3_roundtrip": q_zkey3_roundtrip,
         "bbox_rows_hilbert": q_bbox_rows_hilbert,
         "bbox_rows_hilbert3_pruned": q_bbox_rows_hilbert3_pruned,
-        "bbox_rows_coordstats": q_bbox_rows_coordstats,
+        "bbox_rows_pruned": q_bbox_rows_pruned,
         "zkey_roundtrip": q_zkey_roundtrip,
         "tile_pyramid": q_tile_pyramid,
         "tile_counts_incremental": q_tile_counts_incremental,
@@ -2633,7 +2598,6 @@ def build_queries():
         # ---- position 51+: full-oracle but family-redundant ----
         "bbox_rows_hilbert3": q_bbox_rows_hilbert3,
         "bbox_rows_hilbert_pruned": q_bbox_rows_hilbert_pruned,
-        "bbox_rows_pruned": q_bbox_rows_pruned,
         "bbox_rows_3d": q_bbox_rows_3d,
         "ngram_jaccard": q_ngram_jaccard,
         "bbox_count": q_bbox_count,

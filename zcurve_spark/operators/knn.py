@@ -53,8 +53,6 @@ collecting it runs no job.
 from __future__ import annotations
 
 import math
-import os
-import sys
 
 import numpy as np
 import pandas as pd
@@ -185,6 +183,8 @@ def knn(
     query, the bound the driver form of :func:`knn_batch` accepts too:
     about 16 times the largest k per query at the first radius.
     """
+    if points is None and store_path is None:
+        raise ValueError("knn needs `points` or `store_path`; both are None")
     if store_path is not None:
         from ..sources.manifest import read_pruned
         from ..sources.store import store_total_rows
@@ -562,10 +562,5 @@ def knn_geo_batch(
             covered.select(F.col("qid").alias("pid")), "pid", "leftanti"
         ))
         n_pending = pending.count()
-        if os.environ.get("SPARK_GRAFT_DEBUG"):
-            print(
-                f"    [knn_geo] r={r:.0f} -> pending={n_pending}",
-                file=sys.stderr, flush=True,
-            )
         r = min(r * 4.0, r_cap)
     return reduce(DataFrame.unionByName, done_parts)

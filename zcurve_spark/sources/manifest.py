@@ -169,56 +169,6 @@ def load_manifest(path: str) -> dict | None:
         return json.load(fh)
 
 
-def augment_manifest_stats(path: str, stat_cols=("x", "y")) -> dict:
-    """Add per-file coordinate min/max (and byte sizes) to an EXISTING
-    manifest by reading parquet footers only — no data scan, no layout
-    rebuild.  Idempotent; the cluster analog is an Iceberg metadata-only
-    commit refreshing column stats."""
-    m = load_manifest(path)
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path}")
-    missing = [
-        f for f in m["files"]
-        if "bytes" not in f or any(c not in f.get("stats", {}) for c in stat_cols)
-    ]
-    mstats = _footer_stats_many(
-        [os.path.join(path, f["file"]) for f in missing], m["zkey_col"], stat_cols
-    )
-    for f, fs in zip(missing, mstats):
-        f["bytes"] = fs["bytes"]
-        f["stats"] = {**f.get("stats", {}), **fs["stats"]}
-    if missing:
-        _write_manifest(path, m)
-    return m
-
-
-def prune_files_coords(manifest: dict, boxes, cols=("x", "y")) -> list[str]:
-    """File names whose per-column [min, max] stats overlap ANY box —
-    coordinate-predicate file pruning that needs NO curve-interval
-    decomposition (the Iceberg-column-stats analog; on a zkey-sorted
-    layout both dims are clustered, so this prunes nearly as tightly as
-    the interval descent for box-shaped predicates).
-
-    `boxes` is an iterable of {"mins": (..), "maxs": (..)} in `cols`
-    order.  Files lacking stats for any col are conservatively kept."""
-    out = []
-    for f in manifest["files"]:
-        st = f.get("stats", {})
-        for b in boxes:
-            hit = True
-            for d, c in enumerate(cols):
-                cs = st.get(c)
-                if cs is None:
-                    continue  # no stats -> cannot exclude on this dim
-                if cs["min"] > b["maxs"][d] or cs["max"] < b["mins"][d]:
-                    hit = False
-                    break
-            if hit:
-                out.append(f["file"])
-                break
-    return out
-
-
 def prune_files(manifest: dict, intervals) -> list[str]:
     """File names whose [zkey_min, zkey_max] overlaps any interval —
     the manifest-level analog of the B-tree root->leaf descent.
