@@ -78,7 +78,6 @@ class TestCommits:
         spans = sorted((f["zkey_min"], f["zkey_max"]) for f in files)
         for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
             assert hi1 <= lo2
-        # coordinate stats present, as write_sorted records them
         assert all("x" in f["stats"] and "y" in f["stats"] for f in files)
 
 

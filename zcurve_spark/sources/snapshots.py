@@ -2,8 +2,8 @@
 manifest store — the Iceberg *commit model* analog.
 
 The r1-r4 layer (:mod:`.manifest`) is Iceberg's *read side*: a manifest
-of per-file zkey/coordinate stats that pruned readers and StageRunner
-resume consult.  This module adds the *write side* a 10^12-row table
+of per-file zkey/coordinate stats that pruned readers (by key range)
+and StageRunner resume consult.  This module adds the *write side* a 10^12-row table
 needs: every mutation is an atomic COMMIT producing a new immutable
 snapshot, old snapshots stay readable (time travel), small delta files
 get compacted back into the zkey-sorted layout, and unreferenced files
