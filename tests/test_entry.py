@@ -13,7 +13,7 @@ import __spark_entry__ as E
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

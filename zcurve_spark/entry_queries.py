@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from .functions import text as TX
 from .operators import dedup as DD
-from .operators import similarity as SIM
 from .operators.bbox import (
     bbox_join_bucketed,
     bbox_lookup,
@@ -134,9 +133,6 @@ CONCAVE_POLYGONS = [  # non-convex shapes: the ray-cast refine is general
 RASTER_CELLS = [  # (tx, ty) at level 8 (shift 12); domain>>12 = 244
     (12, 34), (99, 180), (200, 40), (150, 150), (7, 210), (230, 230), (60, 120), (180, 75),
 ]
-
-ANN_QUERY_IDS = [0, 1, 2, 3]
-ANN_K = 5
 
 
 def _poly_edges_values_for(polys: list[dict]) -> str:
@@ -1032,16 +1028,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", TX.lang_id("text").alias("lang_pred"))
 
 
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.ann_topk(emb, ANN_QUERY_IDS, ANN_K).select("qid", "rank", "vec_id", "dot")
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.cosine_neardup_pairs(emb).select("a_id", "b_id", "dot")
-
-
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
@@ -1462,24 +1448,8 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", TX.fingerprint("text").alias("fp"))
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN (coarse-quantizer routing, nprobe cell scan) — the
-    bucketed scale path next to LSH; recall pytest-verified vs the exact
-    path (tests/test_similarity.py), membership is engine-specific so
-    this stays rows-only."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.ivf_topk(emb, ANN_QUERY_IDS, ANN_K, n_cells=16, nprobe=4).select(
-        "qid", "rank", "vec_id", "dot"
-    )
-
-
-def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.cosine_neardup_pairs(emb, use_lsh=True).select("a_id", "b_id", "dot")
-
-
-# ----- LSH/IVF recall oracles: deterministic subsets the probabilistic
-# paths are GUARANTEED to find, so they get full SQL oracles -----
+# ----- MinHash/SimHash recall oracles: deterministic subsets the
+# probabilistic paths are GUARANTEED to find, so they get full SQL oracles -----
 
 
 def q_minhash_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1520,35 +1490,6 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"),
         F.col("component").alias("canonical"),
         (F.col("id") == F.col("component")).cast("int").alias("keep"),
-    )
-
-
-def q_lsh_ann_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked hyperplane-LSH recall: plant duplicate embeddings
-    (every 25th vector re-inserted under a shifted id).  Identical raw
-    vectors hash to the identical sign sketch, so they collide in every
-    band — the candidate join is GUARANTEED to surface them; keeping
-    only raw-equal pairs makes the result exactly SQL-expressible."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    extra = emb.filter(F.col("vec_id") % 25 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 1_000_000
-    )
-    alle = emb.unionByName(extra)
-    cand = SIM.lsh_cosine_candidates(alle)
-    side = alle.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("e"),
-        SIM.quantized("embedding").alias("v"),
-    )
-    a = side.select(F.col("id").alias("a_id"), F.col("e").alias("ea"), F.col("v").alias("va"))
-    b = side.select(F.col("id").alias("b_id"), F.col("e").alias("eb"), F.col("v").alias("vb"))
-    return (
-        cand.join(a, "a_id")
-        .join(b, "b_id")
-        .filter(F.col("ea") == F.col("eb"))
-        .select("a_id", "b_id", SIM.dot_q(F.col("va"), F.col("vb")).alias("dot"))
     )
 
 
@@ -1623,30 +1564,6 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ivf_topk_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat with nprobe == n_cells probes every cell, so the result
-    is EXACTLY the brute-force top-k (same quantized dots, same
-    deterministic tiebreak) — oracle-checked proof that the IVF routing
-    and per-cell scan lose nothing except by cell pruning."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return SIM.ivf_topk(
-        emb, ANN_QUERY_IDS, ANN_K, n_cells=16, nprobe=16
-    ).select("qid", "rank", "vec_id", "dot")
-
-
-def q_ivf_topk_batch_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SET-ORIENTED IVF (r3): queries arrive as a DataFrame, probe cells
-    come from an Arrow matmul, nothing is collected.  With nprobe ==
-    n_cells the result is exactly the brute-force top-k, so it shares
-    the exhaustive oracle — batch == per-query == brute force is the
-    claim."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qdf = spark.createDataFrame([(int(i),) for i in ANN_QUERY_IDS], "qid long")
-    return SIM.ivf_topk_batch(
-        emb, qdf, ANN_K, n_cells=16, nprobe=16
-    ).select("qid", "rank", "vec_id", "dot")
-
-
 # ---------------------------------------------------------------------------
 # oracle SQL
 # ---------------------------------------------------------------------------
@@ -1659,7 +1576,6 @@ def _oracle_sql() -> dict[str, str]:
     cells_vals = ", ".join(
         f"({encode_point((tx, ty), 8)}, {tx}, {ty})" for tx, ty in RASTER_CELLS
     )
-    ann_ids = ", ".join(str(i) for i in ANN_QUERY_IDS)
     return {
         "bbox_count": f"""
             WITH {PTS_CTE}
@@ -2185,38 +2101,6 @@ def _oracle_sql() -> dict[str, str]:
             FROM documents
         """,
         "lang_id": _lang_id_sql(),
-        "ann_topk": f"""
-            WITH v AS (
-              SELECT vec_id, list_transform(embedding, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-              FROM embeddings
-            ),
-            d AS (
-              SELECT q.vec_id AS qid, c.vec_id AS vec_id,
-                     CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS dot
-              FROM v q CROSS JOIN v c
-              WHERE q.vec_id IN ({ann_ids}) AND c.vec_id != q.vec_id
-            ),
-            r AS (
-              SELECT qid, vec_id, dot,
-                     row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id) AS rank
-              FROM d
-            )
-            SELECT qid, rank, vec_id, dot FROM r WHERE rank <= {ANN_K}
-        """,
-        "embedding_neardup": """
-            WITH v AS (
-              SELECT vec_id, list_transform(embedding, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-              FROM embeddings
-            ),
-            n AS (SELECT vec_id, qv, CAST(list_dot_product(qv, qv) AS BIGINT) AS n2 FROM v)
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                   CAST(list_dot_product(a.qv, b.qv) AS BIGINT) AS dot
-            FROM n a JOIN n b ON a.vec_id < b.vec_id
-            WHERE CAST(list_dot_product(a.qv, b.qv) AS BIGINT) > 0
-              AND CAST(list_dot_product(a.qv, b.qv) AS BIGINT)
-                  * CAST(list_dot_product(a.qv, b.qv) AS BIGINT) * 4
-                  >= a.n2 * b.n2
-        """,
         "simhash_exact_dups": """
             WITH alld AS (
               SELECT doc_id, text FROM documents
@@ -2293,57 +2177,6 @@ def _oracle_sql() -> dict[str, str]:
             SELECT doc_id, canonical,
                    CAST(doc_id = canonical AS INTEGER) AS keep
             FROM c WHERE n > 1
-        """,
-        "lsh_ann_exact": """
-            WITH alle AS (
-              SELECT vec_id, embedding FROM embeddings
-              UNION ALL
-              SELECT vec_id + 1000000, embedding FROM embeddings WHERE vec_id % 25 = 0
-            ),
-            q AS (
-              SELECT vec_id, embedding,
-                     list_transform(embedding, x -> CAST(floor(x * 100) AS BIGINT)) AS v
-              FROM alle
-            )
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                   CAST(list_dot_product(a.v, b.v) AS BIGINT) AS dot
-            FROM q a JOIN q b ON a.embedding = b.embedding AND a.vec_id < b.vec_id
-        """,
-        "ivf_topk_exhaustive": f"""
-            WITH v AS (
-              SELECT vec_id, list_transform(embedding, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-              FROM embeddings
-            ),
-            d AS (
-              SELECT q.vec_id AS qid, c.vec_id AS vec_id,
-                     CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS dot
-              FROM v q CROSS JOIN v c
-              WHERE q.vec_id IN ({ann_ids}) AND c.vec_id != q.vec_id
-            ),
-            r AS (
-              SELECT qid, vec_id, dot,
-                     row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id) AS rank
-              FROM d
-            )
-            SELECT qid, rank, vec_id, dot FROM r WHERE rank <= {ANN_K}
-        """,
-        "ivf_topk_batch_exhaustive": f"""
-            WITH v AS (
-              SELECT vec_id, list_transform(embedding, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-              FROM embeddings
-            ),
-            d AS (
-              SELECT q.vec_id AS qid, c.vec_id AS vec_id,
-                     CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS dot
-              FROM v q CROSS JOIN v c
-              WHERE q.vec_id IN ({ann_ids}) AND c.vec_id != q.vec_id
-            ),
-            r AS (
-              SELECT qid, vec_id, dot,
-                     row_number() OVER (PARTITION BY qid ORDER BY dot DESC, vec_id) AS rank
-              FROM d
-            )
-            SELECT qid, rank, vec_id, dot FROM r WHERE rank <= {ANN_K}
         """,
         "hilbert_roundtrip": f"""
             WITH {PTS_CTE} SELECT pid, x, y FROM pts
@@ -2510,33 +2343,23 @@ def build_queries():
     tests/test_entry.py::test_driver_window_is_oracle_checked), so every
     operator family's rows+schema+hash proof sits inside that window.
     Each roundtrip slot (zkey_roundtrip, zkey3_roundtrip,
-    hilbert_roundtrips) proves both directions at once.
+    hilbert_roundtrips) proves both directions at once.  The paths the
+    benchmark times are in the window too: bbox_count decomposes its
+    pandas-built box batch on the driver, bbox_count_dist its list-built
+    one in the executors; knn runs the store-backed knn rounds, knn_batch
+    the batch form.
     Positions 51+ are full-oracle entries whose families are already
-    proven in-window by an equal-or-stronger sibling: bbox_count by
-    bbox_count_dist (same oracle and join; dist decomposes its
-    list-built batch in the executors, bbox_count its pandas-built one
-    on the driver, and the two forms' rows are pytest-checked equal);
-    knn by knn_batch + knn_geo (the
-    per-query list path's row set and oracle are identical to
-    knn_batch's); store_incremental by store_changes (read_changes over
-    pure appends equals read_incremental, pytest-asserted, and the CDC
-    path subsumes the append-only file diff); bbox_rows_hilbert_pruned
-    by bbox_rows_pruned + bbox_rows_hilbert3_pruned (read_pruned is
-    curve-agnostic: 2D-hilbert querying stays proven by in-window
-    bbox_rows_hilbert, pruned reading by the Z store's bbox_rows_pruned
-    and the 3D hkey cell); bbox_rows_hilbert3 by
-    bbox_rows_hilbert3_pruned (the same octree cover over the same boxes
-    through the strictly harder pruned-store read);
-    bbox_rows_3d by bbox_rows_3d_full (same boxes through the strictly
-    harder 96-bit octree path; the 62-bit 3D path keeps pytest
-    coverage); ngram_jaccard by dedup_components + dedup_pipeline,
-    whose oracles recompute the identical gram/threshold pair relation
-    before clustering; events_hourly and
-    events_asof_tolerance by the in-window events_* entries;
-    tile_counts by tile_pyramid (its level-8 slice is exactly
-    tile_counts' rows, plus rollup stats) and tile_counts_salted by the
-    same (salting-identity is pytest-asserted); the two single-arity
-    hilbert roundtrips by the merged hilbert_roundtrips slot; pip_count
+    proven in-window by an equal-or-stronger sibling: ngram_jaccard by
+    dedup_components + dedup_pipeline, whose oracles recompute the
+    identical gram/threshold pair relation before clustering;
+    store_incremental by store_changes (read_changes over pure appends
+    equals read_incremental, pytest-asserted, and the CDC path subsumes
+    the append-only file diff); tile_counts by tile_pyramid (its level-8
+    slice is exactly tile_counts' rows, plus rollup stats) and
+    tile_counts_salted by the same (salting-identity is
+    pytest-asserted); the two single-arity hilbert roundtrips by the
+    merged hilbert_roundtrips slot; events_hourly and
+    events_asof_tolerance by the in-window events_* entries; pip_count
     by pip_count_concave (the general ray-cast subsumes the convex
     case); the two tidonly variants share their row sets AND oracles
     with bbox_rows/bbox_rows_3d — the driver hash is order-insensitive,
@@ -2546,16 +2369,21 @@ def build_queries():
     twin in-window."""
     return {
         "bbox_count_dist": q_bbox_count_dist,
+        "bbox_count": q_bbox_count,
         "bbox_rows": q_bbox_rows,
         "bbox_rows_3d_full": q_bbox_rows_3d_full,
+        "bbox_rows_3d": q_bbox_rows_3d,
         "zkey3_roundtrip": q_zkey3_roundtrip,
         "bbox_rows_hilbert": q_bbox_rows_hilbert,
+        "bbox_rows_hilbert_pruned": q_bbox_rows_hilbert_pruned,
         "bbox_rows_hilbert3_pruned": q_bbox_rows_hilbert3_pruned,
+        "bbox_rows_hilbert3": q_bbox_rows_hilbert3,
         "bbox_rows_pruned": q_bbox_rows_pruned,
         "zkey_roundtrip": q_zkey_roundtrip,
         "tile_pyramid": q_tile_pyramid,
         "tile_counts_incremental": q_tile_counts_incremental,
         "knn_batch": q_knn_batch,
+        "knn": q_knn,
         "distance_join": q_distance_join,
         "distance_join_geo": q_distance_join_geo,
         "knn_geo": q_knn_geo,
@@ -2577,10 +2405,6 @@ def build_queries():
         "bbox_rows_s2": q_bbox_rows_s2,
         "bbox_rows_s2_pruned": q_bbox_rows_s2_pruned,
         "train_val_split": q_train_val_split,
-        "ann_topk": q_ann_topk,
-        "embedding_neardup": q_embedding_neardup,
-        "ivf_topk_exhaustive": q_ivf_topk_exhaustive,
-        "ivf_topk_batch_exhaustive": q_ivf_topk_batch_exhaustive,
         "hilbert_roundtrips": q_hilbert_roundtrips,
         "events_asof": q_events_asof,
         "events_interval_join": q_events_interval_join,
@@ -2591,17 +2415,11 @@ def build_queries():
         "simhash_exact_dups": q_simhash_exact_dups,
         "streaming_sessionize": q_streaming_sessionize,
         "streaming_dedup": q_streaming_dedup,
-        "lsh_ann_exact": q_lsh_ann_exact,
         "lang_id": q_lang_id,
         "top_tokens": q_top_tokens,
         "events_sessionize": q_events_sessionize,
         # ---- position 51+: full-oracle but family-redundant ----
-        "bbox_rows_hilbert3": q_bbox_rows_hilbert3,
-        "bbox_rows_hilbert_pruned": q_bbox_rows_hilbert_pruned,
-        "bbox_rows_3d": q_bbox_rows_3d,
         "ngram_jaccard": q_ngram_jaccard,
-        "bbox_count": q_bbox_count,
-        "knn": q_knn,
         "store_incremental": q_store_incremental,
         "tile_counts": q_tile_counts,
         "hilbert_roundtrip": q_hilbert_roundtrip,
@@ -2619,8 +2437,6 @@ def build_queries():
         "minhash_pairs": q_minhash_pairs,
         "simhash_neardup": q_simhash_neardup,
         "doc_fingerprint": q_doc_fingerprint,
-        "lsh_ann": q_lsh_ann,
-        "ivf_topk": q_ivf_topk,
     }
 
 

@@ -173,8 +173,7 @@ def distance_join_geo(
     key, nothing is broadcast, and the B-side duplication is a <= 9x
     constant.  Polar bands have few tiles and become hot keys under
     polar-dense data — AQE skew-join splits them (same property as the
-    planar join's hot tiles; measured there in BENCH_r04
-    distance_join_skew).
+    planar join's hot tiles).
 
     The refinement compares the haversine HAV value against
     sin^2(r/2R) with the degree->radian conversion done by explicit

@@ -45,10 +45,10 @@ def get_spark(
     # BLAS thread pinning: Spark TASKS are the parallelism unit, and an
     # unpinned OpenBLAS starts a full per-process GEMM thread pool in
     # every forked Python worker — at local[32] that oversubscribes the
-    # host 32x during the numpy matmul kernels (IVF routing/top-k).
-    # One BLAS thread per worker measured ivf_batch_10k 4.09 -> 3.61s
-    # and is the standard setting wherever tasks, not BLAS, own the
-    # cores (on a cluster: spark.executorEnv.OPENBLAS_NUM_THREADS=1).
+    # host 32x during any numpy matrix kernel a worker runs.  One BLAS
+    # thread per worker is the standard setting wherever tasks, not
+    # BLAS, own the cores (on a cluster:
+    # spark.executorEnv.OPENBLAS_NUM_THREADS=1).
     # setdefault only — an explicit caller/cluster env wins.
     for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS"):
         os.environ.setdefault(_var, "1")
@@ -75,19 +75,10 @@ def get_spark(
         # local-map threshold below) keep the OOM-risk shape on
         # sort-merge; this is the cluster-correct setting, not a local
         # tweak (same guard Spark uses at any executor count).
-        .config("spark.sql.join.preferSortMergeJoin", os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"))
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "128m"),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+        .config("spark.io.compression.codec", "lz4")
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())

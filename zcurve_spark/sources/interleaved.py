@@ -1,6 +1,6 @@
 """Interleaved text+media documents — the target input shape.
 
-BASELINE.json `input_hint`:
+Schema of an interleaved document:
     doc_id:string,
     spans:array<struct<kind:string, text:string, media_ref:string, offset:int32>>
 
